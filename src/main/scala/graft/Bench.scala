@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit, pmod, sum, xxhash64}
 
 /** Benchmark main. Per query: one untimed warm-up run (JIT + codegen +
@@ -10,49 +9,20 @@ import org.apache.spark.sql.functions.{col, lit, pmod, sum, xxhash64}
   * carries [min, median, max] per query so a noisy-host outlier is
   * adjudicable from the artifact alone (VERDICT r11).
   *
-  * Forcing method: a noop write, NOT `count()` — `count()` lets Catalyst
-  * prune every aggregate value column (an agg query degenerates to counting
-  * groups), under-measuring it. Measured on identical code at sf0.1:
-  * q1 count()=0.40-0.86s vs noop=1.3-1.5s, q11 count()=0.44-0.58s vs
-  * noop=1.1-1.5s — which is the entire "q1/q11 regression" between the r1
-  * bench (count-based) and r2+ (noop-based). Cross-round comparisons are
-  * only valid noop-to-noop.
+  * Each run is forced by [[GraftSession.force]] (a noop write, not
+  * `count()` — see there).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // a malformed env value degrades to the default run count instead of
     // aborting the whole bench before any query runs (ADVICE r4)
     val runs = math.max(1, sys.env.get("SPARK_GRAFT_BENCH_RUNS")
       .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(3))
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // nanos-timestamp parquet (events) read as long; set once here, not
-      // order-dependently inside a loader (ADVICE r1)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def force(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    // Each run of a checkpoint-using query (d4/d9/d12/t8, components) leaves
-    // its localCheckpoint blocks in the block manager until session end;
-    // 73 queries x 4 runs of accumulation turns the bench's later queries
-    // into a storage-eviction measurement. Drop the RDDs persisted since the
-    // bench started — not every persistent RDD in the context, which would
-    // silently break a future query that intentionally shares cached state —
-    // between runs, blocking so cleanup can't bleed into the next timed run
-    // (both outside the timed region — each force() rebuilds its own state).
-    val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-    def clearBlocks(): Unit =
-      spark.sparkContext.getPersistentRDDs
-        .collect { case (id, r) if !preexisting.contains(id) => r }
-        .foreach(_.unpersist(blocking = true))
+    val spark = GraftSession.start()
+    // checkpoint blocks are dropped between runs, outside the timed region
+    // (each run rebuilds its own state)
+    val clearBlocks = GraftSession.blockCleaner(spark)
     // Shared-JVM drift control (VERDICT r7 item 6): shuffle files and
     // broadcast blocks are reclaimed by ContextCleaner only when their
     // driver-side handles are GC'd, and the cleaner's own periodic GC runs
@@ -160,11 +130,11 @@ object Bench {
     val reruns = scala.collection.mutable.ArrayBuffer[String]()
     names.foreach { name =>
       try {
-        force(name) // warm-up
+        GraftSession.force(spark, name, sfDir) // warm-up
         clearBlocks()
         def timedRun(): Double = {
           val t0 = System.nanoTime()
-          force(name)
+          GraftSession.force(spark, name, sfDir)
           val dt = (System.nanoTime() - t0) / 1e9
           clearBlocks()
           dt

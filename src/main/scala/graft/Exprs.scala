@@ -30,5 +30,4 @@ object Exprs {
   /** Integer sums: Spark sum(int)=BIGINT but DuckDB sum(int)=HUGEINT, so the
     * oracle side must cast; Spark side is already long. */
   def lsum(c: Column): Column = sum(c).cast(LongType)
-  def lsumSql(e: String): String = s"CAST(sum($e) AS BIGINT)"
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measure the graph-ANN plane-count knob (VERDICT r12 item 7): recall@5
   * of graphBeam at each requested hyperplane count against s1's exact
   * brute-force top-5, on a real data dir. The knob's policy is
@@ -19,16 +17,7 @@ object RecallSweep {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val tokens = (if (args.length > 1) args(1) else "4,6,8")
       .split(",").map(_.trim).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
 
     val exact5 = graft.operators.Similarity.defs("s1_knn_brute")(spark, dir)
       .collect().filter(_.getLong(2) <= 5)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Forward-scaling smoke: replicate the documents corpus N× and time the
@@ -35,16 +34,7 @@ object ScaleSmoke {
     val names = (if (args.length > 2) args(2) else
       "d1_exact_dedup,d2_minhash_sig,d3_lsh_pairs,d4_jaccard_pairs,d13_dup_shingles,t8_tfidf,w1_wordcount")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
 
     val dir = s"/tmp/graft-scale-$factor"
     // replicate only what the selected queries read — an absent table in
@@ -212,14 +202,7 @@ object ScaleSmoke {
         .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     }
 
-    def force(name: String): Unit =
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-    val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-    def clearBlocks(): Unit =
-      spark.sparkContext.getPersistentRDDs
-        .collect { case (id, r) if !preexisting.contains(id) => r }
-        .foreach(_.unpersist(blocking = true))
+    val clearBlocks = GraftSession.blockCleaner(spark)
 
     // PEAK-STORAGE SAMPLER (OPTIMIZATION r18, VERDICT r17 item 8): the
     // Components rewrite holds every round's hook map live until the
@@ -247,11 +230,11 @@ object ScaleSmoke {
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val peaks = scala.collection.mutable.LinkedHashMap[String, Double]()
     names.foreach { name =>
-      force(name); clearBlocks()
+      GraftSession.force(spark, name, dir); clearBlocks()
       peak = 0L; sampling = true
       val ts = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
-        force(name)
+        GraftSession.force(spark, name, dir)
         val dt = (System.nanoTime() - t0) / 1e9
         clearBlocks()
         dt

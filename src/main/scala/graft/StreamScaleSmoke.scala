@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -69,16 +69,7 @@ object StreamScaleSmoke {
     val names = (if (args.length > 3) args(3) else
       "x25_stream_twa,x29_stream_twa_sharded,x27_stream_islands,x28_stream_paths,x19a_topk_append,x24a_kmv_append,x26_stream_pit_enrich,x17a_decontam_stateless,x3_stream_interval_join,x8_stream_left_join,x13_stream_full_outer,x11_stream_funnel")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
 
     /** Write `df` as `slices` files keyed by contiguous ranges of `cutCol`
       * (event time for watermarked streams, doc_id for stateless doc

@@ -1,23 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // nanos-timestamp parquet (events) read as long; set once here, not
-      // order-dependently inside a loader (ADVICE r1)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
+    val clearBlocks = GraftSession.blockCleaner(spark)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q37_bloom_join,q1_pricing_summary dumps a subset —
     // same knob as Bench; the driver never sets it, local iteration does.
@@ -40,8 +29,7 @@ object Verify {
       } finally
         // free the query's localCheckpoint blocks (its result is on disk) —
         // 73 dumps would otherwise accumulate dead blocks for the whole run
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        clearBlocks()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,7 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.jobs.WordCountJob
 import graft.listen.Hw4EventLogListener
 
@@ -41,19 +40,8 @@ object Main {
       fidelityPartitioner = args.contains("--fidelity-partitioner"),
       fidelityTokenizer = args.contains("--fidelity-tokenizer"))
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .appName(cfg.jobName)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // nanos-timestamp parquet (events) read as long; set once here, not
-      // order-dependently inside a loader (ADVICE r1)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.start(GraftSession.builder(cpus).appName(cfg.jobName))
 
     // contract parity: parse the locality table like the jobtracker does
     // (hw4.cc:88-96); Spark's scheduler owns actual placement.

@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * functions so SQL text can reach them (`hex8_to_long(col)`), alongside the
-  * Column-DSL path ([[HexPrefixToLong.hex8]]). Apply with
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`.
+  * Column-DSL path ([[HexPrefixToLong.hex8]]). [[graft.GraftSession.builder]]
+  * applies it to every engine session.
   *
   * Kept deliberately small: SURVEY.md §4 concludes the reference needs no
   * custom Catalyst rules or strategies — built-in operators express every
@@ -20,9 +20,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** The ONE registration list — the extension injects it at builder time,
-    * and tests register the same tuples (same builders, same arity checks)
-    * into an existing session's function registry. */
+  /** The ONE registration list — the extension injects it at builder time
+    * (every session comes from [[graft.GraftSession.builder]]). */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("hex8_to_long"),
       new ExpressionInfo(classOf[HexPrefixToLong].getName, "hex8_to_long"),

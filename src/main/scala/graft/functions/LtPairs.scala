@@ -25,12 +25,20 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, S
   * same pathology ShingleHash32s removes from the shingle pipeline).
   * This expression emits the identical multiset in one tight loop.
   * Parity (order, duplicates, null passthrough) is pinned in
-  * ShingleHashSpec.
+  * LtPairsSpec.
+  *
+  * Elements must be non-null: the loop reads them with `getLong`, which
+  * has no null case (an unsafe array yields a silent 0). Every caller passes
+  * `collect_set`/`collect_list` output (`containsNull = false`), and a
+  * nullable-element array is rejected at analysis.
   */
 case class LtPairs(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(LongType, true) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires non-null array elements (containsNull = false), " +
+        "e.g. collect_set/collect_list output")
     case t => TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires an array<bigint> child, got ${t.sql}")
   }

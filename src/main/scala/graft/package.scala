@@ -18,18 +18,28 @@ package object graft {
     * operator lineage cut through `Dataset.checkpoint()` instead —
     * replicated, executor-loss-safe, at the cost of a distributed write
     * per cut. Default (unset/false) keeps the exact local behavior every
-    * bench number was measured under.
+    * bench number was measured under. With the conf on and no checkpoint
+    * dir, the first cut throws an IllegalArgumentException naming both.
     */
   implicit final class GraftCkpt(private val df: DataFrame) extends AnyVal {
     def graftCkpt(): DataFrame =
       if (reliableCkpt(df)) df.checkpoint() else df.localCheckpoint()
 
+    /** As [[graftCkpt()]], with `storage` for the local blocks. The
+      * reliable path ignores `storage`: a reliable checkpoint writes its
+      * files to the checkpoint dir. */
     def graftCkpt(storage: org.apache.spark.storage.StorageLevel): DataFrame =
       if (reliableCkpt(df)) df.checkpoint()
       else df.localCheckpoint(true, storage)
 
-    private def reliableCkpt(d: DataFrame): Boolean =
-      d.sparkSession.conf
+    private def reliableCkpt(d: DataFrame): Boolean = {
+      val reliable = d.sparkSession.conf
         .getOption("spark.graft.reliableCheckpoint").exists(_.toBoolean)
+      if (reliable && d.sparkSession.sparkContext.getCheckpointDir.isEmpty)
+        throw new IllegalArgumentException(
+          "spark.graft.reliableCheckpoint=true needs a checkpoint directory: " +
+            "call SparkContext.setCheckpointDir first")
+      reliable
+    }
   }
 }

@@ -92,4 +92,19 @@ class ComponentsSpec extends AnyFunSuite {
     sc.getPersistentRDDs.collect { case (id, r) if !before.contains(id) => r }
       .foreach(_.unpersist(blocking = true))
   }
+
+  test("reliableCheckpoint: no checkpoint dir fails fast; with one, same rows as local") {
+    val edges = List((1L, 2L), (2L, 3L), (5L, 6L))
+    val local = run(edges)
+    spark.conf.set("spark.graft.reliableCheckpoint", "true")
+    try {
+      val e = intercept[IllegalArgumentException](run(edges))
+      assert(e.getMessage.contains("spark.graft.reliableCheckpoint") &&
+        e.getMessage.contains("setCheckpointDir"), e.getMessage)
+      // the session keeps this dir; the local (default) path never reads it
+      spark.sparkContext.setCheckpointDir(
+        java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+      assert(run(edges) == local)
+    } finally spark.conf.unset("spark.graft.reliableCheckpoint")
+  }
 }

@@ -42,13 +42,7 @@ class DotProductSpec extends AnyFunSuite {
   }
 
   test("registered as vec_dot for SQL text") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "vec_dot"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(args.head, args(1)))
+    // injected by GraftExtensions in the GraftSession-built test session
     val out = spark.sql(
       "SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS v").collect()
     assert(out.head.getDouble(0) == 11.0)

@@ -63,16 +63,8 @@ class HexPrefixToLongSpec extends AnyFunSuite {
   }
 
   test("SQL name resolves when registered via GraftExtensions") {
-    // extensions apply at builder time; the shared test session predates
-    // them, so register into its function registry the same way the
-    // extension injector does.
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("hex8_to_long"),
-      new ExpressionInfo(classOf[HexPrefixToLong].getName, "hex8_to_long"),
-      (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        HexPrefixToLong(args.head, 8))
+    // the shared test session is built by GraftSession, so the name comes
+    // from the extension's own injection, not a test-side registration
     val out = spark.sql("SELECT hex8_to_long('deadbeef') AS v").collect()
     assert(out.head.getLong(0) == java.lang.Long.parseLong("deadbeef", 16))
   }

@@ -41,4 +41,11 @@ class LtPairsSpec extends AnyFunSuite {
           r.getSeq[org.apache.spark.sql.Row](2), s"id ${r.getLong(0)}")
     }
   }
+
+  test("a nullable-element array fails analysis with a message") {
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.range(1).select(LtPairs.ltPairs(
+        expr("array(CAST(1 AS BIGINT), CAST(NULL AS BIGINT))"))))
+    assert(e.getMessage.contains("requires non-null array elements"), e.getMessage)
+  }
 }

@@ -47,12 +47,8 @@ class Md5Hash32Spec extends AnyFunSuite {
   }
 
   test("SQL name resolves when registered via GraftExtensions") {
-    // extensions apply at builder time; the shared test session predates
-    // them, so register GraftExtensions' OWN function list (same tuples the
-    // injector uses — builders and arity checks included) into its registry
-    graft.functions.GraftExtensions.functions.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
+    // the shared test session is built by GraftSession, so this exercises
+    // the extension's own injection — builders and arity checks included
     val out = spark.sql("SELECT md5_hash32('deadbeef') AS v").collect()
     val hex = java.security.MessageDigest.getInstance("MD5")
       .digest("deadbeef".getBytes("UTF-8")).map("%02x".format(_)).mkString

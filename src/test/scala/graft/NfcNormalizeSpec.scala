@@ -74,9 +74,7 @@ class NfcNormalizeSpec extends AnyFunSuite {
   }
 
   test("SQL name resolves when registered via GraftExtensions; arity enforced") {
-    graft.functions.GraftExtensions.functions.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
+    // injected by the GraftSession-built test session, not registered here
     val out = spark.sql("SELECT nfc_normalize('café') AS v").collect()
     assert(out.head.getString(0) == "caf\u00e9")
     val err = intercept[Exception](

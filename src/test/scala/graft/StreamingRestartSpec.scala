@@ -33,7 +33,6 @@ class StreamingRestartSpec extends AnyFunSuite {
     * StreamingSpec.timeSlicedDir recipe), returned as loose files so the
     * test can stage them into the watched dir in two phases. */
   private def sliceFiles(slices: Int): Seq[java.io.File] = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val d = Files.createTempDirectory("graft-restart-slices").toFile
     val raw = spark.read.parquet(s"$dir/events.parquet")
     val n = raw.count()

@@ -34,7 +34,6 @@ class StreamingSpec extends AnyFunSuite {
     * stream replays them as that many watermark-advancing microbatches. */
   private def timeSlicedDir(slices: Int): String = {
     import org.apache.spark.sql.functions._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val d = java.nio.file.Files.createTempDirectory("graft-multibatch").toFile
     val raw = spark.read.parquet(s"$dir/events.parquet")
     val n = raw.count()

@@ -2,22 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole forked test JVM. */
+/** One shared local session for the whole forked test JVM: the engine's
+  * own [[GraftSession]] conf (extensions included) on 4 cores, plus a
+  * throwaway warehouse dir. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .appName("graft-test")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      // nanos-timestamp parquet (events) read as long; set once here, not
-      // order-dependently inside a loader (ADVICE r1)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.start(GraftSession.builder(4)
+    .appName("graft-test")
+    .config("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }

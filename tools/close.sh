@@ -59,8 +59,9 @@ echo "=== Bench sf0.1 (solo, after all selfchecks) ==="
 # keep the committed artifact until the new run passes the sanity gate
 PRIOR=/tmp/close_prior_bench.json
 git show HEAD:BENCH_FULL.json >"$PRIOR" 2>/dev/null || cp BENCH_FULL.json "$PRIOR"
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-  sbt -batch 'runMain graft.Bench' >/tmp/close_bench.log 2>&1
+# Bench's defaults: the sf0.1 tables (unless SPARK_GRAFT_SF_DIR is set) and
+# SPARK_GRAFT_CPUS if set, else the host's core count
+sbt -batch 'runMain graft.Bench' >/tmp/close_bench.log 2>&1
 rc=$?
 if [ $rc -ne 0 ]; then
   echo "close.sh: Bench failed (rc=$rc) — see /tmp/close_bench.log" >&2

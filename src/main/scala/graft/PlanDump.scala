@@ -24,11 +24,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("/tmp/plans")
-    val only = args.lift(2).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    val names = SparkEntry.select(args.lift(2), SparkEntry.queries.keys)
     val spark = GraftSession.start()
     Files.createDirectories(Paths.get(outDir))
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
     names.foreach { name =>
       try {
         // Execute this Dataset's OWN QueryExecution so its

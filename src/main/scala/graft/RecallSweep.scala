@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 /** Measure the graph-ANN plane-count knob (VERDICT r12 item 7): recall@5
   * of graphBeam at each requested hyperplane count against s1's exact
   * brute-force top-5, on a real data dir. The knob's policy is
@@ -30,26 +32,27 @@ object RecallSweep {
       // the beam walk — quantization recall should be corpus-size-
       // INDEPENDENT (per-dim rounding error doesn't grow with N), and the
       // volume-pure fixture rows are the evidence
-      val (got, key, tag) =
+      val (got, key, probe) =
         if (tok == "sq8") {
           val g = graft.operators.Similarity.sq8TopK(spark, dir)
             .collect().map(r => (r.getLong(0), r.getLong(1)))
           // keyed by the EVALUATOR's query id (s38 grades the s37 store),
           // so artifact keys map 1:1 to gate query ids (ADVICE r14)
-          (g, s"s38_recall@$sfTag", """"store":"sq8"""")
+          (g, s"s38_recall@$sfTag", "store" -> "sq8")
         } else {
           val (p, label) =
             if (tok == "auto") (derived, s"auto$derived") else (tok.toInt, tok)
           val g = graft.operators.Similarity.graphBeam(spark, dir, p)
             .collect().map(r => (r.getLong(0), r.getLong(1)))
-          (g, s"s31_recall@$sfTag@p$label", s""""planes":$p""")
+          (g, s"s31_recall@$sfTag@p$label", "planes" -> p)
         }
       // denominator is the exact ground-truth PAIR COUNT, not 5·|queries|:
       // on a tiny data dir a query can have < 5 neighbors, and assuming 5
       // silently understates recall (ADVICE r13)
       val recall = got.count(exact5) / exact5.size.toDouble
-      println(s"""{"metric":"ann_recall","dir":"$dir",$tag,"recall_at_5":$recall}""")
-      key -> String.format(java.util.Locale.ROOT, "%.3f", Double.box(recall))
+      println(Bench.json.writeValueAsString(ListMap("metric" -> "ann_recall",
+        "dir" -> dir, probe, "recall_at_5" -> recall)))
+      key -> Bench.fixed(recall, 3).toString
     }
     SmokeArtifact.merge(
       sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "SCALE_FULL.json"), entries)

@@ -1,5 +1,8 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Forward-scaling smoke: replicate the documents corpus N× and time the
@@ -17,8 +20,10 @@ import org.apache.spark.sql.functions._
   * `length(text)` invariant the quality queries rely on.
   *
   * Usage: runMain graft.ScaleSmoke [baseSfDir] [factor] [q1,q2,...]
-  * Prints one JSON line per the Bench format (median of 3 timed runs
-  * after a warm-up, noop-write forcing). Only documents- (d/t/w),
+  * Each query is measured by [[Bench.measure]] (warm-up, median of 3
+  * noop-forced timed runs, contention re-run); prints one JSON line whose
+  * `errors` map lists the queries that failed (those rows are not merged
+  * into the artifact). Only documents- (d/t/w),
   * embeddings- (s), and g1's two-column lineitem-backed queries are valid
   * — each table is replicated only when a selected query needs it, and
   * the replicated lineitem carries ONLY (l_orderkey, l_partkey), so other
@@ -28,15 +33,47 @@ import org.apache.spark.sql.functions._
   * meaning under re-keying.
   */
 object ScaleSmoke {
+
+  /** `factor` copies of `df`, copy `i` re-keyed by `rekey(df, i)`, unioned.
+    * The re-keys below are the replica rules StreamScaleSmoke shares. */
+  def replicate(df: DataFrame, factor: Int)(
+      rekey: (DataFrame, Int) => DataFrame): DataFrame =
+    (0 until factor).map(rekey(df, _)).reduce(_ union _)
+
+  /** Copy `i` with each of `keys` re-keyed `key·factor + i`: disjoint. */
+  def offsetKeys(factor: Int, keys: String*)(df: DataFrame, i: Int): DataFrame =
+    keys.foldLeft(df)((d, k) => d.withColumn(k, col(k) * factor + i))
+
+  /** Events as `factor` disjoint user populations on the SAME time axis:
+    * per-user sessions are the original's, the hour histogram keeps its
+    * shape, and per-hour concurrency scales `factor`×. */
+  def disjointUsers(factor: Int): (DataFrame, Int) => DataFrame =
+    offsetKeys(factor, "user_id", "event_id")
+
+  /** Events with only `event_id` re-keyed: user keys, and so a
+    * point-in-time join's rate, stay the original's. */
+  def factsOnly(factor: Int): (DataFrame, Int) => DataFrame =
+    offsetKeys(factor, "event_id")
+
+  /** Documents, volume-pure (tagged tokens, recomputed `n_chars`; see
+    * above). */
+  def volumePureDocs(factor: Int)(df: DataFrame, i: Int): DataFrame =
+    offsetKeys(factor, "doc_id")(df, i)
+      .withColumn("text", regexp_replace(col("text"), "(\\S+)", s"r${i}_$$1"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 10
-    val names = (if (args.length > 2) args(2) else
-      "d1_exact_dedup,d2_minhash_sig,d3_lsh_pairs,d4_jaccard_pairs,d13_dup_shingles,t8_tfidf,w1_wordcount")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val names = SparkEntry.select(Some(args.lift(2).getOrElse(
+      "d1_exact_dedup,d2_minhash_sig,d3_lsh_pairs,d4_jaccard_pairs,d13_dup_shingles,t8_tfidf,w1_wordcount")),
+      SparkEntry.queries.keys)
     val spark = GraftSession.start()
 
     val dir = s"/tmp/graft-scale-$factor"
+    def put(table: String, df: DataFrame): Unit =
+      df.write.mode("overwrite").parquet(s"$dir/$table.parquet")
+    def read(table: String): DataFrame = spark.read.parquet(s"$base/$table.parquet")
     // replicate only what the selected queries read — an absent table in
     // `base` stays a non-issue unless a query actually needs it
     val needsDocs = names.exists(n =>
@@ -51,55 +88,33 @@ object ScaleSmoke {
     // fixed and the factor× re-keyed orders stress the pre-distinct edge
     // BUILD (the distinct edge set itself is invariant by construction)
     val needsLineitem = names.exists(n => n.startsWith("g") && n != "g25_hits")
-    if (needsDocs) {
-      val docs = spark.read.parquet(s"$base/documents.parquet")
-      (0 until factor).map { i =>
-        docs.withColumn("doc_id", col("doc_id") * factor + i)
-          .withColumn("text",
-            regexp_replace(col("text"), "(\\S+)", s"r${i}_$$1"))
-          .withColumn("n_chars", length(col("text")).cast("long"))
-      }.reduce(_ union _)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    }
+    if (needsDocs)
+      put("documents", replicate(read("documents"), factor)(volumePureDocs(factor)))
     // embeddings: volume-pure means re-keying the LABEL too — with shared
     // labels, replicas land in the same blocking group and the s3 pair join
     // grows by factor² instead of factor. Re-keyed, group sizes (and the
     // near-dup structure inside each) are the original's, at factor× the
     // group count; vectors themselves are unchanged.
-    if (needsEmb) {
-      val emb = spark.read.parquet(s"$base/embeddings.parquet")
-      (0 until factor).map { i =>
-        emb.withColumn("vec_id", col("vec_id") * factor + i)
-          .withColumn("label", col("label") * factor + i)
-      }.reduce(_ union _)
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    }
+    if (needsEmb)
+      put("embeddings", replicate(read("embeddings"), factor)(
+        offsetKeys(factor, "vec_id", "label")))
     // lineitem (g1's graph source), volume-pure: re-keying BOTH orderkey
     // and partkey makes the replicated co-order graph N disjoint copies of
     // the original — same degrees, same triangles per copy, N× the volume.
     // Only the two columns g1 reads are written.
-    if (needsLineitem) {
-      val li = spark.read.parquet(s"$base/lineitem.parquet")
-        .select(col("l_orderkey"), col("l_partkey"))
-      (0 until factor).map { i =>
-        li.withColumn("l_orderkey", col("l_orderkey") * factor + i)
-          .withColumn("l_partkey", col("l_partkey") * factor + i)
-      }.reduce(_ union _)
-        .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    }
+    if (needsLineitem)
+      put("lineitem", replicate(
+        read("lineitem").select(col("l_orderkey"), col("l_partkey")), factor)(
+        offsetKeys(factor, "l_orderkey", "l_partkey")))
     // g26 joins part for its LPA seed labels: replicate part on the SAME
     // re-key as the g-branch lineitem so every replicated vertex keeps its
     // brand — factor disjoint copies of the labeled graph. Communities
     // merge by brand NAME across copies, so the output stays
     // |brands|-sized while every community carries factor× the vertices.
-    if (names.contains("g26_modularity")) {
-      val part = spark.read.parquet(s"$base/part.parquet")
-        .select(col("p_partkey"), col("p_brand"))
-      (0 until factor).map { i =>
-        part.withColumn("p_partkey", col("p_partkey") * factor + i)
-      }.reduce(_ union _)
-        .write.mode("overwrite").parquet(s"$dir/part.parquet")
-    }
+    if (names.contains("g26_modularity"))
+      put("part", replicate(
+        read("part").select(col("p_partkey"), col("p_brand")), factor)(
+        offsetKeys(factor, "p_partkey")))
     // TPC-H star-join facts (q53/q55/q61 — VERDICT r9 item 3): replicate
     // lineitem and orders with re-keyed ORDER keys only; dimensions
     // (customer/nation/region) stay fixed — the realistic 100 TB shape
@@ -134,19 +149,9 @@ object ScaleSmoke {
     require(!(needsFacts && needsLineitem),
       "g-queries and relational fact queries replicate lineitem differently — run them separately")
     if (needsFacts) {
-      val li = spark.read.parquet(s"$base/lineitem.parquet")
-      (0 until factor).map { i =>
-        li.withColumn("l_orderkey", col("l_orderkey") * factor + i)
-      }.reduce(_ union _)
-        .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-      val ord = spark.read.parquet(s"$base/orders.parquet")
-      (0 until factor).map { i =>
-        ord.withColumn("o_orderkey", col("o_orderkey") * factor + i)
-      }.reduce(_ union _)
-        .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-      for (t <- Seq("customer", "nation", "region", "part"))
-        spark.read.parquet(s"$base/$t.parquet")
-          .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+      put("lineitem", replicate(read("lineitem"), factor)(offsetKeys(factor, "l_orderkey")))
+      put("orders", replicate(read("orders"), factor)(offsetKeys(factor, "o_orderkey")))
+      for (t <- Seq("customer", "nation", "region", "part")) put(t, read(t))
     }
     // q62's scale axis is the DIMENSION itself (an SCD apply maps over
     // however many dimension rows exist): replicate customer on re-keyed
@@ -154,55 +159,33 @@ object ScaleSmoke {
     val needsDim = names.contains("q62_scd2_merge")
     require(!(needsDim && needsFacts),
       "q62 replicates customer; the star-join branch copies it fixed — run them separately")
-    if (needsDim) {
-      val cust = spark.read.parquet(s"$base/customer.parquet")
-      (0 until factor).map { i =>
-        cust.withColumn("c_custkey", col("c_custkey") * factor + i)
-      }.reduce(_ union _)
-        .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    }
-    // events (the behavioral queries' source), volume-pure: re-keying
-    // user_id and event_id makes the replicated stream N disjoint user
-    // populations over the SAME time axis — per-user session structure is
-    // the original's, the hour histogram keeps its shape at N× the rows,
-    // and per-hour concurrency scales ×N (exactly the hot-hour stress a
-    // sweep-line must absorb). Valid for user-keyed event-time queries
+    if (needsDim)
+      put("customer", replicate(read("customer"), factor)(offsetKeys(factor, "c_custkey")))
+    // events (the behavioral queries' source), volume-pure as
+    // `disjointUsers`. Valid for user-keyed event-time queries
     // (q16/q42/q43/q45/q46); value/props-analytics keep their meaning too.
     val needsEvents =
       names.exists(n => n.startsWith("q") && n != "q64_temporal_join" &&
         n != "q62_scd2_merge" && !relationalFactQs.contains(n))
-    if (needsEvents) {
-      val ev = graft.sources.Tables.load(spark, base, "events")
-      (0 until factor).map { i =>
-        ev.withColumn("user_id", col("user_id") * factor + i)
-          .withColumn("event_id", col("event_id") * factor + i)
-      }.reduce(_ union _)
-        .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    }
+    if (needsEvents)
+      put("events", replicate(graft.sources.Tables.load(spark, base, "events"),
+        factor)(disjointUsers(factor)))
 
-    // q64's scale axis is the FACT: replicate events re-keying event_id
-    // ONLY — user keys stay intact so the PIT join rate is the original's,
-    // each user carries factor× the events, and the versioned customer
-    // dimension (copied fixed) stays broadcast-sized. Exclusive with the
-    // generic events branch (which re-keys user_id and would silently
-    // zero the dimension join) and with the branches that write customer
-    // in other shapes.
+    // q64's scale axis is the FACT: `factsOnly` events, with the versioned
+    // customer dimension copied fixed so it stays broadcast-sized.
+    // Exclusive with the generic events branch (which re-keys user_id and
+    // would silently zero the dimension join) and with the branches that
+    // write customer in other shapes.
     val needsPit = names.contains("q64_temporal_join")
     require(!(needsPit && needsEvents),
       "q64 replicates events keeping user keys; the generic events branch re-keys them — run separately")
     require(!(needsPit && (needsFacts || needsDim)),
       "q64 copies customer fixed; other branches write it differently — run separately")
     if (needsPit) {
-      val ev = graft.sources.Tables.load(spark, base, "events")
-      (0 until factor).map { i =>
-        ev.withColumn("event_id", col("event_id") * factor + i)
-      }.reduce(_ union _)
-        .write.mode("overwrite").parquet(s"$dir/events.parquet")
-      spark.read.parquet(s"$base/customer.parquet")
-        .write.mode("overwrite").parquet(s"$dir/customer.parquet")
+      put("events", replicate(graft.sources.Tables.load(spark, base, "events"),
+        factor)(factsOnly(factor)))
+      put("customer", read("customer"))
     }
-
-    val clearBlocks = GraftSession.blockCleaner(spark)
 
     // PEAK-STORAGE SAMPLER (OPTIMIZATION r18, VERDICT r17 item 8): the
     // Components rewrite holds every round's hook map live until the
@@ -210,8 +193,9 @@ object ScaleSmoke {
     // storage by the geometric-shrink argument, but the argument needed a
     // measured datapoint at a large vertex set. A daemon thread samples
     // the block manager's total persisted bytes (mem + disk) every 50 ms
-    // while each query runs; the per-query max rides the artifact as
-    // peak_storage_mb. Measurement-tool only — no query-path change.
+    // across each query's whole measurement (warm-up included); the
+    // per-query max rides the artifact as peak_storage_mb.
+    // Measurement-tool only — no query-path change.
     @volatile var peak = 0L
     @volatile var sampling = false
     val sampler = new Thread(() => {
@@ -229,30 +213,29 @@ object ScaleSmoke {
 
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val peaks = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     names.foreach { name =>
-      GraftSession.force(spark, name, dir); clearBlocks()
       peak = 0L; sampling = true
-      val ts = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        GraftSession.force(spark, name, dir)
-        val dt = (System.nanoTime() - t0) / 1e9
-        clearBlocks()
-        dt
-      }.sorted
+      val m = Bench.measure(spark, name, dir, 3)
       sampling = false
-      timings(name) = ts(1)
-      peaks(name) = peak / 1e6
+      m.error match {
+        case Some(e) => errors(name) = e
+        case None =>
+          timings(name) = m.median
+          peaks(name) = peak / 1e6
+      }
     }
-    val qs = timings.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"scale_smoke","factor":$factor,"base":"$base","queries":$qs}""")
+    println(Bench.json.writeValueAsString(ListMap("metric" -> "scale_smoke",
+      "factor" -> factor, "base" -> base, "queries" -> timings,
+      "errors" -> errors)))
     // persist as a committed, diffable artifact keyed query@factor
     // (VERDICT r12 item 6) — accumulates across per-family invocations
     SmokeArtifact.merge(
       sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "SCALE_FULL.json"),
       timings.toSeq.map { case (k, v) =>
-        val pk = String.format(java.util.Locale.ROOT, "%.1f",
-          Double.box(peaks(k)))
-        s"$k@${factor}x" -> s"""{"sec":$v,"base":"$base","peak_storage_mb":$pk}""" })
+        s"$k@${factor}x" -> Bench.json.writeValueAsString(ListMap(
+          "sec" -> v, "base" -> base,
+          "peak_storage_mb" -> Bench.fixed(peaks(k), 1))) })
     spark.stop()
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import com.fasterxml.jackson.databind.node.ObjectNode
+
 /** Persist smoke-harness measurements as committed, diffable artifacts
   * (VERDICT r12 item 6): ScaleSmoke / StreamScaleSmoke print one JSON line
   * per invocation, which then survives only as prose quoted into PLANS.md.
@@ -10,38 +12,30 @@ package graft
   */
 object SmokeArtifact {
 
-  /** Merge (key -> raw JSON value) entries into a one-line JSON object
-    * file, preserving entries from prior invocations. The file is only
-    * ever written by this code, so reading it back is a depth-aware
-    * top-level split, not a general JSON parser — values are numbers or
-    * flat objects, never deeper. */
+  /** Merge (key -> JSON value text) entries into a one-line JSON object
+    * file, preserving entries from prior invocations in their order. Read
+    * and written through [[Bench.json]], so numbers already in the file
+    * are re-written exactly as they were. */
   def merge(path: String, entries: Seq[(String, String)]): Unit = {
-    val existing = scala.collection.mutable.LinkedHashMap[String, String]()
     val f = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(f)) {
-      val s = new String(java.nio.file.Files.readAllBytes(f), "UTF-8").trim
-      // ABORT (never silently start fresh) when a non-empty existing file
-      // fails the object-shape check — a truncated or hand-mangled artifact
-      // means accumulated history would be discarded by a blind overwrite
-      // (ADVICE r13). An empty file is a legitimate fresh start.
-      if (s.nonEmpty && !(s.startsWith("{") && s.endsWith("}")))
-        throw new IllegalStateException(
-          s"$path exists but is not a JSON object (truncated write or hand " +
-            "edit?) — refusing to overwrite accumulated smoke history. " +
-            "Repair or delete the file, then re-run.")
-      if (s.startsWith("{") && s.endsWith("}"))
-        splitTopLevel(s.substring(1, s.length - 1)).foreach { part =>
-          part.split(":", 2) match {
-            case Array(k, v) =>
-              val key = k.trim.stripPrefix("\"").stripSuffix("\"")
-              if (key.nonEmpty) existing(key) = v.trim
-            case _ => ()
-          }
-        }
-    }
-    entries.foreach { case (k, v) => existing(k) = v }
-    val line = existing.map { case (k, v) => s""""$k":$v""" }
-      .mkString("{", ",", "}")
+    val s =
+      if (java.nio.file.Files.exists(f))
+        new String(java.nio.file.Files.readAllBytes(f), "UTF-8").trim
+      else ""
+    // ABORT (never silently start fresh) when a non-empty existing file
+    // is not a JSON object — a truncated or hand-mangled artifact means
+    // accumulated history would be discarded by a blind overwrite
+    // (ADVICE r13). An empty file is a legitimate fresh start.
+    val existing =
+      if (s.isEmpty) Bench.json.createObjectNode()
+      else scala.util.Try(Bench.json.readTree(s)).toOption.collect {
+        case o: ObjectNode => o
+      }.getOrElse(throw new IllegalStateException(
+        s"$path exists but is not a JSON object (truncated write or hand " +
+          "edit?) — refusing to overwrite accumulated smoke history. " +
+          "Repair or delete the file, then re-run."))
+    entries.foreach { case (k, v) => existing.replace(k, Bench.json.readTree(v)) }
+    val line = Bench.json.writeValueAsString(existing)
     // temp-file + atomic rename: a crash mid-write must never leave a
     // truncated artifact for the next invocation's guard to reject
     val tmp = f.resolveSibling(f.getFileName.toString + ".tmp")
@@ -56,30 +50,5 @@ object SmokeArtifact {
         java.nio.file.Files.move(tmp, f,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
     }
-  }
-
-  /** Split a JSON object body at depth-0 commas (string-literal aware). */
-  private def splitTopLevel(body: String): Seq[String] = {
-    val parts = scala.collection.mutable.ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var depth = 0
-    var inStr = false
-    var esc = false
-    body.foreach { c =>
-      if (esc) { esc = false; cur += c }
-      else if (inStr) {
-        if (c == '\\') esc = true else if (c == '"') inStr = false
-        cur += c
-      } else c match {
-        case '"' => inStr = true; cur += c
-        case '{' | '[' => depth += 1; cur += c
-        case '}' | ']' => depth -= 1; cur += c
-        case ',' if depth == 0 =>
-          if (cur.nonEmpty) { parts += cur.toString; cur.clear() }
-        case _ => cur += c
-      }
-    }
-    if (cur.nonEmpty) parts += cur.toString
-    parts.toSeq
   }
 }

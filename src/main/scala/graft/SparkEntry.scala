@@ -32,4 +32,19 @@ object SparkEntry {
     Relational.oracles ++ TextOps.oracles ++ Dedup.oracles ++
       Similarity.oracles ++ Multimodal.oracles ++ StreamingSessionize.oracles ++
       TypedAggs.oracles ++ Graph.oracles
+
+  /** The query names a tool runs, sorted: every name in `known` when
+    * `spec` is None, else the comma-separated names in `spec`. A spec that
+    * names nothing, or any name not in `known`, fails before anything runs
+    * (a typo must not select nothing and overwrite an artifact). */
+  def select(spec: Option[String], known: Iterable[String]): Seq[String] = {
+    val all = known.toSeq.sorted
+    spec.fold(all) { s =>
+      val names = s.split(',').map(_.trim).filter(_.nonEmpty).toSeq.distinct
+      val unknown = names.filterNot(all.toSet)
+      require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+      require(names.nonEmpty, s"no query names in '$s'")
+      names.sorted
+    }
+  }
 }

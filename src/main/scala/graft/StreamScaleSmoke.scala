@@ -1,9 +1,12 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
+import org.apache.spark.sql.types.StructType
 
 import graft.streaming.{StreamFunnel, StreamIslands, StreamPaths, StreamTwa, StreamingSessionize}
 
@@ -62,13 +65,14 @@ object StreamScaleSmoke {
     }
   }
 
+  /** A replayed query: its staged corpus (built on first call) and one
+    * fully-consumed replay of it. */
+  private final case class Replay(corpus: () => String, run: String => Unit)
+
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.01")
     val factor = if (args.length > 1) args(1).toInt else 100
     val slices = if (args.length > 2) args(2).toInt else 16
-    val names = (if (args.length > 3) args(3) else
-      "x25_stream_twa,x29_stream_twa_sharded,x27_stream_islands,x28_stream_paths,x19a_topk_append,x24a_kmv_append,x26_stream_pit_enrich,x17a_decontam_stateless,x3_stream_interval_join,x8_stream_left_join,x13_stream_full_outer,x11_stream_funnel")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val spark = GraftSession.start()
 
     /** Write `df` as `slices` files keyed by contiguous ranges of `cutCol`
@@ -101,107 +105,65 @@ object StreamScaleSmoke {
       frame.unpersist(): Unit
     }
 
-    def replicate(df: DataFrame, rekey: (DataFrame, Int) => DataFrame): DataFrame =
-      (0 until factor).map(i => rekey(df, i)).reduce(_ unionAll _)
+    import ScaleSmoke.{disjointUsers, factsOnly, offsetKeys, replicate, volumePureDocs}
+    // every replicated corpus is staged under the one temp root, which a
+    // shutdown hook deletes
+    def stage(tag: String)(fill: java.io.File => Unit): String = {
+      val d = new java.io.File(TempRoot.stageDir(base, tag))
+      d.mkdirs()
+      fill(d)
+      d.getAbsolutePath
+    }
 
     // raw events, schema preserved (NTZ micros ts — the streaming reader's
     // declared schema; the spec's timeSlicedDir discipline)
     lazy val rawEvents = spark.read.parquet(s"$base/events.parquet")
     lazy val msCol = expr("unix_millis(CAST(ts AS TIMESTAMP))").cast("double")
+    lazy val docs = spark.read.parquet(s"$base/documents.parquet")
+    val byDocId = col("doc_id").cast("double")
 
-    val needGeneric = names.exists(n => Set("x25_stream_twa",
-      "x29_stream_twa_sharded", "x27_stream_islands", "x28_stream_paths",
-      "x19a_topk_append", "x24a_kmv_append", "x3_stream_interval_join",
-      "x8_stream_left_join", "x13_stream_full_outer",
-      "x11_stream_funnel", "x30_stream_asof_nearest",
-      "x31_stream_cdc_apply", "x33_stream_dedup_bounded",
-      "x36_stream_quantile").contains(n))
-    val needPit = names.contains("x26_stream_pit_enrich")
-    val needDocs = names.exists(n => n == "x17a_decontam_stateless" ||
-      n == "x37_stream_weighted_sample")
-    val needMalformed = names.contains("x32_stream_malformed_audit")
-
-    lazy val dirGeneric = {
-      val d = java.nio.file.Files.createTempDirectory("graft-ssm-ev").toFile
-      writeSliced(replicate(rawEvents, (e, i) =>
-        e.withColumn("user_id", col("user_id") * factor + i)
-          .withColumn("event_id", col("event_id") * factor + i)), msCol, d)
-      d.getAbsolutePath
-    }
-    lazy val dirPit = {
-      val d = java.nio.file.Files.createTempDirectory("graft-ssm-pit").toFile
-      writeSliced(replicate(rawEvents, (e, i) =>
-        e.withColumn("event_id", col("event_id") * factor + i)), msCol, d)
+    lazy val dirGeneric = stage("ssm-ev")(writeSliced(
+      replicate(rawEvents, factor)(disjointUsers(factor)), msCol, _))
+    lazy val dirPit = stage("ssm-pit") { d =>
+      writeSliced(replicate(rawEvents, factor)(factsOnly(factor)), msCol, d)
       spark.read.parquet(s"$base/customer.parquet")
         .write.parquet(s"${d.getAbsolutePath}/customer.parquet")
-      d.getAbsolutePath
     }
-    lazy val dirDocs = {
-      val d = java.nio.file.Files.createTempDirectory("graft-ssm-doc").toFile
-      val docs = spark.read.parquet(s"$base/documents.parquet")
-      writeSliced(replicate(docs, (dd, i) =>
-        dd.withColumn("doc_id", col("doc_id") * factor + i)
-          .withColumn("text",
-            regexp_replace(col("text"), "(\\S+)", s"r${i}_$$1"))
-          .withColumn("n_chars", length(col("text")).cast("long"))),
-        col("doc_id").cast("double"), d)
-      d.getAbsolutePath
-    }
+    lazy val dirDocs = stage("ssm-doc")(writeSliced(
+      replicate(docs, factor)(volumePureDocs(factor)), byDocId, _))
 
     // x32's corrupted-payload stream: replicate docs on re-keyed doc_id
     // (volume-pure for an audit that keys on nothing), apply t38's tear
     // rule, slice by doc_id — each trigger carries a mix of torn and
     // well-formed lines, exactly the crawl-feed arrival shape
-    lazy val dirMalformed = {
-      val d = java.nio.file.Files.createTempDirectory("graft-ssm-mal").toFile
-      val docs = spark.read.parquet(s"$base/documents.parquet")
-      val payload = replicate(docs, (dd, i) =>
-        dd.withColumn("doc_id", col("doc_id") * factor + i))
+    lazy val dirMalformed = stage("ssm-mal")(writeSliced(
+      replicate(docs, factor)(offsetKeys(factor, "doc_id"))
         .withColumn("js", to_json(struct(col("doc_id"), col("text"),
           col("lang"), col("source"), col("n_chars"))))
         .select(
           when(col("doc_id") % 7 === 3,
             expr("substr(js, 1, greatest(length(js) div 2, 1))"))
             .otherwise(col("js")).as("value"),
-          col("doc_id"))
-      writeSliced(payload, col("doc_id").cast("double"), d)
-      d.getAbsolutePath
-    }
+          col("doc_id")), byDocId, _))
 
-    // x34's encoding-health stream: VOLUME-PURE doc replication in the
-    // repo's established sense — each replica re-keys doc_id AND rewrites
-    // its text with an r{i}_ token prefix (ScaleSmoke's documents rule,
-    // ADVICE r14: key-only replication would stream byte-identical text
-    // N×), then t42's decomposed-suffix injection, sliced by doc_id —
-    // each trigger carries a mix of NFC and non-NFC docs, the crawl-feed
-    // arrival shape
-    lazy val dirUnicode = {
-      val d = java.nio.file.Files.createTempDirectory("graft-ssm-nfc").toFile
-      val docs = spark.read.parquet(s"$base/documents.parquet")
-      val payload = replicate(docs, (dd, i) =>
-        dd.withColumn("doc_id", col("doc_id") * factor + i)
-          .withColumn("text",
-            regexp_replace(col("text"), "(\\S+)", s"r${i}_$$1")))
+    // x34's encoding-health stream: volume-pure doc replication (key-only
+    // replication would stream byte-identical text N×, ADVICE r14), then
+    // t42's decomposed-suffix injection, sliced by doc_id — each trigger
+    // carries a mix of NFC and non-NFC docs, the crawl-feed arrival shape
+    lazy val dirUnicode = stage("ssm-nfc")(writeSliced(
+      replicate(docs, factor)(volumePureDocs(factor))
         .select(col("doc_id"), col("source"),
           when(col("doc_id") % 13 === 5,
             concat(col("text"), lit(" cafe\u0301")))
-            .otherwise(col("text")).as("text"))
-      writeSliced(payload, col("doc_id").cast("double"), d)
-      d.getAbsolutePath
-    }
+            .otherwise(col("text")).as("text")), byDocId, _))
 
     // x35's schema-drift stream: three schema GENERATIONS (baseline /
     // +quality / lang renamed), each volume-pure-replicated and sliced,
     // with the generations' slice runs INTERLEAVED in arrival order —
     // every trigger window sees drifted and conforming shards mixed, the
     // mid-stream-drift shape the superset contract exists for
-    lazy val dirDrift = {
-      val d = java.nio.file.Files.createTempDirectory("graft-ssm-drift").toFile
-      val docs = spark.read.parquet(s"$base/documents.parquet")
-      val rep = replicate(docs, (dd, i) =>
-        dd.withColumn("doc_id", col("doc_id") * factor + i)
-          .withColumn("text",
-            regexp_replace(col("text"), "(\\S+)", s"r${i}_$$1")))
+    lazy val dirDrift = stage("ssm-drift") { d =>
+      val rep = replicate(docs, factor)(volumePureDocs(factor))
       val per = math.max(slices / 3, 1)
       val gens = Seq(
         rep.filter(col("doc_id") % 3 === 0)
@@ -214,44 +176,40 @@ object StreamScaleSmoke {
           .select(col("doc_id"), col("text"), col("lang").as("language"),
             col("source"), col("n_chars")))
       gens.zipWithIndex.foreach { case (g, gi) =>
-        writeSliced(g, col("doc_id").cast("double"), d, nSlices = per,
-          seq = i => i * 3 + gi)
+        writeSliced(g, byDocId, d, nSlices = per, seq = i => i * 3 + gi)
       }
-      d.getAbsolutePath
     }
 
     val mb = Map("maxFilesPerTrigger" -> "1")
-    // each entry: () => the fully-consumed run (runToCompletion + force)
-    def run(dir: String, transform: DataFrame => DataFrame,
-        sink: String, sinkTransform: DataFrame => DataFrame = identity,
-        schema: org.apache.spark.sql.types.StructType = null): Unit = {
-      val out =
-        if (schema == null)
-          StreamingSessionize.runToCompletion(spark, dir, transform,
-            outputMode = "append", sinkName = sink, sourceOptions = mb,
-            sourceGlob = "events*.parquet", sinkTransform = sinkTransform)
-        else
-          StreamingSessionize.runToCompletion(spark, dir, transform,
-            outputMode = "append", sinkName = sink, sourceOptions = mb,
-            sourceGlob = "events*.parquet", sourceSchema = schema,
-            sinkTransform = sinkTransform)
-      out.write.format("noop").mode("overwrite").save()
-    }
-    val runs: Map[String, () => Unit] = Map(
-      "x25_stream_twa" -> (() => run(dirGeneric, StreamTwa.transform, "ssm-x25")),
+    /** One replay of the staged `dir` through `transform`, to completion
+      * (runToCompletion + a noop force). */
+    def run(transform: DataFrame => DataFrame, sink: String,
+        outputMode: String = "append",
+        schema: StructType = StreamingSessionize.rawSchema,
+        sinkTransform: DataFrame => DataFrame = identity,
+        tagBatchId: Boolean = false)(dir: String): Unit =
+      StreamingSessionize.runToCompletion(spark, dir, transform,
+          outputMode = outputMode, sinkName = sink, sourceOptions = mb,
+          sourceGlob = "events*.parquet", sourceSchema = schema,
+          sinkTransform = sinkTransform, tagBatchId = tagBatchId)
+        .write.format("noop").mode("overwrite").save()
+    val ev = () => dirGeneric
+    val docsDir = () => dirDocs
+    val runs: Map[String, Replay] = Map(
+      "x25_stream_twa" -> Replay(ev, run(StreamTwa.transform, "ssm-x25")),
       // the sharded twin runs through its own wrapper (it scopes the
       // multi-watermark policy + chained-stateful check overrides)
-      "x29_stream_twa_sharded" -> (() =>
-        graft.streaming.StreamTwaSharded.runToCompletion(spark, dirGeneric,
+      "x29_stream_twa_sharded" -> Replay(ev, d =>
+        graft.streaming.StreamTwaSharded.runToCompletion(spark, d,
             "ssm-x29", mb, "events*.parquet")
           .write.format("noop").mode("overwrite").save()),
-      "x27_stream_islands" -> (() => run(dirGeneric, StreamIslands.transform, "ssm-x27")),
-      "x28_stream_paths" -> (() => run(dirGeneric, StreamPaths.transform, "ssm-x28")),
-      "x19a_topk_append" -> (() =>
-        run(dirGeneric, StreamingSessionize.hourlyUserCounts(_), "ssm-x19a",
+      "x27_stream_islands" -> Replay(ev, run(StreamIslands.transform, "ssm-x27")),
+      "x28_stream_paths" -> Replay(ev, run(StreamPaths.transform, "ssm-x28")),
+      "x19a_topk_append" -> Replay(ev,
+        run(StreamingSessionize.hourlyUserCounts(_), "ssm-x19a",
           sinkTransform = StreamingSessionize.topkProjection)),
-      "x24a_kmv_append" -> (() =>
-        run(dirGeneric, StreamingSessionize.hourlyKmvHashes(_), "ssm-x24a",
+      "x24a_kmv_append" -> Replay(ev,
+        run(StreamingSessionize.hourlyKmvHashes(_), "ssm-x24a",
           sinkTransform = StreamingSessionize.kmvHourProjection)),
       // the stream-stream JOIN family (VERDICT r11 item 1): two-sided
       // buffered state with per-side eviction clocks — join state must
@@ -260,120 +218,85 @@ object StreamScaleSmoke {
       // factor× the per-slice key population but the same time axis, so
       // max_state_rows is the standing answer to a bench-wobble
       // adjudication (r11's x13 episode)
-      "x3_stream_interval_join" -> (() =>
-        run(dirGeneric, StreamingSessionize.clickViewJoin, "ssm-x3")),
-      "x8_stream_left_join" -> (() =>
-        run(dirGeneric, StreamingSessionize.clickViewLeftJoin, "ssm-x8")),
-      "x13_stream_full_outer" -> (() =>
-        run(dirGeneric, StreamingSessionize.clickViewFullJoin, "ssm-x13")),
+      "x3_stream_interval_join" -> Replay(ev,
+        run(StreamingSessionize.clickViewJoin, "ssm-x3")),
+      "x8_stream_left_join" -> Replay(ev,
+        run(StreamingSessionize.clickViewLeftJoin, "ssm-x8")),
+      "x13_stream_full_outer" -> Replay(ev,
+        run(StreamingSessionize.clickViewFullJoin, "ssm-x13")),
       // fMGWS session state: four longs per ACTIVE (non-quiesced) user;
       // timeout eviction means state tracks the active-user horizon
-      "x11_stream_funnel" -> (() =>
-        run(dirGeneric, StreamFunnel.transform, "ssm-x11")),
+      "x11_stream_funnel" -> Replay(ev, run(StreamFunnel.transform, "ssm-x11")),
       // bidirectional asof buffer: state tracks the 2W + delay horizon
       // per user, decided purchases leave at emission
-      "x30_stream_asof_nearest" -> (() =>
-        run(dirGeneric, graft.streaming.StreamAsof.transform, "ssm-x30")),
+      "x30_stream_asof_nearest" -> Replay(ev,
+        run(graft.streaming.StreamAsof.transform, "ssm-x30")),
       // watermark-evicted dedup: max_state_rows reads the HORIZON's key
       // population, not the stream's — the measured answer to x4's
       // keys-forever caveat
-      "x33_stream_dedup_bounded" -> (() =>
-        run(dirGeneric, StreamingSessionize.streamDedupBounded(_), "ssm-x33")),
+      "x33_stream_dedup_bounded" -> Replay(ev,
+        run(StreamingSessionize.streamDedupBounded(_), "ssm-x33")),
       // CDC materialization: state is one row per live key BY DESIGN —
       // the readout quantifies the maintained-table cost, not a leak
-      "x31_stream_cdc_apply" -> (() => {
-        StreamingSessionize.runToCompletion(spark, dirGeneric,
-            StreamingSessionize.streamCdcApply, outputMode = "update",
-            sinkName = "ssm-x31", sourceOptions = mb,
-            sourceGlob = "events*.parquet", tagBatchId = true)
-          .write.format("noop").mode("overwrite").save()
-      }),
-      "x26_stream_pit_enrich" -> (() =>
-        run(dirPit, StreamingSessionize.pitEnrich(spark, dirPit), "ssm-x26")),
+      "x31_stream_cdc_apply" -> Replay(ev,
+        run(StreamingSessionize.streamCdcApply, "ssm-x31",
+          outputMode = "update", tagBatchId = true)),
+      "x26_stream_pit_enrich" -> Replay(() => dirPit, d =>
+        run(StreamingSessionize.pitEnrich(spark, d), "ssm-x26")(d)),
       // live quantile sketch: state is the QuantileSampleAgg buffer —
       // ≤512 (hv, value) pairs per type at ANY volume; the readout
       // proves the dashboard's state never tracks the stream
-      "x36_stream_quantile" -> (() => {
-        StreamingSessionize.runToCompletion(spark, dirGeneric,
-            StreamingSessionize.quantileLive, outputMode = "complete",
-            sinkName = "ssm-x36", sourceOptions = mb,
-            sourceGlob = "events*.parquet",
-            sinkTransform = StreamingSessionize.quantileCuts)
-          .write.format("noop").mode("overwrite").save()
-      }),
+      "x36_stream_quantile" -> Replay(ev,
+        run(StreamingSessionize.quantileLive, "ssm-x36",
+          outputMode = "complete",
+          sinkTransform = StreamingSessionize.quantileCuts)),
       // live weighted sample: state is the TopKAgg buffer — ≤50 payload
       // structs per language at ANY volume; the readout proves the
       // manifest's state never tracks the stream (x36's argument on the
       // sampling axis)
-      "x37_stream_weighted_sample" -> (() => {
-        StreamingSessionize.runToCompletion(spark, dirDocs,
-            StreamingSessionize.weightedSampleLive, outputMode = "complete",
-            sinkName = "ssm-x37", sourceOptions = mb,
-            sourceGlob = "events*.parquet",
-            sourceSchema = StreamingSessionize.docSchema,
-            sinkTransform = StreamingSessionize.weightedSampleRank)
-          .write.format("noop").mode("overwrite").save()
-      }),
+      "x37_stream_weighted_sample" -> Replay(docsDir,
+        run(StreamingSessionize.weightedSampleLive, "ssm-x37",
+          outputMode = "complete", schema = StreamingSessionize.docSchema,
+          sinkTransform = StreamingSessionize.weightedSampleRank)),
       // ingest-health totals: state is ONE 5-long row at any volume —
       // the readout proves the audit adds no per-record state
-      "x32_stream_malformed_audit" -> (() => {
-        StreamingSessionize.runToCompletion(spark, dirMalformed,
-            StreamingSessionize.malformedAudit, outputMode = "complete",
-            sinkName = "ssm-x32", sourceOptions = mb,
-            sourceGlob = "events*.parquet",
-            sourceSchema = org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("value",
-                org.apache.spark.sql.types.StringType))))
-          .write.format("noop").mode("overwrite").save()
-      }),
-      "x17a_decontam_stateless" -> (() =>
-        run(dirDocs, StreamingSessionize.statelessDecontam(spark, base),
-          "ssm-x17a", schema = StreamingSessionize.docSchema)),
-      // encoding-health totals: state is |sources| 4-long rows at any
-      // volume — the NFC projection adds no per-record state
+      "x32_stream_malformed_audit" -> Replay(() => dirMalformed,
+        run(StreamingSessionize.malformedAudit, "ssm-x32",
+          outputMode = "complete", schema = StructType.fromDDL("value STRING"))),
+      "x17a_decontam_stateless" -> Replay(docsDir,
+        run(StreamingSessionize.statelessDecontam(spark, base), "ssm-x17a",
+          schema = StreamingSessionize.docSchema)),
       // schema-drift conformance: state is |classes| (= 3) 5-long rows
       // at any volume — classification adds no per-record state
-      "x35_stream_schema_drift" -> (() => {
-        StreamingSessionize.runToCompletion(spark, dirDrift,
-            StreamingSessionize.schemaDriftAudit, outputMode = "complete",
-            sinkName = "ssm-x35", sourceOptions = mb,
-            sourceGlob = "events*.parquet",
-            sourceSchema = StreamingSessionize.driftSupersetSchema)
-          .write.format("noop").mode("overwrite").save()
-      }),
-      "x34_stream_unicode_audit" -> (() => {
-        StreamingSessionize.runToCompletion(spark, dirUnicode,
-            StreamingSessionize.unicodeAudit, outputMode = "complete",
-            sinkName = "ssm-x34", sourceOptions = mb,
-            sourceGlob = "events*.parquet",
-            sourceSchema = org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("doc_id",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("source",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("text",
-                org.apache.spark.sql.types.StringType))))
-          .write.format("noop").mode("overwrite").save()
-      }))
+      "x35_stream_schema_drift" -> Replay(() => dirDrift,
+        run(StreamingSessionize.schemaDriftAudit, "ssm-x35",
+          outputMode = "complete",
+          schema = StreamingSessionize.driftSupersetSchema)),
+      // encoding-health totals: state is |sources| 4-long rows at any
+      // volume — the NFC projection adds no per-record state
+      "x34_stream_unicode_audit" -> Replay(() => dirUnicode,
+        run(StreamingSessionize.unicodeAudit, "ssm-x34",
+          outputMode = "complete",
+          schema = StructType.fromDDL("doc_id BIGINT, source STRING, text STRING"))))
 
+    val names = SparkEntry.select(Some(args.lift(3).getOrElse(
+      "x25_stream_twa,x29_stream_twa_sharded,x27_stream_islands,x28_stream_paths,x19a_topk_append,x24a_kmv_append,x26_stream_pit_enrich,x17a_decontam_stateless,x3_stream_interval_join,x8_stream_left_join,x13_stream_full_outer,x11_stream_funnel")),
+      runs.keys)
     // force corpus preparation OUTSIDE the timed windows: the dirs are
-    // lazy, and dereferencing one inside runs(name)() would bill the
+    // lazy, and dereferencing one inside the timed replay would bill the
     // first query of each family minutes of batch replication + parquet
     // writes (code-review r11: x25's rows_per_s was deflated vs x27/x28,
     // which reused the already-built dir)
-    if (needGeneric) { dirGeneric: Unit }
-    if (needPit) { dirPit: Unit }
-    if (needDocs) { dirDocs: Unit }
-    if (needMalformed) { dirMalformed: Unit }
-    if (names.contains("x34_stream_unicode_audit")) { dirUnicode: Unit }
-    if (names.contains("x35_stream_schema_drift")) { dirDrift: Unit }
+    names.foreach(runs(_).corpus())
 
-    val results = scala.collection.mutable.LinkedHashMap[String, String]()
+    val results = scala.collection.mutable.LinkedHashMap[String, ListMap[String, Any]]()
     names.foreach { name =>
+      val Replay(corpus, replay) = runs(name)
+      val dir = corpus()
       val cap = new Capture
       spark.streams.addListener(cap)
       val t0 = System.nanoTime()
-      val wall = try { runs(name)(); (System.nanoTime() - t0) / 1e9 }
+      val wall = try { replay(dir); (System.nanoTime() - t0) / 1e9 }
       finally {
         // wall is captured BEFORE this drain: the listener posts
         // asynchronously, but the query itself has already completed.
@@ -400,26 +323,21 @@ object StreamScaleSmoke {
       val maxState = if (ts.isEmpty) 0L else ts.map(_._3).max
       val maxStateKb = if (ts.isEmpty) 0L else ts.map(_._4).max / 1024
       val maxTrigS = if (ts.isEmpty) 0.0 else ts.map(_._2).max / 1e3
-      // Locale.ROOT explicitly: these strings are persisted into the
-      // committed STREAMSCALE_FULL.json via SmokeArtifact.merge, and a
-      // default-locale f"%.2f" on a comma-decimal JVM would write invalid
-      // JSON — the same defect class Bench.scala fixed (ADVICE r12/r13).
-      results(name) = String.format(java.util.Locale.ROOT,
-        """{"wall_s":%.2f,"rows_in":%d,"rows_per_s":%.0f,"n_triggers":%d,"max_state_rows":%d,"max_state_kb":%d,"max_trigger_s":%.2f}""",
-        Double.box(wall), Long.box(rowsIn), Double.box(rowsIn / wall),
-        Int.box(nTrig), Long.box(maxState), Long.box(maxStateKb),
-        Double.box(maxTrigS))
+      results(name) = ListMap("wall_s" -> Bench.fixed(wall, 2),
+        "rows_in" -> rowsIn, "rows_per_s" -> Bench.fixed(rowsIn / wall, 0),
+        "n_triggers" -> nTrig, "max_state_rows" -> maxState,
+        "max_state_kb" -> maxStateKb, "max_trigger_s" -> Bench.fixed(maxTrigS, 2))
     }
-    val qs = results.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"stream_scale_smoke","factor":$factor,"slices":$slices,"base":"$base","queries":$qs}""")
+    println(Bench.json.writeValueAsString(ListMap(
+      "metric" -> "stream_scale_smoke", "factor" -> factor,
+      "slices" -> slices, "base" -> base, "queries" -> results)))
     // persist as a committed, diffable artifact keyed query@factor
     // (VERDICT r12 item 6) — accumulates across per-family invocations
     SmokeArtifact.merge(
       sys.env.getOrElse("SPARK_GRAFT_STREAMSCALE_OUT", "STREAMSCALE_FULL.json"),
       results.toSeq.map { case (k, v) =>
-        val stats = v.stripPrefix("{")
-        s"$k@${factor}x" ->
-          s"""{"slices":$slices,"base":"$base",$stats""" })
+        s"$k@${factor}x" -> Bench.json.writeValueAsString(
+          ListMap("slices" -> slices, "base" -> base) ++ v) })
     spark.stop()
   }
 }

@@ -5,24 +5,15 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // SPARK_GRAFT_ONLY=q37_bloom_join,q1_pricing_summary dumps a subset —
+    // same knob as Bench, for local iteration.
+    val queries = SparkEntry.queries
+    val names = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"), queries.keys)
     val spark = GraftSession.start()
     val clearBlocks = GraftSession.blockCleaner(spark)
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q37_bloom_join,q1_pricing_summary dumps a subset —
-    // same knob as Bench; the driver never sets it, local iteration does.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd name must fail fast, not silently dump zero queries
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown SPARK_GRAFT_ONLY queries: ${unknown.mkString(",")}")
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    names.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -31,21 +22,14 @@ object Verify {
         // 73 dumps would otherwise accumulate dead blocks for the whole run
         clearBlocks()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql))
     spark.stop()
   }
+
+  /** `oracle_sql.json`: query name → DuckDB SQL, every string escaped by
+    * the harness's one JSON writer (a tab or CR in the SQL must never make
+    * the checker's json.load fail). */
+  def oracleJson(sql: Map[String, String]): String =
+    Bench.json.writeValueAsString(scala.collection.immutable.TreeMap.from(sql))
 }

@@ -10,8 +10,9 @@ import graft.listen.Hw4EventLogListener
   *   Main JOB_NAME NUM_REDUCER DELAY INPUT_FILENAME CHUNK_SIZE LOCALITY_CONFIG_FILENAME OUTPUT_DIR
   * }}}
   *
-  * plus an optional trailing `--fidelity-partitioner` flag (first-char
-  * partitioning, hw4.cc:479, for replication experiments).
+  * plus optional trailing flags for replication experiments:
+  * `--fidelity-partitioner` (first-char partitioning, hw4.cc:479) and
+  * `--fidelity-tokenizer`. Any other trailing argument is a usage error.
   *
   * `DELAY` is dead in the reference (the sleep is commented out,
   * hw4.cc:235-240) and `LOCALITY_CONFIG_FILENAME` is scheduler input that
@@ -25,10 +26,13 @@ import graft.listen.Hw4EventLogListener
   * grammar of [[graft.listen.Hw4EventLogListener]].
   */
 object Main {
+  private val Flags = Seq("--fidelity-partitioner", "--fidelity-tokenizer")
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 7,
+    val extra = args.drop(7)
+    require(args.length >= 7 && extra.forall(Flags.contains),
       "usage: Main JOB_NAME NUM_REDUCER DELAY INPUT_FILENAME CHUNK_SIZE " +
-        "LOCALITY_CONFIG_FILENAME OUTPUT_DIR [--fidelity-partitioner]")
+        "LOCALITY_CONFIG_FILENAME OUTPUT_DIR " + Flags.mkString("[", "] [", "]"))
     val cfg = WordCountJob.Config(
       jobName = args(0),
       numReducer = args(1).toInt,
@@ -37,8 +41,8 @@ object Main {
       chunkSize = args(4).toInt,
       localityConfigPath = args(5),
       outputDir = args(6),
-      fidelityPartitioner = args.contains("--fidelity-partitioner"),
-      fidelityTokenizer = args.contains("--fidelity-tokenizer"))
+      fidelityPartitioner = extra.contains("--fidelity-partitioner"),
+      fidelityTokenizer = extra.contains("--fidelity-tokenizer"))
 
     val cpus = GraftSession.cpus
     val spark = GraftSession.start(GraftSession.builder(cpus).appName(cfg.jobName))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.GraftCkpt
+import graft.{GraftCkpt, TempRoot}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -25,30 +25,6 @@ object TextOps {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
-
-  /** t33/t35's JSONL staging root — ONE per JVM (ADVICE r4's temp-dir
-    * discipline: a bench session runs each query 4×; fresh dirs per call
-    * would leak a corpus copy each run). */
-  private lazy val jsonlStageRoot: java.io.File = {
-    val d = java.nio.file.Files.createTempDirectory("graft-jsonl").toFile
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(d)
-    }
-    d
-  }
-
-  /** Per-(corpus dir, tag) staging subdir: keying by the input dir keeps a
-    * still-held lazy reader valid when another scale factor is staged in
-    * the same JVM — a shared overwrite-mode dir would silently swap what
-    * it reads (ADVICE r12). */
-  private def jsonlStage(dir: String, tag: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    new java.io.File(jsonlStageRoot, s"$tag-$key").getAbsolutePath
-  }
 
   /** t33/t35's shared oracle: the same normalization over the parquet twin
     * of the staged JSONL — lossless round trip for long/string columns, so
@@ -1538,7 +1514,7 @@ object TextOps {
     // is splittable line-format (partition-parallel like any text
     // source); the normalization is one codegen'd projection, no shuffle.
     "t33_jsonl_ingest" -> { (s, dir) =>
-      val stage = jsonlStage(dir, "t33")
+      val stage = TempRoot.stageDir(dir, "t33")
       docs(s, dir).write.mode("overwrite").json(stage)
       crawlNormalize(s.read.schema(crawlSchema).json(stage))
     },
@@ -1556,7 +1532,7 @@ object TextOps {
     // compression must be invisible to semantics, and the shared hash
     // gate is that proof.
     "t35_jsonl_gzip_ingest" -> { (s, dir) =>
-      val stage = jsonlStage(dir, "t35")
+      val stage = TempRoot.stageDir(dir, "t35")
       docs(s, dir).write.mode("overwrite")
         .option("compression", "gzip").json(stage)
       crawlNormalize(s.read.schema(crawlSchema).json(stage))
@@ -1577,7 +1553,7 @@ object TextOps {
     // newlines would break that — the writer never emits them here);
     // normalization is the same single codegen'd projection.
     "t37_csv_ingest" -> { (s, dir) =>
-      val stage = jsonlStage(dir, "t37")
+      val stage = TempRoot.stageDir(dir, "t37")
       docs(s, dir).write.mode("overwrite")
         .option("header", "true").option("quoteAll", "true")
         .csv(stage)
@@ -1600,7 +1576,7 @@ object TextOps {
     // stays one codegen'd projection — the scan-side economics of the
     // parquet path, unchanged.
     "t40_orc_ingest" -> { (s, dir) =>
-      val stage = jsonlStage(dir, "t40")
+      val stage = TempRoot.stageDir(dir, "t40")
       docs(s, dir).write.mode("overwrite").orc(stage)
       crawlNormalize(s.read.schema(crawlSchema).orc(stage))
     },
@@ -1622,7 +1598,7 @@ object TextOps {
     // pruned read is file-listing-proportional to the SELECTED partition
     // only.
     "t41_partitioned_ingest" -> { (s, dir) =>
-      val stage = jsonlStage(dir, "t41")
+      val stage = TempRoot.stageDir(dir, "t41")
       docs(s, dir).write.mode("overwrite")
         .partitionBy("lang").parquet(stage)
       crawlNormalize(
@@ -1691,7 +1667,7 @@ object TextOps {
     // scan, classification is one codegen'd projection, the readout a
     // |gens|-row agg.
     "t43_schema_evolution_audit" -> { (s, dir) =>
-      val stage = jsonlStage(dir, "t43")
+      val stage = TempRoot.stageDir(dir, "t43")
       val d = docs(s, dir)
       d.filter(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
@@ -1803,7 +1779,7 @@ object TextOps {
     // splittable, from_json is one codegen'd projection, and the audit is
     // a single partial+final aggregate — no shuffle wider than 1 row.
     "t38_malformed_audit" -> { (s, dir) =>
-      val stage = jsonlStage(dir, "t38")
+      val stage = TempRoot.stageDir(dir, "t38")
       docs(s, dir)
         .withColumn("js", to_json(struct(col("doc_id"), col("text"),
           col("lang"), col("source"), col("n_chars"))))
@@ -1844,7 +1820,7 @@ object TextOps {
     // (splittable text scan, one codegen'd from_csv projection, 1-row
     // aggregate).
     "t39_csv_malformed_audit" -> { (s, dir) =>
-      val stage = jsonlStage(dir, "t39")
+      val stage = TempRoot.stageDir(dir, "t39")
       docs(s, dir)
         .withColumn("cs", to_csv(struct(col("doc_id"), col("text"),
           col("lang"), col("source"), col("n_chars")),

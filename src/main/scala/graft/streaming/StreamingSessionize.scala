@@ -33,7 +33,7 @@ object StreamingSessionize {
   /** events.parquet raw schema: ts is no-tz TIMESTAMP(MICROS), declared
     * TIMESTAMP_NTZ here and cast to session-tz TimestampType (UTC) after the
     * scan (see Tables.load for the matching batch-side normalization). */
-  private val rawSchema = StructType(Seq(
+  private[graft] val rawSchema = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", TimestampNTZType),
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType), StructField("props", StringType)))
@@ -1172,23 +1172,9 @@ object StreamingSessionize {
     * replays it — the unit under test is malformed PAYLOAD handling
     * in-stream (the message-queue arrival shape, where each record carries
     * an opaque line), not the text container t38 already gates. Keyed per
-    * corpus dir like TextOps' staging (a shared overwrite dir would
-    * silently swap under a still-held reader when another SF stages). */
-  private lazy val malformedStageRoot: java.io.File = {
-    val d = Files.createTempDirectory("graft-x32-stage").toFile
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(d)
-    }
-    d
-  }
-
+    * corpus dir under [[graft.TempRoot]], like TextOps' staging. */
   private def malformedStage(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val stage = new java.io.File(malformedStageRoot, key).getAbsolutePath
+    val stage = graft.TempRoot.stageDir(dir, "x32")
     graft.sources.Tables.load(s, dir, "documents")
       .withColumn("js", to_json(struct(col("doc_id"), col("text"),
         col("lang"), col("source"), col("n_chars"))))
@@ -1204,9 +1190,7 @@ object StreamingSessionize {
     * — the same rule the shared oracle restates, keyed beside x32's stage
     * so the two hostile-input streams never collide. */
   private def unicodeStage(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val stage = new java.io.File(malformedStageRoot, key + "-u").getAbsolutePath
+    val stage = graft.TempRoot.stageDir(dir, "x34")
     graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         when(col("doc_id") % 13 === 5,
@@ -1225,9 +1209,7 @@ object StreamingSessionize {
     * surfaces it, and the audit's all-null-drift tiebreak needs it —
     * ADVICE r15). Keyed beside x32/x34's stages. */
   private def schemaDriftStage(s: SparkSession, dir: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val stage = new java.io.File(malformedStageRoot, key + "-d")
+    val stage = new java.io.File(graft.TempRoot.stageDir(dir, "x35"))
     stage.mkdirs()
     val d = graft.sources.Tables.load(s, dir, "documents")
     def writeGen(df: org.apache.spark.sql.DataFrame, g: Int): Unit = {

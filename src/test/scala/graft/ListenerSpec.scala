@@ -11,8 +11,8 @@ import graft.listen.Hw4EventLogListener
 
 /** Validates the event-log CSV grammar against hw4.cc:84-203 (SURVEY.md §5
   * item 5): schema per event, Start_Job first, Finish_Job last, dispatch
-  * precedes completion per (kind, taskid) — with AQE on AND off, and with
-  * the private shuffleDepId API simulated away (job-topology fallback). */
+  * precedes completion per (kind, taskid) — with AQE on AND off — and that
+  * the shuffleDepId probe the stage classifier relies on answers live. */
 class ListenerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -98,35 +98,15 @@ class ListenerSpec extends AnyFunSuite {
     checkGrammar(runWithListener("lstnoaqe", aqe = false, new Hw4EventLogListener(_, 4)))
   }
 
-  test("classifier survives the shuffleDepId API shifting (topology fallback)") {
-    // simulate a future Spark where the private API is gone: the listener
-    // must fall back to job topology, not classify every stage one way.
-    // Topology ("a later stage exists in the job") is exact for multi-stage
-    // job DAGs, i.e. with AQE off — under AQE each shuffle stage is its own
-    // single-stage job, where only the shuffleDepId probe can tell (and that
-    // path is covered by the AQE-on grammar test above).
-    val mk = (cfg: WordCountJob.Config) => new Hw4EventLogListener(cfg, 4) {
-      override protected def shuffleMapViaApi(info: StageInfo): Option[Boolean] = None
-      // label the EXPECTED warning so a suite-log reader can tell it from a
-      // real Spark API change (VERDICT r13 read the unlabeled print as a
-      // live drift signal)
-      override protected def warnFallback(): Unit =
-        Console.err.println("[Hw4EventLogListener] INFO: job-topology " +
-          "fallback engaged (shuffleDepId SIMULATED away by ListenerSpec)")
-    }
-    checkGrammar(runWithListener("lstnorefl", aqe = false, mk))
-  }
-
   test("the exact shuffleDepId probe IS available on this Spark (no real-run fallback)") {
-    // VERDICT r13 item 4: prove the production path never falls back on the
-    // pinned Spark version — every live StageInfo answers the reflective
-    // probe, and the job exhibits both answers (a shuffle-writing map stage
-    // and a result stage), so the warning in the suite log can only ever
-    // come from the simulation test above.
-    val probed = new java.util.concurrent.ConcurrentLinkedQueue[Option[Boolean]]()
+    // VERDICT r13 item 4: the listener resolves shuffleDepId at construction
+    // and fails there without it; here every live StageInfo answers the
+    // reflective probe, and the job exhibits both answers (a
+    // shuffle-writing map stage and a result stage).
+    val probed = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
     val mk = (cfg: WordCountJob.Config) => new Hw4EventLogListener(cfg, 4) {
-      override protected def shuffleMapViaApi(info: StageInfo): Option[Boolean] = {
-        val r = super.shuffleMapViaApi(info)
+      override protected def writesShuffle(info: StageInfo): Boolean = {
+        val r = super.writesShuffle(info)
         probed.add(r)
         r
       }
@@ -134,35 +114,7 @@ class ListenerSpec extends AnyFunSuite {
     checkGrammar(runWithListener("lstprobe", aqe = false, mk))
     val results = probed.asScala.toSeq
     assert(results.nonEmpty, "test premise: some stage must have been probed")
-    assert(results.forall(_.isDefined),
-      s"shuffleDepId probe failed on a live StageInfo: $results — Spark API shifted")
-    assert(results.contains(Some(true)) && results.contains(Some(false)),
+    assert(results.contains(true) && results.contains(false),
       s"expected both map and result stages to be probed, got: $results")
-  }
-
-  test("topology fallback under AQE: pinned (inexact) all-reduce classification") {
-    // VERDICT r13 item 4, second half: pin the fallback's DOCUMENTED
-    // behavior under AQE re-planning so log parity can't silently drift.
-    // Under AQE each materialized shuffle stage runs as its own Spark job,
-    // so "the job's last stage" is every job's ONLY stage → the fallback
-    // classifies every task as a reduce task. That inexactness is the
-    // scaladoc'd contract ("exact only with AQE off"); this test asserts
-    // the degenerate shape stays exactly that — structurally valid log,
-    // zero map lines — rather than mutating into something new.
-    val mk = (cfg: WordCountJob.Config) => new Hw4EventLogListener(cfg, 4) {
-      override protected def shuffleMapViaApi(info: StageInfo): Option[Boolean] = None
-      override protected def warnFallback(): Unit =
-        Console.err.println("[Hw4EventLogListener] INFO: job-topology " +
-          "fallback engaged (shuffleDepId SIMULATED away by ListenerSpec)")
-    }
-    val lines = runWithListener("lstaqefb", aqe = true, mk)
-    val events = lines.map(_.split(",", -1))
-    assert(events.head(1) == "Start_Job")
-    assert(events.last(1) == "Finish_Job")
-    val kinds = events.map(_(1)).toSet
-    assert(!kinds.contains("Dispatch_MapTask") && !kinds.contains("Complete_MapTask"),
-      s"AQE+fallback classification drifted — map lines appeared: $kinds")
-    assert(kinds.contains("Complete_ReduceTask"),
-      s"AQE+fallback must still log the (all-reduce) task stream: $kinds")
   }
 }

@@ -88,8 +88,10 @@ object StreamScaleSmoke {
         // order; identity for every single-schema stage
         seq: Int => Int = identity): Unit = {
       val frame = df.withColumn("_cut", cutCol).localCheckpoint()
+      // one slice has no inner boundary (approxQuantile throws on an
+      // empty probability list)
       val qs = (1 until nSlices).map(_.toDouble / nSlices)
-      val bounds = frame.stat
+      val bounds = if (qs.isEmpty) Array.empty[Double] else frame.stat
         .approxQuantile("_cut", qs.toArray, 0.001).distinct.sorted
       val ranges = (Double.MinValue +: bounds) :+ Double.MaxValue
       for (i <- 0 until ranges.length - 1) {

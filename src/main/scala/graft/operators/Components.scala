@@ -1,8 +1,10 @@
 package graft.operators
 
 import graft.GraftCkpt
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed connected components by min-label hooking + graph
   * contraction — the clustering step shared by the text near-dup pipeline
@@ -15,8 +17,8 @@ import org.apache.spark.sql.functions._
   * and self-loops/duplicates dropped, so the graph SHRINKS every round
   * (label-propagation without contraction needs one round per hop of
   * graph diameter over the FULL edge set — measured 18 rounds on the
-  * sf0.1 cosine graph); (3) COMPOSE — the vertex→label map is pushed
-  * through the hook map.
+  * sf0.1 cosine graph); (3) COMPOSE — after the loop, the vertex→label
+  * map is pushed through every round's hook map.
   *
   * Min-hooking contracts by only O(1) per round on a monotonically
   * ordered chain (ids 0-1-2-…-n: each round removes one vertex) — and
@@ -27,15 +29,28 @@ import org.apache.spark.sql.functions._
   * any input layout; the final labels are regrouped to the min ORIGINAL
   * id per component (the scramble is only the loop's internal ordering).
   *
-  * All joins/aggregations stay distributed; only an is-empty probe on the
-  * shrinking edge set crosses the driver per round. `materialize` cuts
-  * the per-round lineage AND resets plan statistics (see its doc). The
-  * 50-round cap is a safety rail; hitting it throws rather than
-  * returning a partial labeling.
+  * The loop pays per round, not per byte, so every state is ONE tagged
+  * checkpoint of fixed-width rows (tag, p, q): the start state holds the
+  * vertex rows and the deduplicated edges from one scan of the input, and
+  * each round's state holds its hook map and its contracted edges. Each
+  * state's row and edge counts are observed (`Dataset.observe`) on the
+  * job that writes it, so no loop decision launches a job of its own.
+  *
+  * Driver finish: once the rows the driver would collect, times the
+  * state's fixed row width, fit `spark.sql.autoBroadcastJoinThreshold`
+  * — Spark's own bound for pulling a relation to the driver to broadcast
+  * it; −1 disables it — the edges are collected and the components
+  * finished with union-find. If the start state fits, the driver emits
+  * the final labels itself; otherwise the union-find result becomes the
+  * last hook map. Larger graphs run distributed rounds only, and
+  * composing the hook maps plus regrouping to original ids is one lazy
+  * plan, materialized once. `materialize` cuts the per-round lineage AND
+  * resets plan statistics (see its doc). The 50-round cap is a safety
+  * rail; hitting it throws rather than returning a partial labeling.
   */
 object Components {
 
-  /** A materialized round state plus the handle needed to free it.
+  /** A materialized state plus the handle needed to free it.
     * `localCheckpoint` blocks live in the block manager until the RDD is
     * unpersisted or the session dies; an iterative loop that never frees
     * superseded rounds leaks one block set per materialize, and a
@@ -44,6 +59,16 @@ object Components {
   private final case class Mat(df: DataFrame, blocks: Seq[org.apache.spark.rdd.RDD[_]]) {
     def free(): Unit = blocks.foreach(_.unpersist(blocking = false))
   }
+
+  // state row tags: a vertex (p = original id, q = scrambled id), an edge
+  // (p < q, both scrambled), a hook (p = super-vertex, q = its target)
+  private val Vert = 0
+  private val Edge = 1
+  private val Hook = 2
+
+  /** Bytes per state row: an UnsafeRow of three fixed-width fields is an
+    * 8-byte null bitset plus 3 × 8 bytes. */
+  private val RowBytes = 32L
 
   /** Materialize a round's state AND break Catalyst stats propagation.
     * `localCheckpoint` alone keeps the origin plan's `sizeInBytes`
@@ -96,13 +121,51 @@ object Components {
     shiftleft(v, 27).bitwiseOR(shiftrightunsigned(v, 37))
       .bitwiseXOR(lit(0x9E3779B97F4A7C15L))
 
+  /** `spark.sql.autoBroadcastJoinThreshold` in bytes; negative = disabled. */
+  private def broadcastThreshold(spark: SparkSession): Long =
+    spark.conf.get("spark.sql.autoBroadcastJoinThreshold").trim match {
+      case s if s.startsWith("-") => -1L
+      case s => org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
+    }
+
+  /** Driver union-find over (x, y) edges: every endpoint → the smallest id
+    * of its component. Iterative finds with path halving, so a long chain
+    * cannot overflow the stack. */
+  private def unionFind(edges: Iterator[(Long, Long)]): collection.Map[Long, Long] = {
+    val parent = collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      var p = parent.getOrElseUpdate(r, r)
+      while (p != r) {
+        val gp = parent(p)
+        parent(r) = gp
+        r = p
+        p = gp
+      }
+      r
+    }
+    edges.foreach { case (x, y) =>
+      val (rx, ry) = (find(x), find(y))
+      if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry)
+    }
+    parent.keys.map(k => k -> find(k)).toMap
+  }
+
   /** edges: two LongType columns (first two), each row one undirected edge.
     * Returns (v, lbl): every vertex appearing in an edge, labeled with the
     * min vertex id reachable from it. Vertices with no edges don't appear
-    * (a singleton's "cluster" is itself — join back if needed). */
+    * (a singleton's "cluster" is itself — join back if needed); a null
+    * endpoint is no vertex, and its edge joins nothing. */
   def minLabel(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
-    val Seq(a, b) = edges.columns.take(2).toSeq.map(col)
+    val Seq(a, b) = edges.columns.take(2).toSeq.map(c => col(c).cast(LongType))
+    val threshold = broadcastThreshold(spark)
+    def fits(rows: Long): Boolean = threshold >= 0 && rows * RowBytes <= threshold
+    /** A driver-side result as a (local, exactly-sized) two-column frame. */
+    def local(rows: Iterable[(Long, Long)], c1: String, c2: String): DataFrame =
+      spark.createDataFrame(
+        java.util.Arrays.asList(rows.map { case (x, y) => Row(x, y) }.toSeq: _*),
+        StructType(Seq(StructField(c1, LongType), StructField(c2, LongType))))
     // The working state is the near-dup pair graph — orders of magnitude
     // smaller than the corpus the session's shuffle.partitions is sized
     // for, and each round pays per-partition scheduling overhead. Pin a
@@ -116,97 +179,128 @@ object Components {
     val live = scala.collection.mutable.Set.empty[Mat]
     def mat(df: DataFrame): Mat = { val x = materialize(df); live += x; x }
     def drop(xs: Mat*): Unit = xs.foreach { x => x.free(); live -= x }
-    val e = mat(edges.select(scramble(a).as("d1"), scramble(b).as("d2"),
-      a.as("o1"), b.as("o2")))
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    /** A tagged state, with its (rows, edges) counted on its own job. */
+    def state(df: DataFrame): (Mat, Long, Long) = {
+      val obs = Observation()
+      val m = mat(df.observe(obs, count(lit(1)).as("rows"),
+        count(when(col("t") === Edge, 1)).as("edges")))
+      val c = obs.get
+      (m, c("rows").asInstanceOf[Long], c("edges").asInstanceOf[Long])
+    }
+    def edgesOf(s: Mat): DataFrame = s.df.filter(col("t") === Edge)
+      .select(col("p").as("x"), col("q").as("y"))
     try {
-      var g = mat(e.df.filter(col("d1") =!= col("d2"))
-        .select(least(col("d1"), col("d2")).as("x"),
-          greatest(col("d1"), col("d2")).as("y"))
+      // One scan of the input yields both vertex rows (a vertex that only
+      // ever appears in self-loops must still be labeled, with itself) and
+      // the deduplicated non-self-loop edges. Built at the session's
+      // partition count: the input's own plan runs inside this job.
+      val (sa, sb) = (scramble(a), scramble(b))
+      val (start, startRows, startEdges) = state(edges
+        .select(inline(array(
+          struct(lit(Vert).as("t"), a.as("p"), sa.as("q")),
+          struct(lit(Vert).as("t"), b.as("p"), sb.as("q")),
+          struct(lit(Edge).as("t"), least(sa, sb).as("p"), greatest(sa, sb).as("q")))))
+        .filter((col("t") === Vert && col("p").isNotNull) ||
+          (col("t") === Edge && col("p") < col("q")))
         .distinct())
-      // vertex set from e, NOT g: a vertex appearing only in self-loop
-      // edges must still be labeled (with itself), per the contract above.
-      // `v` is the original id, `lbl` lives in the scrambled space until
-      // the final regroup.
-      val verts = mat(
-        e.df.select(col("o1").as("v"), col("d1").as("lbl"))
-          .union(e.df.select(col("o2").as("v"), col("d2").as("lbl")))
-          .distinct())
-      drop(e) // consumed by the (eager) g/verts materializations above
-      def nbr(gd: DataFrame): DataFrame =
-        gd.select(col("x").as("sv"), col("y").as("nl"))
-          .union(gd.select(col("y").as("sv"), col("x").as("nl")))
-      // Per-round hook maps, composed ONCE after the loop (OPTIMIZATION
-      // r17): the previous shape pushed the FULL vertex→label mapping
-      // through every round's hook map — a vertex-sized join plus a
-      // vertex-sized checkpoint per round, O(V·rounds) total. The hook
-      // maps themselves shrink geometrically with the contracting graph
-      // and their domains NEST (dom(m_{i+1}) = the contracted vertex set
-      // ⊆ dom(m_i)), so composing them right-to-left with the same
-      // left-join+coalesce costs O(Σ|m_i|) = O(V) once, and the full
-      // vertex table is touched exactly once at the end. Labels that
-      // never enter round 1's domain (self-loop-only vertices) fall
-      // through every coalesce unchanged — identical semantics.
-      val hooks = scala.collection.mutable.ListBuffer.empty[Mat]
-      var iter = 0
-      while (g.df.head(1).nonEmpty) {
-        if (iter >= 50)
-          throw new IllegalStateException(
-            s"connected components did not converge in $iter rounds")
-        // hook: min of self and neighbors, per super-vertex still in play;
-        // then ONE pointer-doubling pass (m ∘ m) — the composed target is
-        // still a reachable, no-larger representative, and following two
-        // hops per round roughly halves the rounds to convergence for one
-        // extra join on the (shrinking) hook map, never on the edge set
-        val m1 = nbr(g.df).groupBy("sv").agg(min("nl").as("mn"))
-          .select(col("sv"), least(col("sv"), col("mn")).as("m"))
-        val m = mat(m1
-          .join(m1.select(col("sv").as("m"), col("m").as("mm")), Seq("m"), "left")
-          .select(col("sv"), coalesce(col("mm"), col("m")).as("m")))
-        // contract: rewrite edges through the hook map, drop self-loops
-        val g1 = mat(g.df
-          .join(m.df.select(col("sv").as("x"), col("m").as("mx")), "x")
-          .join(m.df.select(col("sv").as("y"), col("m").as("my")), "y")
-          .filter(col("mx") =!= col("my"))
-          .select(least(col("mx"), col("my")).as("x"),
-            greatest(col("mx"), col("my")).as("y"))
-          .distinct())
-        // the superseded round's edge blocks are dead weight; the hook
-        // map stays live until the end-of-loop composition reads it
-        drop(g)
-        hooks += m
-        g = g1
-        iter += 1
-      }
-      // T = f_k ∘ … ∘ f_1 where f_i(x) = m_i(x) if defined else x:
-      // fold right-to-left, each step a join of two (shrinking, already
-      // checkpointed) hook maps — one lazy plan, materialized once.
-      val total = hooks.toList.reverse match {
-        case Nil => None
-        case last :: rest =>
-          val composed = rest.foldLeft(last.df) { (t, mi) =>
-            mi.df.join(t.select(col("sv").as("m"), col("m").as("tm")),
-              Seq("m"), "left")
-              .select(col("sv"), coalesce(col("tm"), col("m")).as("m"))
+      if (fits(startRows)) {
+        // the whole graph fits the driver: it labels every vertex itself
+        val rows = start.df.collect()
+        drop(start)
+        val root = unionFind(rows.iterator.filter(_.getInt(0) == Edge)
+          .map(r => (r.getLong(1), r.getLong(2))))
+        val verts = rows.filter(_.getInt(0) == Vert)
+          .map(r => (r.getLong(1), root.getOrElse(r.getLong(2), r.getLong(2))))
+        val cluster = verts.groupMapReduce(_._2)(_._1)(math.min)
+        local(verts.map { case (v, c) => (v, cluster(c)) }, "v", "lbl")
+      } else {
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        def nbr(gd: DataFrame): DataFrame =
+          gd.select(col("x").as("sv"), col("y").as("nl"))
+            .union(gd.select(col("y").as("sv"), col("x").as("nl")))
+        // Per-round hook maps, composed ONCE after the loop (OPTIMIZATION
+        // r17): the previous shape pushed the FULL vertex→label mapping
+        // through every round's hook map — a vertex-sized join plus a
+        // vertex-sized checkpoint per round, O(V·rounds) total. The hook
+        // maps themselves shrink geometrically with the contracting graph
+        // and their domains NEST (dom(m_{i+1}) = the contracted vertex set
+        // ⊆ dom(m_i)), so composing them right-to-left with the same
+        // left-join+coalesce costs O(Σ|m_i|) = O(V) once, and the full
+        // vertex table is touched exactly once at the end. Labels that
+        // never enter round 1's domain (self-loop-only vertices) fall
+        // through every coalesce unchanged — identical semantics. A round
+        // state stays live until that composition reads its hook rows.
+        val rounds = scala.collection.mutable.ListBuffer.empty[Mat]
+        val hooks = scala.collection.mutable.ListBuffer.empty[DataFrame]
+        var cur = start
+        var nEdges = startEdges
+        while (nEdges > 0) {
+          if (fits(nEdges)) {
+            // the rest of the graph fits the driver: finish it there and let
+            // the union-find result be the last hook map
+            val root = unionFind(edgesOf(cur).collect().iterator
+              .map(r => (r.getLong(0), r.getLong(1))))
+            hooks += local(root, "sv", "m")
+            nEdges = 0
+          } else {
+            if (rounds.size >= 50)
+              throw new IllegalStateException(
+                s"connected components did not converge in ${rounds.size} rounds")
+            val g = edgesOf(cur)
+            // hook: min of self and neighbors, per super-vertex still in
+            // play; then ONE pointer-doubling pass (m ∘ m) — the composed
+            // target is still a reachable, no-larger representative, and
+            // following two hops per round roughly halves the rounds to
+            // convergence for one extra join on the (shrinking) hook map,
+            // never on the edge set
+            val m1 = nbr(g).groupBy("sv").agg(min("nl").as("mn"))
+              .select(col("sv"), least(col("sv"), col("mn")).as("m"))
+            val m = m1
+              .join(m1.select(col("sv").as("m"), col("m").as("mm")), Seq("m"), "left")
+              .select(col("sv"), coalesce(col("mm"), col("m")).as("m"))
+            // contract: rewrite edges through the hook map, drop self-loops
+            val g1 = g
+              .join(m.select(col("sv").as("x"), col("m").as("mx")), "x")
+              .join(m.select(col("sv").as("y"), col("m").as("my")), "y")
+              .filter(col("mx") =!= col("my"))
+              .select(least(col("mx"), col("my")).as("x"),
+                greatest(col("mx"), col("my")).as("y"))
+              .distinct()
+            val (next, _, e1) = state(
+              m.select(lit(Hook).as("t"), col("sv").as("p"), col("m").as("q"))
+                .union(g1.select(lit(Edge).as("t"), col("x").as("p"), col("y").as("q"))))
+            rounds += next
+            hooks += next.df.filter(col("t") === Hook)
+              .select(col("p").as("sv"), col("q").as("m"))
+            cur = next
+            nEdges = e1
           }
-          Some(mat(composed))
+        }
+        // T = f_k ∘ … ∘ f_1 where f_i(x) = m_i(x) if defined else x: fold
+        // right-to-left, each step a join of two (shrinking) hook maps;
+        // then back to original ids — per scrambled component label, the
+        // cluster id is the min ORIGINAL member id. One lazy plan,
+        // materialized once INSIDE the pinned conf (lazy evaluation after
+        // the finally would shuffle this tiny map at the corpus-sized
+        // session partition count).
+        val verts = start.df.filter(col("t") === Vert)
+          .select(col("p").as("v"), col("q").as("lbl"))
+        val mapping = hooks.toList.reverse match {
+          case Nil => verts
+          case last :: rest =>
+            val total = rest.foldLeft(last) { (t, mi) =>
+              mi.join(t.select(col("sv").as("m"), col("m").as("tm")), Seq("m"), "left")
+                .select(col("sv"), coalesce(col("tm"), col("m")).as("m"))
+            }
+            verts.join(total.select(col("sv").as("lbl"), col("m")), Seq("lbl"), "left")
+              .select(col("v"), coalesce(col("m"), col("lbl")).as("lbl"))
+        }
+        val res = mat(mapping.select(col("v"),
+          min("v").over(Window.partitionBy("lbl")).as("lbl")))
+        drop(start :: rounds.toList: _*)
+        live -= res // the result's blocks belong to the caller
+        res.df
       }
-      // back to original ids: per scrambled component label, the cluster
-      // id is the min ORIGINAL member id. Materialized INSIDE the pinned
-      // conf (lazy evaluation after the finally would shuffle this tiny
-      // map at the corpus-sized session partition count).
-      val mapping = total match {
-        case None => verts
-        case Some(tm) => mat(verts.df
-          .join(tm.df.select(col("sv").as("lbl"), col("m")), Seq("lbl"), "left")
-          .select(col("v"), coalesce(col("m"), col("lbl")).as("lbl")))
-      }
-      val clusterOf = mapping.df.groupBy("lbl").agg(min("v").as("cluster"))
-      val res = mat(mapping.df.join(clusterOf, "lbl")
-        .select(col("v"), col("cluster").as("lbl")))
-      drop(verts :: g :: mapping :: (total.toList ++ hooks.toList): _*)
-      live -= res // the result's blocks belong to the caller
-      res.df
     } catch {
       case t: Throwable =>
         live.foreach(_.free())

@@ -119,22 +119,24 @@ object Dedup {
     * hv with or without duplicate hashes: sig_j is a MIN over the affine
     * transforms, and min over a multiset equals min over its support set —
     * so the sorted-distinct hash set (hashSets) is a valid hv source too
-    * (d9 exploits this to derive signatures from one shared projection). */
-  private def sigsFromHv(base: DataFrame): DataFrame =
-    base.select(col("doc_id") +: sigCols(col("hv")): _*)
-
-  /** The 16 affine signature columns over a bound hash-array column —
-    * exposed as reusable expressions so the streaming twin (x12) can carry
-    * extra columns (its hash set) through the signature projection.
+    * (d9 exploits this to derive signatures from one shared projection).
+    * `keep` names the base columns carried through (the streaming twin,
+    * x12, keeps its hash set).
+    *
     * OPTIMIZATION r18: one fused [[graft.functions.AffineMinSigs]] pass
-    * (codegen'd, whole-stage subexpression-eliminated across the 16
-    * columns) replaces 16 interpreted `array_min(transform(...))`
+    * (codegen'd) replaces 16 interpreted `array_min(transform(...))`
     * higher-order evaluations per row; identical values and null behavior
-    * (no shingles → every s_j NULL), pinned in ShingleHashSpec. */
-  private[graft] def sigCols(hv: Column): Seq[Column] = {
-    val sigs = graft.functions.ShingleHash32.sigs(hv)
-    (0 until numHashes).map(j => element_at(sigs, j + 1).as(s"s$j"))
-  }
+    * (no shingles → every s_j NULL), pinned in ShingleHashSpec. The array
+    * is projected ONCE under an alias and the 16 columns are `element_at`
+    * over that alias; CollapseProject keeps the two Projects apart because
+    * the alias is referenced more than once and is not cheap to recompute,
+    * so each plan spells `affine_min_sigs` once. */
+  private[graft] def sigsFromHv(base: DataFrame,
+      keep: Seq[String] = Seq("doc_id")): DataFrame =
+    base.select(keep.map(col) :+
+        graft.functions.ShingleHash32.sigs(col("hv")).as("sigs"): _*)
+      .select(keep.map(col) ++ (0 until numHashes).map(j =>
+        element_at(col("sigs"), j + 1).as(s"s$j")): _*)
 
   /** doc_id → (doc_id, s0..s15 bigint) signature frame: a narrow per-doc
     * projection (no shuffle). One fused codegen pass per row builds the

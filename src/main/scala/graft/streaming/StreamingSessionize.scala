@@ -1409,12 +1409,11 @@ object StreamingSessionize {
           .graftCkpt()
     }
     stream => {
-      val withBands = stream.filter(col("doc_id") % 10 === 7)
-        .select(col("doc_id"),
-          graft.functions.ShingleHash32.set(col("text")).as("hv"))
-        .select(col("doc_id") +: col("hv").as("hs1") +:
-          Dedup.sigCols(col("hv")): _*)
-        .select(col("doc_id"), col("hs1"),
+      val withBands = Dedup.sigsFromHv(stream.filter(col("doc_id") % 10 === 7)
+          .select(col("doc_id"),
+            graft.functions.ShingleHash32.set(col("text")).as("hv")),
+          Seq("doc_id", "hv"))
+        .select(col("doc_id"), col("hv").as("hs1"),
           explode_outer(Dedup.bandKeys).as("band"))
       withBands.join(okb, Seq("band"), "left")
         .withColumn("ic", graft.functions.IntersectCountSorted

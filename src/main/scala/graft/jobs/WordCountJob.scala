@@ -7,6 +7,8 @@ import org.apache.spark.Partitioner
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.WhitespaceTokens.whitespaceTokens
+
 /** The reference engine's one job — WordCount — end-to-end, Spark-first.
   *
   * Reference contract (hw4.cc:42-49 CLI; hw4.cc:350-357 output): read a
@@ -15,19 +17,20 @@ import org.apache.spark.sql.functions._
   * `word count`, each file internally sorted ascending by word.
   *
   * Spark-first re-expression (SURVEY.md §7 build order 1):
-  * `textFile → explode(split) → filter(nonEmpty) → groupBy.count` — the
-  * tokenizer (hw4.cc:457-466), map_func (hw4.cc:468-474), group
-  * (hw4.cc:369-382) and red (hw4.cc:359-367) all fuse into one narrow stage +
-  * one partial/final hash aggregate (the map-side combiner the reference
-  * lacks). The sink is `repartitionByRange(R, word) → sortWithinPartitions`,
-  * which achieves the balanced, alphabetically contiguous output files the
-  * reference report aimed for and missed (SURVEY.md quirk 7) — range
-  * partitioning gives both balance and global order across files.
+  * `textFile → explode(whitespace_tokens) → groupBy.count` — the tokenizer
+  * (hw4.cc:457-466, the native [[graft.functions.WhitespaceTokens]] byte
+  * scan), map_func (hw4.cc:468-474), group (hw4.cc:369-382) and red
+  * (hw4.cc:359-367) all fuse into one narrow stage + one partial/final hash
+  * aggregate (the map-side combiner the reference lacks). The sink is
+  * `repartitionByRange(R, word) → sortWithinPartitions`, which achieves the
+  * balanced, alphabetically contiguous output files the reference report
+  * aimed for and missed (SURVEY.md quirk 7) — range partitioning gives both
+  * balance and global order across files.
   *
   * Fidelity mode reproduces the reference's actual partition function
   * `int(word[0]) % R` (hw4.cc:476-487) on the RDD path with a custom
-  * [[org.apache.spark.Partitioner]] — the one operator Spark's declarative
-  * API can't express (partition-BY-computed-id, not by key hash).
+  * [[org.apache.spark.Partitioner]] (partition by computed id, not by key
+  * hash).
   *
   * Scale posture: the aggregate is partial+final (shuffle carries distinct
   * words only); the range exchange samples keys (AQE-safe: explicit N is
@@ -61,11 +64,10 @@ object WordCountJob {
   }
 
   /** Word counts as a DataFrame (word: string, count: bigint) — the logical
-    * core, shared by the CLI job and the correctness-gate query. */
+    * core of [[run]]. */
   def counts(spark: SparkSession, inputPath: String): DataFrame =
     spark.read.textFile(inputPath)
-      .select(explode(split(col("value"), "\\s+")).as("word"))
-      .filter(col("word") =!= "")
+      .select(explode(whitespaceTokens(col("value"))).as("word"))
       .groupBy("word")
       .agg(count(lit(1)).as("count"))
 
@@ -118,6 +120,13 @@ object WordCountJob {
       .agg(count(lit(1)).as("count"))
   }
 
+  /** Codegen's first-level aggregate map: 2^16 slots in front of the
+    * `BytesToBytesMap`. A corpus with more distinct words than that (the
+    * Zipf benchmark corpus has ~176k) overflows it, and every later lookup
+    * pays a failed probe there before the real map, so [[run]] turns it off
+    * while it writes. */
+  private val TwoLevelAggMap = "spark.sql.codegen.aggregate.map.twolevel.enabled"
+
   /** Run end-to-end: compute counts, write R sorted text files, rename to the
     * reference's `<job>-<r>.out` contract. Returns the final file paths. */
   def run(spark: SparkSession, cfg: Config): Seq[Path] = {
@@ -125,21 +134,34 @@ object WordCountJob {
     Files.createDirectories(out)
     val staging = out.resolve(s".${cfg.jobName}-staging")
 
-    val c =
-      if (cfg.fidelityTokenizer) fidelityCounts(spark, cfg.inputPath, cfg.chunkSize)
-      else counts(spark, cfg.inputPath)
-    if (cfg.fidelityPartitioner) {
-      // RDD path: partition BY computed reducer id (hw4.cc:479), sort within.
-      c.rdd.map(r => (r.getString(0), r.getLong(1)))
-        .repartitionAndSortWithinPartitions(new FirstCharPartitioner(cfg.numReducer))
-        .map { case (w, n) => s"$w $n" }
-        .saveAsTextFile(staging.toString)
-    } else {
-      // Intended semantics: range partition → balanced + globally contiguous.
-      c.repartitionByRange(cfg.numReducer, col("word"))
-        .sortWithinPartitions("word")
-        .select(concat_ws(" ", col("word"), col("count")))
-        .write.mode("overwrite").text(staging.toString)
+    // The session conf is restored (set or unset) however the job ends;
+    // getAll holds only keys set on the session (getOption would report the
+    // default for an unset key).
+    val prevTwoLevel = spark.conf.getAll.get(TwoLevelAggMap)
+    spark.conf.set(TwoLevelAggMap, "false")
+    try {
+      val c =
+        if (cfg.fidelityTokenizer) fidelityCounts(spark, cfg.inputPath, cfg.chunkSize)
+        else counts(spark, cfg.inputPath)
+      if (cfg.fidelityPartitioner) {
+        // RDD path: partition BY computed reducer id (hw4.cc:479), sort within.
+        c.rdd.map(r => (r.getString(0), r.getLong(1)))
+          .repartitionAndSortWithinPartitions(new FirstCharPartitioner(cfg.numReducer))
+          .map { case (w, n) => s"$w $n" }
+          .saveAsTextFile(staging.toString)
+      } else {
+        // Intended semantics: range partition → balanced + globally contiguous.
+        // maxRecordsPerFile=0 overrides a session-level cap: one file per
+        // reducer is the contract rename() relies on.
+        c.repartitionByRange(cfg.numReducer, col("word"))
+          .sortWithinPartitions("word")
+          .select(concat_ws(" ", col("word"), col("count")))
+          .write.mode("overwrite").option("maxRecordsPerFile", 0L)
+          .text(staging.toString)
+      }
+    } finally prevTwoLevel match {
+      case Some(v) => spark.conf.set(TwoLevelAggMap, v)
+      case None    => spark.conf.unset(TwoLevelAggMap)
     }
     rename(staging, out, cfg.jobName, cfg.numReducer)
   }
@@ -152,9 +174,11 @@ object WordCountJob {
       stream.iterator().asScala
         .filter(_.getFileName.toString.startsWith("part-")).toSeq
     }
-    val byIdx = parts.map { p =>
-      p.getFileName.toString.split("-")(1).toInt -> p
-    }.toMap
+    val byIdx = parts.groupBy(_.getFileName.toString.split("-")(1).toInt).map {
+      case (i, Seq(p)) => i -> p
+      case (i, ps) => throw new IllegalStateException(
+        s"reducer $i wrote ${ps.size} files; expected one: ${ps.map(_.getFileName).mkString(", ")}")
+    }
     val targets = (0 until r).map { i =>
       val target = out.resolve(s"$job-${i + 1}.out")
       byIdx.get(i) match {

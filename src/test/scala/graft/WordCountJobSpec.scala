@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.execution.FilterExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.jobs.WordCountJob
@@ -36,6 +38,17 @@ class WordCountJobSpec extends AnyFunSuite {
       jobName = "t", numReducer = r, delay = 0, inputPath = in.toString,
       chunkSize = chunkSize, localityConfigPath = "unused", outputDir = out.toString,
       fidelityPartitioner = fidelity, fidelityTokenizer = fidelityTok))
+  }
+
+  /** Runs `body`, then puts `key` back as the session had it: set to its
+    * old value, or unset. `getAll` holds only the keys set on the session
+    * (`getOption` would report the default for an unset key). */
+  private def restoringConf(key: String)(body: => Unit): Unit = {
+    val prev = spark.conf.getAll.get(key)
+    try body finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
   }
 
   private def parse(files: Seq[Path]): Seq[(String, Long)] =
@@ -136,5 +149,50 @@ class WordCountJobSpec extends AnyFunSuite {
     val files = runJob("aa bb\ncc dd\nee", 3, fidelity = true, fidelityTok = true)
     val perFile = files.map(f => Files.readAllLines(f).asScala.toSeq)
     assert(perFile == Seq(Seq(), Seq("aa 1"), Seq("bbcc 1")))
+  }
+
+  test("maxRecordsPerFile does not split a reducer's output (no word is lost)") {
+    // a session-level cap would make one reducer write several part files;
+    // the job's writer option overrides it, so every word reaches t-<r>.out
+    restoringConf("spark.sql.files.maxRecordsPerFile") {
+      spark.conf.set("spark.sql.files.maxRecordsPerFile", "2")
+      val files = runJob("a b c d e f g h a b", 2)
+      assert(files.map(_.getFileName.toString) == Seq("t-1.out", "t-2.out"))
+      assert(parse(files).toMap ==
+        Map("a" -> 2L, "b" -> 2L, "c" -> 1L, "d" -> 1L, "e" -> 1L, "f" -> 1L, "g" -> 1L, "h" -> 1L))
+    }
+  }
+
+  test("run restores the two-level aggregate map conf, also when it throws") {
+    val key = "spark.sql.codegen.aggregate.map.twolevel.enabled"
+    def explicit: Option[String] = spark.conf.getAll.get(key)
+    def badRun(): Unit = WordCountJob.run(spark, WordCountJob.Config(
+      jobName = "t", numReducer = 1, delay = 0,
+      inputPath = Files.createTempDirectory("wc-missing").resolve("nope.txt").toString,
+      chunkSize = 2, localityConfigPath = "unused",
+      outputDir = Files.createTempDirectory("wc-out").toString))
+    restoringConf(key) {
+      spark.conf.unset(key)
+      runJob(corpus, 2)
+      assert(explicit.isEmpty, "unset must stay unset")
+      intercept[AnalysisException](badRun())
+      assert(explicit.isEmpty, "unset must stay unset after a failure")
+
+      spark.conf.set(key, "true")
+      runJob(corpus, 2)
+      assert(explicit.contains("true"))
+      intercept[AnalysisException](badRun())
+      assert(explicit.contains("true"))
+    }
+  }
+
+  test("counts plans the native tokenizer: no regex split, no empty-string filter") {
+    val physical = WordCountJob.counts(spark, writeInput(corpus).toString)
+      .queryExecution.sparkPlan
+    val plan = physical.toString
+    assert(plan.contains("whitespace_tokens"), plan)
+    assert(!plan.contains("split("), plan)
+    assert(!plan.contains("\\s+"), plan)
+    assert(physical.collect { case f: FilterExec => f }.isEmpty, plan)
   }
 }

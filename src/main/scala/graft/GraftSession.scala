@@ -2,11 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.io.LocalFs
+
 /** The engine's one session definition. Every main and the shared test
   * session start Spark through [[builder]] (callers add only what is
   * theirs: an `appName`, a warehouse dir), so every number and every oracle
   * bit is produced under the same conf. nanos-timestamp parquet (events) is
   * read as long, set once here rather than order-dependently in a loader.
+  * The `file:` scheme is bound to [[graft.io.LocalFs]] from the first file
+  * access, so no local write starts a child process.
   */
 object GraftSession {
   private val CpusEnv = "SPARK_GRAFT_CPUS"
@@ -31,12 +35,29 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config(LocalFs.impls.map { case (k, v) => s"spark.hadoop.$k" -> v }.toMap)
 
   /** `getOrCreate` plus the engine's log level. */
   def start(b: SparkSession.Builder = builder()): SparkSession = {
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Runs `body` with each `kv` set on the session's conf, then puts every
+    * key back as it was: set to its old value, or unset, also when `body`
+    * throws. `getAll` holds only the keys set on the session (`getOption`
+    * would report the default for an unset key, and restoring that would
+    * leave the key set). */
+  def withConf[T](spark: SparkSession, kv: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll
+    val prev = kv.map { case (k, _) => k -> set.get(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.reverseIterator.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Runs query `name` against `dir` to completion through a noop write.

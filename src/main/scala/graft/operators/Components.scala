@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.GraftCkpt
+import graft.{GraftCkpt, GraftSession}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -168,10 +168,9 @@ object Components {
         StructType(Seq(StructField(c1, LongType), StructField(c2, LongType))))
     // The working state is the near-dup pair graph — orders of magnitude
     // smaller than the corpus the session's shuffle.partitions is sized
-    // for, and each round pays per-partition scheduling overhead. Pin a
-    // small count for the loop and restore after (the streaming harness
-    // pattern; a production job sizes this to its edge volume).
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    // for, and each round pays per-partition scheduling overhead. The
+    // distributed rounds pin a small count, restored after (the streaming
+    // harness pattern; a production job sizes this to its edge volume).
     // every live Mat is tracked so a mid-loop failure (job error, the
     // convergence-cap throw) frees its checkpoint blocks instead of
     // leaking them for the session lifetime — a library caller that
@@ -213,8 +212,7 @@ object Components {
           .map(r => (r.getLong(1), root.getOrElse(r.getLong(2), r.getLong(2))))
         val cluster = verts.groupMapReduce(_._2)(_._1)(math.min)
         local(verts.map { case (v, c) => (v, cluster(c)) }, "v", "lbl")
-      } else {
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
+      } else GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
         def nbr(gd: DataFrame): DataFrame =
           gd.select(col("x").as("sv"), col("y").as("nl"))
             .union(gd.select(col("y").as("sv"), col("x").as("nl")))
@@ -281,7 +279,7 @@ object Components {
         // then back to original ids — per scrambled component label, the
         // cluster id is the min ORIGINAL member id. One lazy plan,
         // materialized once INSIDE the pinned conf (lazy evaluation after
-        // the finally would shuffle this tiny map at the corpus-sized
+        // withConf would shuffle this tiny map at the corpus-sized
         // session partition count).
         val verts = start.df.filter(col("t") === Vert)
           .select(col("p").as("v"), col("q").as("lbl"))
@@ -305,8 +303,6 @@ object Components {
       case t: Throwable =>
         live.foreach(_.free())
         throw t
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     }
   }
 }

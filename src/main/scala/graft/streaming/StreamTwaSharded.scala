@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -200,17 +201,12 @@ object StreamTwaSharded {
     // the ts2 node never leads), and both stages see exactly x25's
     // watermark — stage 2 consumes stage-1 output inside the same batch,
     // so every boundary below the cut has provably arrived.
-    val overrides = Map(
-      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false",
-      "spark.sql.streaming.multipleWatermarkPolicy" -> "max")
-    val prev = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    try StreamingSessionize.runToCompletion(spark, dir, transform,
-      outputMode = "append", sinkName = sinkName,
-      sourceOptions = sourceOptions, sourceGlob = sourceGlob)
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    GraftSession.withConf(spark,
+        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false",
+        "spark.sql.streaming.multipleWatermarkPolicy" -> "max") {
+      StreamingSessionize.runToCompletion(spark, dir, transform,
+        outputMode = "append", sinkName = sinkName,
+        sourceOptions = sourceOptions, sourceGlob = sourceGlob)
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.GraftCkpt
+import graft.{GraftCkpt, GraftSession}
+import graft.io.LocalFs
 import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
@@ -321,17 +322,18 @@ object StreamingSessionize {
       clearSink: Boolean = true): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // A streaming query fixes its state-store layout at start: with the
-    // session's batch-oriented shuffle.partitions (32 on the driver) every
-    // microbatch pays 32 state-store checkpoints for a stream whose state is
-    // tiny — measured 3x harness overhead. Pin a small partition count for
-    // the stream and restore the session conf after (a production job sizes
-    // this to its state volume instead). The restore wraps EVERYTHING from
-    // the pin on — a failure in stream construction, analysis, or start()
-    // must not leave the shared session at 4 partitions.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    // session's batch-oriented shuffle.partitions (one per core, see
+    // GraftSession.builder) every microbatch pays that many state-store
+    // checkpoints for a stream whose state is tiny. Pin a small partition
+    // count for the stream (a production job sizes this to its state volume
+    // instead). The stream also runs with `file:` bound to LocalFs, so its
+    // offset/commit logs, state-store files and sink files fork no process
+    // even in a session GraftSession did not build. withConf restores the
+    // session conf however the run ends: a failure in stream construction,
+    // analysis, or start() must not leave the shared session pinned.
     val out = Sink.dirFor(sinkName, clear = clearSink)
-    try {
+    GraftSession.withConf(spark,
+        LocalFs.sessionBinding :+ ("spark.sql.shuffle.partitions" -> "4"): _*) {
       // sourceOptions lets tests drive MULTI-microbatch replays
       // (maxFilesPerTrigger=1 over several time-ordered files) — the
       // cross-batch state-merge path a one-file replay never exercises
@@ -380,8 +382,6 @@ object StreamingSessionize {
       val wrote = Option(out.listFiles()).exists(_.exists(_.getName.endsWith(".parquet")))
       if (wrote) spark.read.schema(schema).parquet(out.getAbsolutePath)
       else spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     }
   }
 

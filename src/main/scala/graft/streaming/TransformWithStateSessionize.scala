@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor,
@@ -78,17 +79,15 @@ object TransformWithStateSessionize {
     * shuffle-partition pin). */
   def runToCompletion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try StreamingSessionize.runToCompletion(spark, dir, raw =>
-      sessions(
-        raw.withWatermark("ts", "1 hour")
-          .select(col("user_id"), col("ts"),
-            unix_millis(col("ts")).as("ms"), col("value"))
-          .as[Ev]).toDF(),
-      outputMode = "append", sinkName = "tws")
-    finally spark.conf.set(key, prev)
+    GraftSession.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+      StreamingSessionize.runToCompletion(spark, dir, raw =>
+        sessions(
+          raw.withWatermark("ts", "1 hour")
+            .select(col("user_id"), col("ts"),
+              unix_millis(col("ts")).as("ms"), col("value"))
+            .as[Ev]).toDF(),
+        outputMode = "append", sinkName = "tws")
+    }
   }
 }

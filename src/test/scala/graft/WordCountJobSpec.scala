@@ -195,4 +195,24 @@ class WordCountJobSpec extends AnyFunSuite {
     assert(!plan.contains("\\s+"), plan)
     assert(physical.collect { case f: FilterExec => f }.isEmpty, plan)
   }
+
+  test("two runs write byte-identical concatenations; each run is sorted and range-contiguous") {
+    // Where the files split depends on the order the range sampler sees the
+    // aggregate's rows in, which Spark does not fix, so only the
+    // concatenation is pinned run to run.
+    val rnd = new scala.util.Random(17)
+    val vocab = Vector.tabulate(3000)(i => s"w${i * 7919 % 3001}x${i % 13}")
+    val text = Seq.fill(400)(Seq.fill(50)(vocab((rnd.nextDouble() * rnd.nextDouble() *
+      vocab.size).toInt)).mkString(" ")).mkString("\n")
+    val runs = Seq.fill(2)(runJob(text, 4))
+    val concatenated = runs.map(_.map(f => Files.readAllBytes(f).toSeq).reduce(_ ++ _))
+    assert(concatenated(0) == concatenated(1))
+    for (files <- runs) {
+      val perFile = files.map(f => Files.readAllLines(f).asScala.map(_.split(" ")(0)).toSeq)
+      assert(perFile.count(_.nonEmpty) > 1, "the corpus must span several files")
+      perFile.foreach(ws => assert(ws == ws.sorted))
+      assert(perFile.flatten == perFile.flatten.sorted, "files must be range-contiguous")
+    }
+    assert(parse(runs.head).toMap == oracle(text))
+  }
 }

@@ -5,8 +5,8 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsServerDefaults,
-  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -23,7 +23,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   *
   * `FileSystem.getLocal` casts to `LocalFileSystem`, hence the subclass.
   * [[LocalFs.Afs]] is the `AbstractFileSystem` twin `FileContext` (the
-  * streaming checkpoint manager) resolves through. [[LocalFs.impls]] binds
+  * streaming checkpoint manager) resolves through; unlike Hadoop's, it
+  * verifies `.crc` on every open. [[LocalFs.impls]] binds
   * both to the `file:` scheme.
   */
 class LocalFs extends LocalFileSystem(new LocalFs.Raw)
@@ -68,8 +69,18 @@ object LocalFs {
   }
 
   /** The `AbstractFileSystem` twin: checksummed over [[RawAfs]], as Hadoop's
-    * `fs.local.LocalFs` is over `fs.local.RawLocalFs`. */
-  class Afs(uri: URI, conf: Configuration) extends ChecksumFs(new RawAfs(uri, conf))
+    * `fs.local.LocalFs` is over `fs.local.RawLocalFs`.
+    *
+    * `FilterFs.open(Path)` hands the one-argument open straight to the raw
+    * filesystem and `ChecksumFs` overrides only `open(Path, Int)`, so in
+    * Hadoop's own class `FileContext.open(p)` (how Spark reads offset and
+    * commit logs and state-store files) skips the `.crc` check. Here it goes
+    * through the checksummed open, at the buffer size `AbstractFileSystem`
+    * gives it; a file without a `.crc` still reads, unverified. */
+  class Afs(uri: URI, conf: Configuration) extends ChecksumFs(new RawAfs(uri, conf)) {
+    override def open(f: Path): FSDataInputStream =
+      open(f, getServerDefaults(f).getFileBufferSize)
+  }
 
   /** Hadoop's `fs.local.RawLocalFs` (whose constructors are package-private)
     * delegating to [[Raw]]. */

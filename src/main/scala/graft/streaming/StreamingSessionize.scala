@@ -304,7 +304,12 @@ object StreamingSessionize {
     * append-mode join output — the scale path a production
     * `writeStream.format("parquet")` job would take. The temp dir lives for
     * the session (the returned frame lazily reads it) and is
-    * delete-on-exit. */
+    * delete-on-exit.
+    *
+    * The stream runs without Spark's per-session artifact isolation, so its
+    * tasks load classes from the executor's default classloader and do not
+    * see jars or classes a caller added with `addArtifact` (graft adds
+    * none). */
   def runToCompletion(spark: SparkSession, dir: String,
       transform: DataFrame => DataFrame = sessions(_),
       outputMode: String = "complete",
@@ -328,12 +333,19 @@ object StreamingSessionize {
     // count for the stream (a production job sizes this to its state volume
     // instead). The stream also runs with `file:` bound to LocalFs, so its
     // offset/commit logs, state-store files and sink files fork no process
-    // even in a session GraftSession did not build. withConf restores the
-    // session conf however the run ends: a failure in stream construction,
-    // analysis, or start() must not leave the shared session pinned.
+    // even in a session GraftSession did not build. Artifact isolation is
+    // off for the stream: start() runs the batches in a session clone with a
+    // new UUID, an isolated UUID gets a task classloader of its own, and
+    // codegen caches classes per classloader, so every run would recompile
+    // byte-identical task code. Without it the tasks use the executor's
+    // default classloader, which lives as long as the SparkContext, and the
+    // cache hits from the second run on. withConf restores the session conf
+    // however the run ends: a failure in stream construction, analysis, or
+    // start() must not leave the shared session pinned.
     val out = Sink.dirFor(sinkName, clear = clearSink)
-    GraftSession.withConf(spark,
-        LocalFs.sessionBinding :+ ("spark.sql.shuffle.partitions" -> "4"): _*) {
+    GraftSession.withConf(spark, LocalFs.sessionBinding ++ Seq(
+        "spark.sql.shuffle.partitions" -> "4",
+        "spark.sql.artifact.isolation.enabled" -> "false"): _*) {
       // sourceOptions lets tests drive MULTI-microbatch replays
       // (maxFilesPerTrigger=1 over several time-ordered files) — the
       // cross-batch state-merge path a one-file replay never exercises

@@ -42,8 +42,7 @@ class LocalFsSpec extends AnyFunSuite {
     val out = fc.create(p, EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
     try out.write(text.getBytes(UTF_8)) finally out.close()
   }
-  /** Read through ChecksumFs: `FileContext.open` with a buffer size (without
-    * one it skips the checksum layer, in Hadoop's own LocalFs as well). */
+  /** Read through ChecksumFs: `FileContext.open` with a buffer size. */
   private def read(fc: FileContext, p: Path): String = {
     val in = fc.open(p, 4096)
     try new String(in.readAllBytes(), UTF_8) finally in.close()
@@ -142,6 +141,29 @@ class LocalFsSpec extends AnyFunSuite {
       try in.readAllBytes() finally in.close()
     }
     intercept[ChecksumException](read(twinContext(), hpath(d.resolve("data.bin"))))
+  }
+
+  test("the twin's one-argument open verifies the .crc, and a file without one still reads") {
+    val fc = twinContext()
+    val d = Files.createTempDirectory("localfs-open1")
+    val p = hpath(d.resolve("log"))
+    write(fc, p, "v1\n{\"batchWatermarkMs\":0}")
+    assert(Files.exists(d.resolve(".log.crc")))
+    def read1(q: Path): String = {
+      val in = fc.open(q)
+      try new String(in.readAllBytes(), UTF_8) finally in.close()
+    }
+    assert(read1(p) == "v1\n{\"batchWatermarkMs\":0}")
+
+    val bytes = Files.readAllBytes(d.resolve("log"))
+    bytes(4) = (bytes(4) ^ 0x5a).toByte
+    Files.write(d.resolve("log"), bytes)
+    // Hadoop's FilterFs.open(Path) would read the flipped byte unchecked
+    intercept[ChecksumException](read1(p))
+
+    val bare = d.resolve("no-crc")
+    Files.writeString(bare, "plain")
+    assert(read1(hpath(bare)) == "plain")
   }
 
   test("FileContext.rename(OVERWRITE) through the twin moves the data and its .crc") {

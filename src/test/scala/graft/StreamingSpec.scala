@@ -949,4 +949,24 @@ class StreamingSpec extends AnyFunSuite {
     assert(!x6.exists(_._1 == 1L),
       s"strict-< emission rule: the exact-tie session must stay open, got $x6")
   }
+
+  test("a stream restarted in an artifact-isolated session reuses its compiled task code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // every start() clones the session under a new UUID; with isolation on
+    // (a session graft did not build may have it so) each UUID would get a
+    // classloader, and codegen's per-classloader cache, of its own
+    val key = "spark.sql.artifact.isolation.enabled"
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def x14() = StreamingSessionize.defs("x14_stream_wordcount")(spark, dir)
+      .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
+    GraftSession.withConf(spark, key -> "true") {
+      val first = x14()
+      val before = compiles
+      val second = x14()
+      assert(compiles - before == 0, "the second run recompiled task code")
+      assert(first.nonEmpty)
+      assert(second == first)
+      assert(spark.conf.get(key) == "true")
+    }
+  }
 }

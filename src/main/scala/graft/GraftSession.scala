@@ -44,6 +44,16 @@ object GraftSession {
     s
   }
 
+  /** The engine's one "small enough for the driver" rule: `bytes` fit
+    * `spark.sql.autoBroadcastJoinThreshold`, Spark's own bound for pulling
+    * a relation to one node to broadcast it. A negative threshold (−1)
+    * disables it, and then nothing fits. */
+  def fitsDriver(spark: SparkSession, bytes: Long): Boolean =
+    spark.conf.get("spark.sql.autoBroadcastJoinThreshold").trim match {
+      case s if s.startsWith("-") => false
+      case s => bytes <= org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
+    }
+
   /** Runs `body` with each `kv` set on the session's conf, then puts every
     * key back as it was: set to its old value, or unset, also when `body`
     * throws. `getAll` holds only the keys set on the session (`getOption`

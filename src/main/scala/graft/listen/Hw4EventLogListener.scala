@@ -29,6 +29,10 @@ import graft.jobs.WordCountJob
   * (hw4.cc:172 dispatches `re + 1`); map task ids are the reference's chunk
   * ids, here Spark partition ids. `node` is the executor id (driver = 0 in
   * local mode, matching the reference's single-jobtracker numbering).
+  * The reduce lines therefore follow the job's result stages, not R: on
+  * WordCountJob's driver finish they are the final aggregate's tasks (as
+  * many as AQE coalesced its shuffle into, 2 in the benchmark's run), on
+  * the distributed sink the range sampler's tasks plus the R writers.
   *
   * A stage is classified by `StageInfo.shuffleDepId` (defined exactly when
   * the stage writes shuffle output), which is exact under AQE, where each

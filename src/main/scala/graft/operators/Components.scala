@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GraftCkpt, GraftSession}
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -37,16 +37,16 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * job that writes it, so no loop decision launches a job of its own.
   *
   * Driver finish: once the rows the driver would collect, times the
-  * state's fixed row width, fit `spark.sql.autoBroadcastJoinThreshold`
-  * — Spark's own bound for pulling a relation to the driver to broadcast
-  * it; −1 disables it — the edges are collected and the components
-  * finished with union-find. If the start state fits, the driver emits
-  * the final labels itself; otherwise the union-find result becomes the
-  * last hook map. Larger graphs run distributed rounds only, and
-  * composing the hook maps plus regrouping to original ids is one lazy
-  * plan, materialized once. `materialize` cuts the per-round lineage AND
-  * resets plan statistics (see its doc). The 50-round cap is a safety
-  * rail; hitting it throws rather than returning a partial labeling.
+  * state's fixed row width, fit the driver ([[GraftSession.fitsDriver]],
+  * i.e. `spark.sql.autoBroadcastJoinThreshold`; −1 disables it), the
+  * edges are collected and the components finished with union-find. If
+  * the start state fits, the driver emits the final labels itself;
+  * otherwise the union-find result becomes the last hook map. Larger
+  * graphs run distributed rounds only, and composing the hook maps plus
+  * regrouping to original ids is one lazy plan, materialized once.
+  * `materialize` cuts the per-round lineage AND resets plan statistics
+  * (see its doc). The 50-round cap is a safety rail; hitting it throws
+  * rather than returning a partial labeling.
   */
 object Components {
 
@@ -121,13 +121,6 @@ object Components {
     shiftleft(v, 27).bitwiseOR(shiftrightunsigned(v, 37))
       .bitwiseXOR(lit(0x9E3779B97F4A7C15L))
 
-  /** `spark.sql.autoBroadcastJoinThreshold` in bytes; negative = disabled. */
-  private def broadcastThreshold(spark: SparkSession): Long =
-    spark.conf.get("spark.sql.autoBroadcastJoinThreshold").trim match {
-      case s if s.startsWith("-") => -1L
-      case s => org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
-    }
-
   /** Driver union-find over (x, y) edges: every endpoint → the smallest id
     * of its component. Iterative finds with path halving, so a long chain
     * cannot overflow the stack. */
@@ -159,8 +152,7 @@ object Components {
   def minLabel(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     val Seq(a, b) = edges.columns.take(2).toSeq.map(c => col(c).cast(LongType))
-    val threshold = broadcastThreshold(spark)
-    def fits(rows: Long): Boolean = threshold >= 0 && rows * RowBytes <= threshold
+    def fits(rows: Long): Boolean = GraftSession.fitsDriver(spark, rows * RowBytes)
     /** A driver-side result as a (local, exactly-sized) two-column frame. */
     def local(rows: Iterable[(Long, Long)], c1: String, c2: String): DataFrame =
       spark.createDataFrame(

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,38 +28,6 @@ class ComponentsSpec extends AnyFunSuite {
     Seq("" -> None, " (distributed rounds only)" -> Some("-1")).foreach {
       case (suffix, threshold) => test(name + suffix)(withThreshold(threshold)(body))
     }
-
-  /** Spark jobs launched by `body`. A listener counts the job starts that
-    * carry this call's tag as a thread-local property; a sentinel job
-    * after the body, with a second tag, shows the (asynchronous) listener
-    * bus has delivered every earlier job start. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.jobTag"
-    val tag = java.util.UUID.randomUUID.toString
-    val jobs = new AtomicInteger
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some(`tag`) => jobs.incrementAndGet()
-          case Some(t) if t == s"$tag-end" => flushed.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      body
-      sc.setLocalProperty(key, s"$tag-end")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      jobs.get
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private val edgeGen: Gen[List[(Long, Long)]] =
     Gen.chooseNum(0, 60).flatMap(n =>
@@ -158,7 +122,7 @@ class ComponentsSpec extends AnyFunSuite {
         e.getMessage.contains("setCheckpointDir"), e.getMessage)
       // the session keeps this dir; the local (default) path never reads it
       spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+        TestSpark.tempDir("graft-ckpt").toString)
       assert(paths.map(t => withThreshold(t)(run(edges))) == local)
     } finally spark.conf.unset("spark.graft.reliableCheckpoint")
   }
@@ -178,7 +142,7 @@ class ComponentsSpec extends AnyFunSuite {
     val path = (0L until 200L).map(i => (i, i + 1)).toList
     val want = (0L to 200L).map(_ -> 0L).toMap
     def jobsAt(threshold: Option[String]): Int = withThreshold(threshold) {
-      jobsOf(assert(run(path) == want))
+      TestSpark.jobsOf(assert(run(path) == want))
     }
     val (driver, partWay, distributed) =
       (jobsAt(None), jobsAt(Some((150 * 32).toString)), jobsAt(Some("-1")))
@@ -193,8 +157,8 @@ class ComponentsSpec extends AnyFunSuite {
     // launched 36 and 32.
     val star = List((0L, 1L), (0L, 2L), (0L, 3L), (4L, 5L))
     val want = Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 4L, 5L -> 4L)
-    val driver = jobsOf(assert(run(star) == want))
-    val distributed = withThreshold(Some("-1"))(jobsOf(assert(run(star) == want)))
+    val driver = TestSpark.jobsOf(assert(run(star) == want))
+    val distributed = withThreshold(Some("-1"))(TestSpark.jobsOf(assert(run(star) == want)))
     info(s"jobs: driver finish $driver, distributed rounds $distributed")
     assert(driver <= 8, s"driver finish launched $driver jobs")
     assert(distributed <= 28, s"distributed rounds launched $distributed jobs")

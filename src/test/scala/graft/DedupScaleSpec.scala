@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,7 +19,7 @@ class DedupScaleSpec extends AnyFunSuite {
   /** 300 identical docs (the viral group) + one exact-dup pair of a distinct
     * text. Expected candidates: exactly the (301, 302) pair. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-viral").toString
+    val d = TestSpark.tempDir("graft-viral").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -131,7 +129,7 @@ class DedupScaleSpec extends AnyFunSuite {
     // boilerplate preamble that also floods 20 other docs. Raw overlap is
     // identical by construction, so plain d4 jaccard ties them — the IDF
     // ppm weights are the only thing separating evidence from noise.
-    val d = Files.createTempDirectory("graft-wjac").toString
+    val d = TestSpark.tempDir("graft-wjac").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -159,7 +157,7 @@ class DedupScaleSpec extends AnyFunSuite {
   }
 
   test("d11 collapses a transitive near-dup chain into one cluster") {
-    val d = Files.createTempDirectory("graft-chain").toString
+    val d = TestSpark.tempDir("graft-chain").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -218,7 +216,7 @@ class DedupScaleSpec extends AnyFunSuite {
     // C(1100,2) ≈ 600k posting pairs. The low-df exact-dup pair alongside
     // must still be found (2002 is in the md5 query sample).
     val floodN = 1100
-    val d = Files.createTempDirectory("graft-flood").toString
+    val d = TestSpark.tempDir("graft-flood").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -247,7 +245,7 @@ class DedupScaleSpec extends AnyFunSuite {
     // can't pair). A genuine containment pair (short doc quoted whole
     // inside a longer one, sharing their low-df chunks) must still be
     // found with c1 ≈ 1 even though its Jaccard is low.
-    val d = Files.createTempDirectory("graft-contain").toString
+    val d = TestSpark.tempDir("graft-contain").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -283,7 +281,7 @@ class DedupScaleSpec extends AnyFunSuite {
     // C(200,2) = 19,900 pairs on the boiler shingles alone. The planted
     // exact-dup pair (301, 302) must still surface with J = 1.
     import org.apache.spark.sql.functions._
-    val d = Files.createTempDirectory("graft-d34flood").toString
+    val d = TestSpark.tempDir("graft-d34flood").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -322,7 +320,7 @@ class DedupScaleSpec extends AnyFunSuite {
     // Spark and NaN in DuckDB (where NaN >= 0.5 is TRUE). The n > 0 guard
     // must drop the pair in BOTH engines; without it this fixture is an
     // oracle hash mismatch, not just a wrong row.
-    val d = Files.createTempDirectory("graft-tiny").toString
+    val d = TestSpark.tempDir("graft-tiny").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -340,7 +338,7 @@ class DedupScaleSpec extends AnyFunSuite {
     // join must emit only pairs sharing >= 1 sketch component — the mirror
     // pair at n_agree = 16 — instead of enumerating all C(62,2) = 1891
     // source pairs the old crossJoin spelled out
-    val d = Files.createTempDirectory("graft-d16").toString
+    val d = TestSpark.tempDir("graft-d16").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -391,7 +389,7 @@ class DedupScaleSpec extends AnyFunSuite {
       .get
     val t = (1 to 40).map(i => s"body$i").mkString(" ")
     val prefix = s"inserted preamble tokens $cutTok"
-    val d = Files.createTempDirectory("graft-cdc").toString
+    val d = TestSpark.tempDir("graft-cdc").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -407,7 +405,7 @@ class DedupScaleSpec extends AnyFunSuite {
   }
 
   test("d18 classifies exact/near/novel against the corpus only — batch docs never match each other") {
-    val d = Files.createTempDirectory("graft-incr").toString
+    val d = TestSpark.tempDir("graft-incr").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -521,7 +519,7 @@ class DedupScaleSpec extends AnyFunSuite {
     * aligned windows), and unique-noise docs whose fingerprints never reach
     * df 2. */
   private lazy val winnowDir: String = {
-    val d = Files.createTempDirectory("graft-winnow").toString
+    val d = TestSpark.tempDir("graft-winnow").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),

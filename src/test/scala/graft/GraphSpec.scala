@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,7 +20,7 @@ class GraphSpec extends AnyFunSuite {
     * leaves have out-degree 1, so it contributes ZERO wedges — the hub
     * never enumerates its neighborhood². */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-graph").toString
+    val d = TestSpark.tempDir("graft-graph").toString
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_partkey", LongType)))
     val k4 = for (ok <- Seq(100L, 101L); pk <- Seq(1L, 2L, 3L, 4L))
@@ -63,7 +61,7 @@ class GraphSpec extends AnyFunSuite {
   test("g1's star wedges vanish under orientation even when the hub dominates") {
     // a pure star (no K4): any wedge would mean the hub enumerated two
     // neighbors — orientation must make the count zero, not O(deg²)
-    val d = Files.createTempDirectory("graft-star").toString
+    val d = TestSpark.tempDir("graft-star").toString
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_partkey", LongType)))
     val rows = for {
@@ -93,7 +91,7 @@ class GraphSpec extends AnyFunSuite {
     val edges = for {
       i <- 1 to n; k <- 2 to n / i
     } yield (i.toLong, (k * i).toLong)
-    val d = Files.createTempDirectory("graft-powerlaw").toString
+    val d = TestSpark.tempDir("graft-powerlaw").toString
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_partkey", LongType)))
     // two orders per edge, each holding exactly that edge's two parts →
@@ -198,7 +196,7 @@ class GraphSpec extends AnyFunSuite {
     // pair 20-21 at c=2 (below threshold — excluded entirely)
     val wedges = Seq((1L, 2L, 3L), (2L, 3L, 3L), (1L, 3L, 3L),
       (10L, 11L, 4L), (20L, 21L, 2L))
-    val d = Files.createTempDirectory("graft-fam").toString
+    val d = TestSpark.tempDir("graft-fam").toString
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_partkey", LongType)))
     val rows = wedges.zipWithIndex.flatMap { case ((a, b, w), i) =>
@@ -243,7 +241,7 @@ class GraphSpec extends AnyFunSuite {
       (math.min(a, b), math.max(a, b))
     }.filter(e => e._1 != e._2).distinct
       .map { case (a, b) => (a, b, (rnd.nextInt(5) + 2).toLong) }
-    val d = Files.createTempDirectory("graft-wpr").toString
+    val d = TestSpark.tempDir("graft-wpr").toString
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_partkey", LongType)))
     val rows = wedges.zipWithIndex.flatMap { case ((a, b, w), i) =>
@@ -272,7 +270,7 @@ class GraphSpec extends AnyFunSuite {
       val a = rnd.nextInt(60) + 1L; val b = rnd.nextInt(60) + 1L
       (math.min(a, b), math.max(a, b))
     }.filter(e => e._1 != e._2).distinct
-    val d = Files.createTempDirectory("graft-pr").toString
+    val d = TestSpark.tempDir("graft-pr").toString
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_partkey", LongType)))
     val rows = edges.zipWithIndex.flatMap { case ((a, b), i) =>
@@ -293,7 +291,7 @@ class GraphSpec extends AnyFunSuite {
       val a = rnd.nextInt(60) + 1L; val b = rnd.nextInt(60) + 1L
       (math.min(a, b), math.max(a, b))
     }.filter(e => e._1 != e._2).distinct
-    val d = Files.createTempDirectory("graft-bfs").toString
+    val d = TestSpark.tempDir("graft-bfs").toString
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_partkey", LongType)))
     val rows = edges.zipWithIndex.flatMap { case ((a, b), i) =>
@@ -329,7 +327,7 @@ class GraphSpec extends AnyFunSuite {
       val a = rnd.nextInt(60) + 1L; val b = rnd.nextInt(60) + 1L
       (math.min(a, b), math.max(a, b))
     }.filter(e => e._1 != e._2).distinct
-    val d = Files.createTempDirectory("graft-hc").toString
+    val d = TestSpark.tempDir("graft-hc").toString
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_partkey", LongType)))
     val rows = edges.zipWithIndex.flatMap { case ((a, b), i) =>
@@ -363,7 +361,7 @@ class GraphSpec extends AnyFunSuite {
     // at every iteration (contributions and damping are identical per
     // vertex, and the integer arithmetic is deterministic)
     val cyc = (0L until 12L).map(i => (i + 1L, (i + 1L) % 12L + 1L))
-    val d = Files.createTempDirectory("graft-cycle").toString
+    val d = TestSpark.tempDir("graft-cycle").toString
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_partkey", LongType)))
     val rows = cyc.zipWithIndex.flatMap { case ((a, b), i) =>
@@ -389,7 +387,7 @@ class GraphSpec extends AnyFunSuite {
   /** Write a lineitem fixture whose support-≥2 co-order graph is exactly
     * `edges` (two orders per edge, each holding only that edge's parts). */
   private def edgeFixture(edges: Seq[(Long, Long)], tag: String): String = {
-    val d = Files.createTempDirectory(s"graft-$tag").toString
+    val d = TestSpark.tempDir(s"graft-$tag").toString
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_partkey", LongType)))
     val rows = edges.zipWithIndex.flatMap { case ((a, b), i) =>
@@ -778,7 +776,7 @@ class GraphSpec extends AnyFunSuite {
       val a = rnd.nextInt(60) + 1L; val b = rnd.nextInt(60) + 1L
       (math.min(a, b), math.max(a, b))
     }.filter(e => e._1 != e._2).distinct
-    val d = Files.createTempDirectory("graft-mod").toString
+    val d = TestSpark.tempDir("graft-mod").toString
     val schema = StructType(Seq(
       StructField("l_orderkey", LongType), StructField("l_partkey", LongType)))
     val rows = edges.zipWithIndex.flatMap { case ((a, b), i) =>

@@ -40,7 +40,7 @@ class HarnessSpec extends AnyFunSuite {
 
   test("measure: a query that throws comes back as an error") {
     val m = Bench.measure(TestSpark.spark, "q1_pricing_summary",
-      Files.createTempDirectory("harness-empty").toString, 2)
+      TestSpark.tempDir("harness-empty").toString, 2)
     assert(m.error.exists(_.nonEmpty), m)
     assert(m.secs.isEmpty, m)
   }
@@ -67,7 +67,7 @@ class HarnessSpec extends AnyFunSuite {
     Seq("BENCH_FULL.json", "SCALE_FULL.json", "STREAMSCALE_FULL.json")
       .foreach { name =>
         val orig = Files.readAllBytes(Paths.get(name))
-        val copy = Files.createTempDirectory("harness-art").resolve(name)
+        val copy = TestSpark.tempDir("harness-art").resolve(name)
         Files.write(copy, orig)
         SmokeArtifact.merge(copy.toString, Nil)
         assert(java.util.Arrays.equals(Files.readAllBytes(copy), orig), name)

@@ -11,16 +11,17 @@ import graft.listen.Hw4EventLogListener
 
 /** Validates the event-log CSV grammar against hw4.cc:84-203 (SURVEY.md §5
   * item 5): schema per event, Start_Job first, Finish_Job last, dispatch
-  * precedes completion per (kind, taskid) — with AQE on AND off — and that
-  * the shuffleDepId probe the stage classifier relies on answers live. */
+  * precedes completion per (kind, taskid) — with AQE on (on both of
+  * WordCountJob's finishes) AND off — and that the shuffleDepId probe the
+  * stage classifier relies on answers live. */
 class ListenerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def runWithListener(jobName: String, aqe: Boolean,
       mkListener: WordCountJob.Config => Hw4EventLogListener): Seq[String] = {
-    val in = Files.createTempFile("lst-in", ".txt")
+    val in = TestSpark.tempFile("lst-in", ".txt")
     Files.writeString(in, "alpha beta alpha gamma beta alpha")
-    val out = Files.createTempDirectory("lst-out")
+    val out = TestSpark.tempDir("lst-out")
     val cfg = WordCountJob.Config(jobName, 2, 0, in.toString, 2, "none",
       out.toString)
     val listener = mkListener(cfg)
@@ -92,6 +93,12 @@ class ListenerSpec extends AnyFunSuite {
 
   test("log follows the hw4 CSV grammar (AQE on)") {
     checkGrammar(runWithListener("lstaqe", aqe = true, new Hw4EventLogListener(_, 4)))
+  }
+
+  test("log follows the hw4 CSV grammar (AQE on, distributed sink)") {
+    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      checkGrammar(runWithListener("lstaqedist", aqe = true, new Hw4EventLogListener(_, 4)))
+    }
   }
 
   test("log follows the hw4 CSV grammar (AQE off)") {

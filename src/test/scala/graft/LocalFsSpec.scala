@@ -59,7 +59,7 @@ class LocalFsSpec extends AnyFunSuite {
   test("created files and directories get Hadoop's modes under umask 022 and 077") {
     for ((umask, dirMode, fileMode) <- Seq(("022", "755", "644"), ("077", "700", "600"))) {
       val (stock, ours) = raws(umask)
-      val d = Files.createTempDirectory("localfs-mode")
+      val d = TestSpark.tempDir("localfs-mode")
       def made(fs: RawLocalFileSystem, tag: String): Seq[Int] = {
         val dir = new Path(hpath(d), s"$tag/sub")
         assert(fs.mkdirs(dir))
@@ -77,7 +77,7 @@ class LocalFsSpec extends AnyFunSuite {
 
   test("setPermission sets the same nine bits as Hadoop's chmod") {
     val (stock, ours) = raws("022")
-    val d = Files.createTempDirectory("localfs-chmod")
+    val d = TestSpark.tempDir("localfs-chmod")
     for (m <- Seq("644", "600", "755", "700", "777", "640", "421", "000")) {
       val perm = new FsPermission(octal(m).toShort)
       val (a, b) = (Files.createFile(d.resolve(s"a$m")), Files.createFile(d.resolve(s"b$m")))
@@ -91,7 +91,7 @@ class LocalFsSpec extends AnyFunSuite {
   test("a sticky-bit directory mode goes through Hadoop's own chmod") {
     val (stock, ours) = raws("022")
     val perm = new FsPermission(octal("1777").toShort)
-    val (a, b) = (Files.createTempDirectory("sticky-stock"), Files.createTempDirectory("sticky-ours"))
+    val (a, b) = (TestSpark.tempDir("sticky-stock"), TestSpark.tempDir("sticky-ours"))
     stock.setPermission(hpath(a), perm)
     ours.setPermission(hpath(b), perm)
     // java.nio cannot set the sticky bit: it being there means the fallback ran
@@ -101,7 +101,7 @@ class LocalFsSpec extends AnyFunSuite {
 
   test("getFileLinkStatus matches Hadoop's for a file, a directory and live and dangling symlinks") {
     val (stock, ours) = raws("022")
-    val d = Files.createTempDirectory("localfs-link")
+    val d = TestSpark.tempDir("localfs-link")
     val file = Files.writeString(d.resolve("f"), "abc")
     val dir = Files.createDirectory(d.resolve("d"))
     val link = Files.createSymbolicLink(d.resolve("l"), file)
@@ -124,7 +124,7 @@ class LocalFsSpec extends AnyFunSuite {
   test("writes carry a .crc sidecar, and a flipped data byte fails the read") {
     val fs = new LocalFs
     fs.initialize(root, new Configuration())
-    val d = Files.createTempDirectory("localfs-crc")
+    val d = TestSpark.tempDir("localfs-crc")
     val data = (0 until 2000).map(i => (i % 251).toByte).toArray
     val out = fs.create(hpath(d.resolve("data.bin")))
     out.write(data)
@@ -145,7 +145,7 @@ class LocalFsSpec extends AnyFunSuite {
 
   test("the twin's one-argument open verifies the .crc, and a file without one still reads") {
     val fc = twinContext()
-    val d = Files.createTempDirectory("localfs-open1")
+    val d = TestSpark.tempDir("localfs-open1")
     val p = hpath(d.resolve("log"))
     write(fc, p, "v1\n{\"batchWatermarkMs\":0}")
     assert(Files.exists(d.resolve(".log.crc")))
@@ -168,7 +168,7 @@ class LocalFsSpec extends AnyFunSuite {
 
   test("FileContext.rename(OVERWRITE) through the twin moves the data and its .crc") {
     val fc = twinContext()
-    val d = Files.createTempDirectory("localfs-rename")
+    val d = TestSpark.tempDir("localfs-rename")
     val (src, dst) = (hpath(d.resolve("src")), hpath(d.resolve("dst")))
     write(fc, src, "new")
     write(fc, dst, "old")

@@ -52,7 +52,7 @@ class MediaPipelineSpec extends AnyFunSuite {
   test("m8 media dedup: identical payloads land in one cluster and keep one survivor") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val d = java.nio.file.Files.createTempDirectory("graft-m8").toString
+    val d = TestSpark.tempDir("graft-m8").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -77,14 +77,14 @@ class MediaPipelineSpec extends AnyFunSuite {
   }
 
   test("locality config parses and folds node ids like hw4.cc:94") {
-    val f = java.nio.file.Files.createTempFile("loc", ".cfg")
+    val f = TestSpark.tempFile("loc", ".cfg")
     java.nio.file.Files.writeString(f, "0 3\n1 7\n\n2 1\n")
     assert(LocalityConfig.parse(f).map(e => (e.chunkId, e.nodeId)) ==
       Seq((0, 3), (1, 7), (2, 1)))
     // 4 MPI ranks -> workers 1..3: node % 3 + 1
     assert(LocalityConfig.asFoldedMap(f, 4) == Map(0 -> 1, 1 -> 2, 2 -> 2))
     assertThrows[IllegalArgumentException] {
-      val bad = java.nio.file.Files.createTempFile("locbad", ".cfg")
+      val bad = TestSpark.tempFile("locbad", ".cfg")
       java.nio.file.Files.writeString(bad, "0 1 2")
       LocalityConfig.parse(bad)
     }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,7 +24,7 @@ class OperatorSpec extends AnyFunSuite {
 
   /** Fixture dir shaped like /root/testdata/sf*: documents + embeddings. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft-fixture").toString
+    val d = TestSpark.tempDir("graft-fixture").toString
     val docsSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -75,7 +73,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("m3_frame_sample emits zero frames for an empty payload") {
-    val d2 = Files.createTempDirectory("graft-empty").toString
+    val d2 = TestSpark.tempDir("graft-empty").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -173,7 +171,7 @@ class OperatorSpec extends AnyFunSuite {
     // doc 1 (srcA) == doc 2 (srcB) is the only verified near-dup edge that
     // crosses sources; docs 3/4 are same-source so even a verified edge
     // among them must not appear. Pair key is order-normalized.
-    val d = Files.createTempDirectory("graft-d22").toString
+    val d = TestSpark.tempDir("graft-d22").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -480,7 +478,7 @@ class OperatorSpec extends AnyFunSuite {
     // corpus model over all three docs: c(a,b)=3 c(b,a)=1 c(b,c)=1 c(c,a)=1,
     // prefixes a·=3 b·=2 c·=1 → p6(a,b)=1000000, p6(b,a)=p6(b,c)=500000,
     // p6(c,a)=1000000; the per-doc means are exact integer floors
-    val d = Files.createTempDirectory("graft-t17").toString
+    val d = TestSpark.tempDir("graft-t17").toString
     val docsSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -575,7 +573,7 @@ class OperatorSpec extends AnyFunSuite {
     StructField("n_chars", LongType)))
 
   private def writeDocs(rows: Seq[(Long, String, String)]): String = {
-    val d = Files.createTempDirectory("graft-docs-fx").toString
+    val d = TestSpark.tempDir("graft-docs-fx").toString
     val rr = rows.map { case (id, t, src) => Row(id, t, "en", src, t.length.toLong) }
     spark.createDataFrame(spark.sparkContext.parallelize(rr, 2), docsSchemaFx)
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
@@ -594,7 +592,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("q50 orphan audit counts each planted violation exactly once") {
-    val d = Files.createTempDirectory("graft-ri-fx").toString
+    val d = TestSpark.tempDir("graft-ri-fx").toString
     def w(name: String, schema: StructType, rows: Seq[Row]): Unit =
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
         .write.mode("overwrite").parquet(s"$d/$name.parquet")
@@ -637,7 +635,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("s20 farthest-first seeding picks orthogonal axes and never a duplicate") {
-    val d = Files.createTempDirectory("graft-s20-fx").toString
+    val d = TestSpark.tempDir("graft-s20-fx").toString
     def vec(i: Int): Seq[Float] = {
       val a = Array.fill(64)(0.0f); a(i) = 1.0f; a.toSeq
     }
@@ -771,7 +769,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("t22 confusion matrix separates stopword-bearing docs from the rest") {
-    val d = Files.createTempDirectory("graft-t22").toString
+    val d = TestSpark.tempDir("graft-t22").toString
     val rows = Seq(
       Row(1L, "the cat and the dog", "en", "s", 19L),   // >=2 stopword hits → en
       Row(2L, "zzz qqq www", "en", "s", 11L),            // no hits → und
@@ -890,7 +888,7 @@ class OperatorSpec extends AnyFunSuite {
     // label-0 pair along axis 0, label-1 pair along axis 1 → s6 forms two
     // 2-member clusters; each member sits ~on its centroid and far from
     // the other, so every silhouette is near 1 (and always within [-1, 1])
-    val d = Files.createTempDirectory("graft-sil").toString
+    val d = TestSpark.tempDir("graft-sil").toString
     def vec(parts: (Int, Float)*): Seq[Float] = {
       val a = Array.fill(64)(0.0f)
       parts.foreach { case (i, v) => a(i) = v }
@@ -961,7 +959,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("w17 dataset card hand-computes: language majority, cross-source dups, ppm floors") {
-    val d = Files.createTempDirectory("graft-card-fx").toString
+    val d = TestSpark.tempDir("graft-card-fx").toString
     val sch = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -1152,7 +1150,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("q66 skew audit: exact ceiling-rank percentiles on a hand-built key distribution") {
-    val d = Files.createTempDirectory("graft-skew-fx").toString
+    val d = TestSpark.tempDir("graft-skew-fx").toString
     // o_custkey group sizes [1,1,1,2,5]: n_keys=5, n_rows=10, max=5;
     // p50 rank ceil(2.5)=3 → sz 1; p90 rank ceil(4.5)=5 → sz 5; p99 → 5
     val orders = Seq(1L, 2L, 3L, 4L, 4L, 5L, 5L, 5L, 5L, 5L)
@@ -1365,7 +1363,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("q70 transitions respect session boundaries and row-conditional shares") {
-    val d = Files.createTempDirectory("graft-paths-fx").toString
+    val d = TestSpark.tempDir("graft-paths-fx").toString
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", TimestampType),
       StructField("user_id", LongType), StructField("event_type", StringType),
@@ -1483,7 +1481,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("q74 cumulative uniques: first-event trick hand-computes, gap day carries the total") {
-    val d = Files.createTempDirectory("graft-cumuniq-fx").toString
+    val d = TestSpark.tempDir("graft-cumuniq-fx").toString
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", TimestampType),
       StructField("user_id", LongType), StructField("event_type", StringType),
@@ -1508,7 +1506,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("q43 cohorts hand-compute on a two-cohort fixture (churn, return, late joiner)") {
-    val d = Files.createTempDirectory("graft-cohort-fx").toString
+    val d = TestSpark.tempDir("graft-cohort-fx").toString
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", TimestampType),
       StructField("user_id", LongType), StructField("event_type", StringType),

@@ -15,7 +15,7 @@ class PartitionPruningSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("date-partitioned events prune partitions at planning time") {
-    val out = Files.createTempDirectory("events-part").toString
+    val out = TestSpark.tempDir("events-part").toString
     val events = Sinks.eventsByDate(
       Tables.load(spark, "/root/testdata/sf0.001", "events"))
     Sinks.writePartitioned(events, out, "event_date")

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SmokeArtifactSpec extends AnyFunSuite {
 
   private def tmp(): String =
-    Files.createTempDirectory("smoke-artifact").resolve("a.json").toString
+    TestSpark.tempDir("smoke-artifact").resolve("a.json").toString
 
   test("merge accumulates across invocations; same key overwrites") {
     val p = tmp()

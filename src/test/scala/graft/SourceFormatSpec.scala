@@ -19,7 +19,7 @@ class SourceFormatSpec extends AnyFunSuite {
     .select("n_nationkey", "n_name", "n_regionkey")
 
   test("CSV round-trip with explicit schema is lossless") {
-    val out = Files.createTempDirectory("csv-rt").toString
+    val out = TestSpark.tempDir("csv-rt").toString
     nationKeyed.write.mode("overwrite")
       .option("header", "true").csv(out)
     val schema = StructType(Seq(
@@ -32,7 +32,7 @@ class SourceFormatSpec extends AnyFunSuite {
   }
 
   test("JSON-lines round-trip preserves rows and nested extraction works") {
-    val out = Files.createTempDirectory("json-rt").toString
+    val out = TestSpark.tempDir("json-rt").toString
     nationKeyed
       .withColumn("meta", struct(col("n_regionkey").as("region"),
         lit("nation").as("kind")))
@@ -50,7 +50,7 @@ class SourceFormatSpec extends AnyFunSuite {
   }
 
   test("ORC round-trip is lossless and pushes filters to the scan") {
-    val out = Files.createTempDirectory("orc-rt").toString
+    val out = TestSpark.tempDir("orc-rt").toString
     nationKeyed.write.mode("overwrite").orc(out)
     val back = spark.read.orc(out)
     assert(back.orderBy("n_nationkey").collect().toSeq ==
@@ -65,7 +65,7 @@ class SourceFormatSpec extends AnyFunSuite {
   test("declared-schema ORC read (the t40 contract) prunes by name and survives wider shards") {
     // a shard that carries MORE columns than the contract: the declared
     // read must project exactly the contract columns by name, not ordinal
-    val out = Files.createTempDirectory("orc-contract").toString
+    val out = TestSpark.tempDir("orc-contract").toString
     nationKeyed
       .withColumn("extra_col", lit("noise"))
       .select("extra_col", "n_nationkey", "n_name", "n_regionkey") // reorder
@@ -88,7 +88,7 @@ class SourceFormatSpec extends AnyFunSuite {
     val lines = good.zipWithIndex.map { case (l, i) =>
       if (i == 3 || i == 7) l.substring(0, l.length / 2) else l
     }
-    val d = Files.createTempDirectory("torn-jsonl")
+    val d = TestSpark.tempDir("torn-jsonl")
     Files.writeString(d.resolve("part-0.json"), lines.mkString("\n"))
     (d.toString, 10, 2)
   }
@@ -160,7 +160,7 @@ class SourceFormatSpec extends AnyFunSuite {
       """"1","full line","en","s0","11"""",
       """"2","torn"""",                 // boundary tear: 2 of 5 columns, quotes balanced
       """"3","another full","en","s1","12"""")
-    val d = Files.createTempDirectory("torn-csv")
+    val d = TestSpark.tempDir("torn-csv")
     Files.writeString(d.resolve("part-0.csv"), lines.mkString("\n"))
     val schema = docSchema.add("_corrupt_record",
       org.apache.spark.sql.types.StringType)
@@ -189,7 +189,7 @@ class SourceFormatSpec extends AnyFunSuite {
     // one historical INT32 shard breaks option("mergeSchema") outright
     // (CANNOT_MERGE_INCOMPATIBLE_DATA_TYPE), while the declared contract
     // read widens the same shard via parquet type promotion
-    val root = Files.createTempDirectory("t43-widen").toString
+    val root = TestSpark.tempDir("t43-widen").toString
     nationKeyed.select(col("n_nationkey"),
         col("n_regionkey").cast("int").as("w"))
       .write.mode("overwrite").parquet(s"$root/gen=0")
@@ -237,7 +237,7 @@ class SourceFormatSpec extends AnyFunSuite {
     // values first, provenance for the all-null residue) must keep the
     // classification TOTAL on both the batch and the stream path.
     import org.apache.spark.sql.Row
-    val d = Files.createTempDirectory("t43-nulls").toString
+    val d = TestSpark.tempDir("t43-nulls").toString
     val rows = (0L until 12L).map { i =>
       Row(i, "alpha beta",
         if (i >= 3 && i <= 5) null else "en", // one null lang per gen

@@ -33,7 +33,7 @@ class StreamingRestartSpec extends AnyFunSuite {
     * StreamingSpec.timeSlicedDir recipe), returned as loose files so the
     * test can stage them into the watched dir in two phases. */
   private def sliceFiles(slices: Int): Seq[java.io.File] = {
-    val d = Files.createTempDirectory("graft-restart-slices").toFile
+    val d = TestSpark.tempDir("graft-restart-slices").toFile
     val raw = spark.read.parquet(s"$dir/events.parquet")
     val n = raw.count()
     val ranked = raw.withColumn("rn", row_number().over(
@@ -62,8 +62,8 @@ class StreamingRestartSpec extends AnyFunSuite {
 
   test("x30 timer state: kill after 2 of 4 slices, resume == uninterrupted (no re-emission)") {
     val slices = sliceFiles(4)
-    val watched = Files.createTempDirectory("graft-restart-x30").toFile
-    val ckpt = Files.createTempDirectory("graft-ckpt-x30").toString
+    val watched = TestSpark.tempDir("graft-restart-x30").toFile
+    val ckpt = TestSpark.tempDir("graft-ckpt-x30").toString
     val opts = Map("maxFilesPerTrigger" -> "1")
     def decode(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
       (r.getLong(0), r.getLong(1),
@@ -105,8 +105,8 @@ class StreamingRestartSpec extends AnyFunSuite {
     // A restart that lost it would re-emit every key already emitted
     // before the kill the moment its duplicate arrives in phase 2.
     val slices = sliceFiles(4)
-    val watched = Files.createTempDirectory("graft-restart-x33").toFile
-    val ckpt = Files.createTempDirectory("graft-ckpt-x33").toString
+    val watched = TestSpark.tempDir("graft-restart-x33").toFile
+    val ckpt = TestSpark.tempDir("graft-ckpt-x33").toString
     val opts = Map("maxFilesPerTrigger" -> "1")
     def run(clear: Boolean) =
       StreamingSessionize.runToCompletion(spark, watched.getAbsolutePath,
@@ -141,8 +141,8 @@ class StreamingRestartSpec extends AnyFunSuite {
     // from zero (which would hold rows forever) or evict early (which
     // would emit spurious null rows a matching view still refutes)
     val slices = sliceFiles(4)
-    val watched = Files.createTempDirectory("graft-restart-x8").toFile
-    val ckpt = Files.createTempDirectory("graft-ckpt-x8").toString
+    val watched = TestSpark.tempDir("graft-restart-x8").toFile
+    val ckpt = TestSpark.tempDir("graft-ckpt-x8").toString
     val opts = Map("maxFilesPerTrigger" -> "1")
     def decode(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
       (r.getLong(0), r.getLong(1),
@@ -179,8 +179,8 @@ class StreamingRestartSpec extends AnyFunSuite {
     // each side's unmatched rows null-extend on its OWN eviction clock
     // (clicks at watermark, views at watermark - 30 min forward bound)
     val slices = sliceFiles(4)
-    val watched = Files.createTempDirectory("graft-restart-x13").toFile
-    val ckpt = Files.createTempDirectory("graft-ckpt-x13").toString
+    val watched = TestSpark.tempDir("graft-restart-x13").toFile
+    val ckpt = TestSpark.tempDir("graft-ckpt-x13").toString
     val opts = Map("maxFilesPerTrigger" -> "1")
     def decode(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
       (if (r.isNullAt(0)) None else Some(r.getLong(0)), r.getLong(1),
@@ -213,8 +213,8 @@ class StreamingRestartSpec extends AnyFunSuite {
 
   test("x31 running-agg state: kill after 2 of 4 slices, resume == uninterrupted (batch ids continue)") {
     val slices = sliceFiles(4)
-    val watched = Files.createTempDirectory("graft-restart-x31").toFile
-    val ckpt = Files.createTempDirectory("graft-ckpt-x31").toString
+    val watched = TestSpark.tempDir("graft-restart-x31").toFile
+    val ckpt = TestSpark.tempDir("graft-ckpt-x31").toString
     val opts = Map("maxFilesPerTrigger" -> "1")
     def resolve(upserts: org.apache.spark.sql.DataFrame) = {
       val latest = org.apache.spark.sql.expressions.Window

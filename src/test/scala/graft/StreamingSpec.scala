@@ -34,7 +34,7 @@ class StreamingSpec extends AnyFunSuite {
     * stream replays them as that many watermark-advancing microbatches. */
   private def timeSlicedDir(slices: Int): String = {
     import org.apache.spark.sql.functions._
-    val d = java.nio.file.Files.createTempDirectory("graft-multibatch").toFile
+    val d = TestSpark.tempDir("graft-multibatch").toFile
     val raw = spark.read.parquet(s"$dir/events.parquet")
     val n = raw.count()
     val ranked = raw.withColumn("rn", row_number().over(
@@ -73,7 +73,7 @@ class StreamingSpec extends AnyFunSuite {
     // files keep the source schema the streaming reader declares
     val raw = spark.read.parquet(s"$dir/events.parquet")
       .withColumn("ms", expr("unix_millis(CAST(ts AS TIMESTAMP))"))
-    val d = java.nio.file.Files.createTempDirectory("graft-mb-sess").toFile
+    val d = TestSpark.tempDir("graft-mb-sess").toFile
     val ranges = (Long.MinValue +: cutsMs) :+ Long.MaxValue
     for (i <- 0 until ranges.length - 1) {
       val sd = new java.io.File(d, s"slice$i")
@@ -513,7 +513,7 @@ class StreamingSpec extends AnyFunSuite {
     // each arriving doc's band rows land in one microbatch, and the
     // complete-mode aggregate must merge batches into exactly the one-shot
     // result (same static corpus index both ways)
-    val d = java.nio.file.Files.createTempDirectory("graft-x12-mb").toFile
+    val d = TestSpark.tempDir("graft-x12-mb").toFile
     val raw = spark.read.parquet(s"$dir/documents.parquet")
     val ids = raw.select("doc_id").collect().map(_.getLong(0)).sorted
     val cuts = Seq(ids((ids.length / 3).toInt), ids((2 * ids.length / 3).toInt))
@@ -548,7 +548,7 @@ class StreamingSpec extends AnyFunSuite {
     // the reference's pipeline as an incremental job: documents split into 3
     // time-ordered files, one per trigger — the running (word, cnt) state
     // must merge across microbatches into exactly the batch wordcount
-    val d = java.nio.file.Files.createTempDirectory("graft-x14-mb").toFile
+    val d = TestSpark.tempDir("graft-x14-mb").toFile
     val raw = spark.read.parquet(s"$dir/documents.parquet")
     val ids = raw.select("doc_id").collect().map(_.getLong(0)).sorted
     val cuts = Seq(ids(ids.length / 3), ids(2 * ids.length / 3))
@@ -580,7 +580,7 @@ class StreamingSpec extends AnyFunSuite {
     // total order is merge-order independent, the converged manifest
     // must equal the batch draw at ANY arrival slicing — the property a
     // reservoir sampler (arrival-history-dependent state) would fail
-    val d = java.nio.file.Files.createTempDirectory("graft-x37-mb").toFile
+    val d = TestSpark.tempDir("graft-x37-mb").toFile
     val raw = spark.read.parquet(s"$dir/documents.parquet")
     val ids = raw.select("doc_id").collect().map(_.getLong(0)).sorted
     val cuts = Seq(ids(ids.length / 3), ids(2 * ids.length / 3))
@@ -611,7 +611,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("x14a update deltas: each batch emits exactly its slice's vocabulary; latest upsert == batch wordcount") {
     import org.apache.spark.sql.functions._
-    val d = java.nio.file.Files.createTempDirectory("graft-x14a-mb").toFile
+    val d = TestSpark.tempDir("graft-x14a-mb").toFile
     // the sf0.001 corpus has a 31-word vocabulary every third covers, which
     // would make the delta property vacuous — plant a word that exists ONLY
     // in slice 0, so later triggers provably do NOT re-emit untouched keys
@@ -666,7 +666,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("x17a zero-state decontam == stateful x17 verdicts, sliced or not") {
-    val d = java.nio.file.Files.createTempDirectory("graft-x17a-mb").toFile
+    val d = TestSpark.tempDir("graft-x17a-mb").toFile
     val raw = spark.read.parquet(s"$dir/documents.parquet")
     val ids = raw.select("doc_id").collect().map(_.getLong(0)).sorted
     val cuts = Seq(ids(ids.length / 3), ids(2 * ids.length / 3))
@@ -698,7 +698,7 @@ class StreamingSpec extends AnyFunSuite {
   test("x15 streamed mixture manifest is row-for-row the batch manifest across 3 slices") {
     // stateless admission: copy counts depend only on doc_id + the static
     // weight table, so slicing the arrival order must change nothing
-    val d = java.nio.file.Files.createTempDirectory("graft-x15-mb").toFile
+    val d = TestSpark.tempDir("graft-x15-mb").toFile
     val raw = spark.read.parquet(s"$dir/documents.parquet")
     val ids = raw.select("doc_id").collect().map(_.getLong(0)).sorted
     val cuts = Seq(ids(ids.length / 3), ids(2 * ids.length / 3))
@@ -725,7 +725,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("x16 streamed LM scores over 3 slices equal batch t17 (static model, merged state)") {
-    val d = java.nio.file.Files.createTempDirectory("graft-x16-mb").toFile
+    val d = TestSpark.tempDir("graft-x16-mb").toFile
     val raw = spark.read.parquet(s"$dir/documents.parquet")
     val ids = raw.select("doc_id").collect().map(_.getLong(0)).sorted
     val cuts = Seq(ids(ids.length / 3), ids(2 * ids.length / 3))
@@ -756,7 +756,7 @@ class StreamingSpec extends AnyFunSuite {
     // arrive inside its own row, so slicing the arrivals must merge to the
     // batch verdict set exactly (shared hashSetsOf/contaminationCounts
     // spelling — parity by construction, pinned here end-to-end)
-    val d = java.nio.file.Files.createTempDirectory("graft-x17-mb").toFile
+    val d = TestSpark.tempDir("graft-x17-mb").toFile
     val raw = spark.read.parquet(s"$dir/documents.parquet")
     val ids = raw.select("doc_id").collect().map(_.getLong(0)).sorted
     val cuts = Seq(ids(ids.length / 3), ids(2 * ids.length / 3))
@@ -786,7 +786,7 @@ class StreamingSpec extends AnyFunSuite {
   test("x18 streamed bloom verdicts over 3 slices equal batch d24 (zero state)") {
     // per-row verdicts are pure functions of (fp, static corpus state) —
     // arrival slicing must change nothing, with no state store involved
-    val d = java.nio.file.Files.createTempDirectory("graft-x18-mb").toFile
+    val d = TestSpark.tempDir("graft-x18-mb").toFile
     val raw = spark.read.parquet(s"$dir/documents.parquet")
     val ids = raw.select("doc_id").collect().map(_.getLong(0)).sorted
     val cuts = Seq(ids(ids.length / 3), ids(2 * ids.length / 3))
@@ -923,7 +923,7 @@ class StreamingSpec extends AnyFunSuite {
     import java.nio.file.Files
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val d = Files.createTempDirectory("graft-tie").toString
+    val d = TestSpark.tempDir("graft-tie").toString
     val H = 3600L * 1000_000_000L // one hour in nanos
     val M = 60L * 1000_000_000L   // one minute
     val base = 1700000000L * 1000_000_000L

@@ -10,9 +10,21 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.jobs.WordCountJob
 
 /** Golden end-to-end tests for the reference-parity job (SURVEY.md §5 item 1)
-  * plus quirk pin-tests (item 4): intended whitespace semantics by default. */
+  * plus quirk pin-tests (item 4): intended whitespace semantics by default.
+  * Every default-sink case runs on both finishes: at the default conf
+  * (these corpora fit the broadcast threshold, so the driver sorts and
+  * writes the files) under its plain name, and with the threshold at -1
+  * (the distributed range sink) under the same name plus
+  * " (distributed sink)". */
 class WordCountJobSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  private val Distributed = "spark.sql.autoBroadcastJoinThreshold" -> "-1"
+
+  private def bothPaths(name: String)(body: => Unit): Unit = {
+    test(name)(body)
+    test(name + " (distributed sink)")(GraftSession.withConf(spark, Distributed)(body))
+  }
 
   private val corpus =
     """the quick brown fox jumps over the lazy dog
@@ -25,7 +37,7 @@ class WordCountJobSpec extends AnyFunSuite {
       .groupBy(identity).view.mapValues(_.length.toLong).toMap
 
   private def writeInput(text: String): Path = {
-    val f = Files.createTempFile("wc-input", ".txt")
+    val f = TestSpark.tempFile("wc-input", ".txt")
     Files.writeString(f, text)
     f
   }
@@ -33,7 +45,7 @@ class WordCountJobSpec extends AnyFunSuite {
   private def runJob(text: String, r: Int, fidelity: Boolean = false,
       fidelityTok: Boolean = false, chunkSize: Int = 2): Seq[Path] = {
     val in = writeInput(text)
-    val out = Files.createTempDirectory("wc-out")
+    val out = TestSpark.tempDir("wc-out")
     WordCountJob.run(spark, WordCountJob.Config(
       jobName = "t", numReducer = r, delay = 0, inputPath = in.toString,
       chunkSize = chunkSize, localityConfigPath = "unused", outputDir = out.toString,
@@ -51,24 +63,32 @@ class WordCountJobSpec extends AnyFunSuite {
     }
   }
 
+  /** A Zipf-like corpus of ~3000 distinct words, enough to span files. */
+  private lazy val skewedText: String = {
+    val rnd = new scala.util.Random(17)
+    val vocab = Vector.tabulate(3000)(i => s"w${i * 7919 % 3001}x${i % 13}")
+    Seq.fill(400)(Seq.fill(50)(vocab((rnd.nextDouble() * rnd.nextDouble() *
+      vocab.size).toInt)).mkString(" ")).mkString("\n")
+  }
+
   private def parse(files: Seq[Path]): Seq[(String, Long)] =
     files.flatMap(f => Files.readAllLines(f).asScala)
       .map { l => val Array(w, n) = l.split(" "); (w, n.toLong) }
 
-  test("golden: merged (word,count) set matches the in-test oracle") {
+  bothPaths("golden: merged (word,count) set matches the in-test oracle") {
     val files = runJob(corpus, 3)
     assert(files.map(_.getFileName.toString) == Seq("t-1.out", "t-2.out", "t-3.out"))
     assert(parse(files).toMap == oracle(corpus))
   }
 
-  test("each output file is internally sorted ascending by word (hw4.cc:333)") {
+  bothPaths("each output file is internally sorted ascending by word (hw4.cc:333)") {
     runJob(corpus, 3).foreach { f =>
       val words = Files.readAllLines(f).asScala.map(_.split(" ")(0)).toSeq
       assert(words == words.sorted, s"unsorted: $f")
     }
   }
 
-  test("range sink: files are alphabetically contiguous across file order") {
+  bothPaths("range sink: files are alphabetically contiguous across file order") {
     // the property the reference report aimed for and missed (SURVEY quirk 7)
     val perFile = runJob(corpus, 3).map(f =>
       Files.readAllLines(f).asScala.map(_.split(" ")(0)).toSeq)
@@ -76,11 +96,11 @@ class WordCountJobSpec extends AnyFunSuite {
     assert(concatenated == concatenated.sorted)
   }
 
-  test("result is invariant under num_reducer (1 vs 5)") {
+  bothPaths("result is invariant under num_reducer (1 vs 5)") {
     assert(parse(runJob(corpus, 1)).toMap == parse(runJob(corpus, 5)).toMap)
   }
 
-  test("num_reducer > distinct words still writes exactly R files (empty ok)") {
+  bothPaths("num_reducer > distinct words still writes exactly R files (empty ok)") {
     val files = runJob("a b a", 4)
     assert(files.size == 4)
     assert(files.forall(Files.exists(_)))
@@ -151,7 +171,7 @@ class WordCountJobSpec extends AnyFunSuite {
     assert(perFile == Seq(Seq(), Seq("aa 1"), Seq("bbcc 1")))
   }
 
-  test("maxRecordsPerFile does not split a reducer's output (no word is lost)") {
+  bothPaths("maxRecordsPerFile does not split a reducer's output (no word is lost)") {
     // a session-level cap would make one reducer write several part files;
     // the job's writer option overrides it, so every word reaches t-<r>.out
     restoringConf("spark.sql.files.maxRecordsPerFile") {
@@ -168,9 +188,9 @@ class WordCountJobSpec extends AnyFunSuite {
     def explicit: Option[String] = spark.conf.getAll.get(key)
     def badRun(): Unit = WordCountJob.run(spark, WordCountJob.Config(
       jobName = "t", numReducer = 1, delay = 0,
-      inputPath = Files.createTempDirectory("wc-missing").resolve("nope.txt").toString,
+      inputPath = TestSpark.tempDir("wc-missing").resolve("nope.txt").toString,
       chunkSize = 2, localityConfigPath = "unused",
-      outputDir = Files.createTempDirectory("wc-out").toString))
+      outputDir = TestSpark.tempDir("wc-out").toString))
     restoringConf(key) {
       spark.conf.unset(key)
       runJob(corpus, 2)
@@ -196,15 +216,12 @@ class WordCountJobSpec extends AnyFunSuite {
     assert(physical.collect { case f: FilterExec => f }.isEmpty, plan)
   }
 
-  test("two runs write byte-identical concatenations; each run is sorted and range-contiguous") {
-    // Where the files split depends on the order the range sampler sees the
-    // aggregate's rows in, which Spark does not fix, so only the
-    // concatenation is pinned run to run.
-    val rnd = new scala.util.Random(17)
-    val vocab = Vector.tabulate(3000)(i => s"w${i * 7919 % 3001}x${i % 13}")
-    val text = Seq.fill(400)(Seq.fill(50)(vocab((rnd.nextDouble() * rnd.nextDouble() *
-      vocab.size).toInt)).mkString(" ")).mkString("\n")
-    val runs = Seq.fill(2)(runJob(text, 4))
+  bothPaths("two runs write byte-identical concatenations; each run is sorted and range-contiguous") {
+    // On the distributed sink where the files split depends on the order
+    // the range sampler sees the aggregate's rows in, which Spark does not
+    // fix, so this pins only the concatenation run to run; the driver
+    // sink's per-file bytes are pinned below.
+    val runs = Seq.fill(2)(runJob(skewedText, 4))
     val concatenated = runs.map(_.map(f => Files.readAllBytes(f).toSeq).reduce(_ ++ _))
     assert(concatenated(0) == concatenated(1))
     for (files <- runs) {
@@ -213,6 +230,40 @@ class WordCountJobSpec extends AnyFunSuite {
       perFile.foreach(ws => assert(ws == ws.sorted))
       assert(perFile.flatten == perFile.flatten.sorted, "files must be range-contiguous")
     }
-    assert(parse(runs.head).toMap == oracle(text))
+    assert(parse(runs.head).toMap == oracle(skewedText))
+  }
+
+  test("driver sink: two runs write byte-identical files, cut at exact line quantiles") {
+    // the driver sorts every word and cuts file r at line floor(n*r/R), so
+    // each file's bytes, not only their concatenation, repeat run to run
+    val runs = Seq.fill(2)(runJob(skewedText, 4).map(f => Files.readAllBytes(f).toSeq))
+    assert(runs(0) == runs(1))
+    val lines = runs(0).map(_.count(_ == '\n'.toByte))
+    val n = oracle(skewedText).size
+    assert(lines == (1 to 4).map(r => n * r / 4 - n * (r - 1) / 4), lines)
+  }
+
+  test("both sinks write the same bytes, in UTF-8 byte order, also for long and non-ASCII words") {
+    // words that tie on their first 8 bytes, and code points whose UTF-16
+    // order differs from their UTF-8 byte order (U+1F600 sorts before
+    // U+E000 as UTF-16, after it as UTF-8)
+    val text = Seq("prefixlongb", "prefixlonga", "prefixlong", "prefixlo", "prefixlongb",
+      "\uE000x", "\uD83D\uDE00y", "z", "é", "e\u0301", "Zz", "prefixlo").mkString(" ")
+    def bytes: Seq[Byte] = runJob(text, 3).flatMap(f => Files.readAllBytes(f).toSeq)
+    val driver = bytes
+    assert(GraftSession.withConf(spark, Distributed)(bytes) == driver)
+    val words = new String(driver.toArray, java.nio.charset.StandardCharsets.UTF_8)
+      .split("\n").map(_.split(" ")(0).getBytes(java.nio.charset.StandardCharsets.UTF_8)).toSeq
+    assert(words.size == oracle(text).size)
+    words.sliding(2).foreach { case Seq(x, y) => assert(java.util.Arrays.compareUnsigned(x, y) < 0) }
+  }
+
+  test("the default sink runs 2 Spark jobs when the counts fit the driver, 4 when they do not") {
+    // at the default conf: the aggregate's map stage, then one collect that
+    // skips it; at -1: the map stage, the range sampler, the range
+    // exchange and the sorted write
+    def jobs: Int = TestSpark.jobsOf(assert(parse(runJob(corpus, 3)).toMap == oracle(corpus)))
+    assert(jobs == 2)
+    assert(GraftSession.withConf(spark, Distributed)(jobs) == 4)
   }
 }

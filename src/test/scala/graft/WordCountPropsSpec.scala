@@ -48,7 +48,7 @@ class WordCountPropsSpec extends AnyFunSuite {
 
   private def countsOf(text: String): Map[String, Long] = {
     import java.nio.file.Files
-    val f = Files.createTempFile("wc-prop", ".txt")
+    val f = TestSpark.tempFile("wc-prop", ".txt")
     Files.writeString(f, text)
     val rows = WordCountJob.counts(spark, f.toString).collect()
     rows.map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -54,7 +52,7 @@ class ZorderSpec extends AnyFunSuite {
     val grid = spark.range(1L << 20)
       .select((col("id") % 1024).as("x"), (col("id") / 1024).cast("long").as("y"))
     def filesTouched(df: DataFrame, fileWidth: Long): Int = {
-      val d = Files.createTempDirectory("graft-zorder").toString
+      val d = TestSpark.tempDir("graft-zorder").toString
       df.withColumn("fid", expr(s"k div ${fileWidth}L"))
         .repartition(16, col("fid")).sortWithinPartitions("k")
         .write.mode("overwrite").partitionBy("fid").parquet(d)

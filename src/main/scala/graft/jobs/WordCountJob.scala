@@ -1,13 +1,12 @@
 package graft.jobs
 
-import java.nio.ByteBuffer
+import java.io.BufferedOutputStream
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.{Arrays, Comparator}
+import java.util.{Arrays, Comparator, UUID}
 import java.util.stream.IntStream
-import scala.jdk.CollectionConverters._
 import scala.util.Using
 
-import org.apache.spark.Partitioner
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.{SQLExecution, SparkPlan}
@@ -38,9 +37,8 @@ import graft.io.LocalFs
   * across file order.
   *
   * Fidelity mode reproduces the reference's actual partition function
-  * `int(word[0]) % R` (hw4.cc:476-487) on the RDD path with a custom
-  * [[org.apache.spark.Partitioner]] (partition by computed id, not by key
-  * hash).
+  * `int(word[0]) % R` (hw4.cc:476-487): file r holds the words whose
+  * first char (a UTF-16 unit) is r − 1 mod R, on either finish below.
   *
   * Scale posture: the aggregate is partial+final (the shuffle carries
   * each map task's distinct words only), and its map stage runs first, on
@@ -50,15 +48,16 @@ import graft.io.LocalFs
   * aggregate, sorts it and writes the R files itself, cutting them at
   * exact line quantiles — 2 Spark jobs, and every file's bytes repeat run
   * to run. Otherwise (above the threshold, at −1, or without AQE's stage
-  * statistics) the sink is `repartitionByRange(R, word) →
-  * sortWithinPartitions` over the already-executed aggregate — 4 jobs
-  * (the map stage, the range sampler, the range exchange, the sorted
-  * write), the map stage not run again — and the driver only renames the
-  * R files. On that path where the files split is not guaranteed to
+  * statistics) the aggregate, already executed, is partitioned by
+  * `repartitionByRange(R, word)` and sorted within each partition, and
+  * one task per partition writes its file — 4 jobs (the map stage, the
+  * range sampler, the range exchange, the write), the map stage not run
+  * again. On that path where the files split is not guaranteed to
   * repeat: the range sampler samples the aggregate's rows in the order the
   * shuffle fetch returns them, which Spark does not fix. Only the
   * concatenation of the R files is deterministic (`WordCountJobSpec` pins
-  * both paths).
+  * both paths). Both finishes write every line through one writer, in
+  * Spark's string order (UTF-8 bytes, unsigned).
   */
 object WordCountJob {
 
@@ -76,15 +75,6 @@ object WordCountJob {
       outputDir: String,
       fidelityPartitioner: Boolean = false,
       fidelityTokenizer: Boolean = false)
-
-  /** hw4.cc:479 — reducer id = first char (as int) mod R. Skew-prone by
-    * design; exists only for fidelity experiments. */
-  final class FirstCharPartitioner(val numPartitions: Int) extends Partitioner {
-    override def getPartition(key: Any): Int = key match {
-      case s: String if s.nonEmpty => math.floorMod(s.charAt(0).toInt, numPartitions)
-      case _ => 0
-    }
-  }
 
   /** Word counts as a DataFrame (word: string, count: bigint) — the logical
     * core of [[run]]. */
@@ -155,45 +145,42 @@ object WordCountJob {
   def run(spark: SparkSession, cfg: Config): Seq[Path] = {
     val out = Paths.get(cfg.outputDir)
     Files.createDirectories(out)
-    val staging = out.resolve(s".${cfg.jobName}-staging")
+    // Every file exists, empty, before any job runs: the distributed
+    // finish writes one file per partition it gets, and a range exchange
+    // over fewer distinct words than R makes fewer partitions, an empty
+    // input none at all.
+    val files = (1 to cfg.numReducer).map(r => out.resolve(s"${cfg.jobName}-$r.out"))
+    files.foreach(Files.write(_, Array.emptyByteArray))
 
-    // The write runs with `file:` bound to LocalFs (no process forked per
-    // output, .crc or commit file); withConf restores the session conf
-    // (set or unset) however the job ends.
+    // The input is listed and read through `file:`, bound here to LocalFs
+    // (Hadoop's chmod and readlink answered without forking a process);
+    // withConf restores the session conf (set or unset) however the job
+    // ends.
     GraftSession.withConf(spark,
         LocalFs.sessionBinding :+ (TwoLevelAggMap -> "false"): _*) {
       val c =
         if (cfg.fidelityTokenizer) fidelityCounts(spark, cfg.inputPath, cfg.chunkSize)
         else counts(spark, cfg.inputPath)
-      if (cfg.fidelityPartitioner) {
-        // RDD path: partition BY computed reducer id (hw4.cc:479), sort within.
-        c.rdd.map(r => (r.getString(0), r.getLong(1)))
-          .repartitionAndSortWithinPartitions(new FirstCharPartitioner(cfg.numReducer))
-          .map { case (w, n) => s"$w $n" }
-          .saveAsTextFile(staging.toString)
-        rename(staging, out, cfg.jobName, cfg.numReducer)
-      } else mapStage(spark, c) match {
-        case Left(rows) => writeSorted(rows, out, cfg.jobName, cfg.numReducer)
-        case Right(aggregate) =>
-          // Intended semantics: range partition → balanced + globally
-          // contiguous. maxRecordsPerFile=0 overrides a session-level cap:
-          // one file per reducer is the contract rename() relies on.
-          aggregate.repartitionByRange(cfg.numReducer, col("word"))
-            .sortWithinPartitions("word")
-            .select(concat_ws(" ", col("word"), col("count")))
-            .write.mode("overwrite").option("maxRecordsPerFile", 0L)
-            .text(staging.toString)
-          rename(staging, out, cfg.jobName, cfg.numReducer)
+      mapStage(spark, c) match {
+        case Left(rows) => writeSorted(rows, files, cfg.fidelityPartitioner)
+        case Right(aggregate) => writeDistributed(aggregate, files, cfg.fidelityPartitioner)
       }
     }
+    files
   }
+
+  /** hw4.cc:479 — the fidelity reducer of `word`: its first char (a UTF-16
+    * unit, 0 for the empty word) mod R. Skew-prone by design; exists only
+    * for fidelity experiments. */
+  private def firstCharReducer(word: String, r: Int): Int =
+    if (word.isEmpty) 0 else word.charAt(0) % r
 
   /** Runs the map stage of `counts`' plan, then picks the finish by the
     * bytes it wrote to the shuffle: when they fit the driver
     * ([[GraftSession.fitsDriver]]) the final aggregate's rows, collected
     * in one more job; otherwise the final aggregate as a DataFrame over
-    * the executed plan, so the range sink's jobs skip the map stage. The
-    * map stage runs once either way.
+    * the executed plan, so the distributed finish's jobs skip the map
+    * stage. The map stage runs once either way.
     *
     * `execute()` on an adaptive plan runs every shuffle stage and returns
     * the final stage's RDD without running it. Without AQE there are no
@@ -243,61 +230,69 @@ object WordCountJob {
 
   /** The driver finish: sorts the (word, count) rows by word in the byte
     * order Spark's sort uses (`UTF8String.binaryCompare`) and writes them
-    * as `word count` lines straight to `<job>-<r>.out`, file r holding
-    * lines ⌊n(r−1)/R⌋ until ⌊nr/R⌋. The cuts are exact line quantiles, so
-    * every file's bytes repeat run to run. The files are built in
-    * parallel: the sorted lines point into the collected rows in random
-    * order, so building one is bound by memory latency. */
-  private def writeSorted(rows: Array[InternalRow], out: Path, job: String, r: Int): Seq[Path] = {
+    * to the R files. By default file r holds lines ⌊n(r−1)/R⌋ until ⌊nr/R⌋:
+    * the cuts are exact line quantiles, so every file's bytes repeat run
+    * to run. Under the fidelity partitioner each file holds its reducer's
+    * lines, in the same order. The files are built in parallel: the sorted
+    * lines point into the collected rows in random order, so building one
+    * is bound by memory latency. */
+  private def writeSorted(rows: Array[InternalRow], files: Seq[Path], fidelity: Boolean): Unit = {
     val lines = rows.map(row => new Line(row.getUTF8String(0), row.getLong(1)))
     Arrays.parallelSort(lines, byWord)
+    val r = files.size
     val n = lines.length.toLong
-    val files = (1 to r).map(i => out.resolve(s"$job-$i.out"))
+    val parts =
+      if (fidelity) {
+        val byReducer = lines.groupBy(l => firstCharReducer(l.word.toString, r))
+        (0 until r).map(byReducer.getOrElse(_, Array.empty[Line]))
+      } else (0 until r).map(i => lines.slice((n * i / r).toInt, (n * (i + 1) / r).toInt))
     IntStream.range(0, r).parallel().forEach { i =>
-      val part = lines.slice((n * i / r).toInt, (n * (i + 1) / r).toInt)
-      // a line is the word, a space, at most 19 digits and a newline
-      val buf = ByteBuffer.allocate(part.map(_.word.numBytes + 21).sum)
-      val digits = new Array[Byte](19)
-      for (l <- part) {
-        l.word.writeTo(buf)
-        buf.put(' '.toByte)
-        var v = l.count
-        var d = digits.length
-        while ({ d -= 1; digits(d) = ('0' + v % 10).toByte; v /= 10; v != 0 }) ()
-        buf.put(digits, d, digits.length - d)
-        buf.put('\n'.toByte)
-      }
-      Using.resource(Files.newOutputStream(files(i)))(_.write(buf.array, 0, buf.position))
+      writeLines(parts(i).iterator.map(l => (l.word, l.count)), files(i))
     }
-    files
   }
 
-  /** Map opaque `part-NNNNN*` outputs to deterministic `<job>-<r>.out`
-    * (r = partitionId + 1, matching hw4.cc:352's taskid+1), creating empty
-    * files for partitions Spark skipped (empty partitions write no file). */
-  private def rename(staging: Path, out: Path, job: String, r: Int): Seq[Path] = {
-    val parts = Using.resource(Files.list(staging)) { stream =>
-      stream.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-")).toSeq
-    }
-    val byIdx = parts.groupBy(_.getFileName.toString.split("-")(1).toInt).map {
-      case (i, Seq(p)) => i -> p
-      case (i, ps) => throw new IllegalStateException(
-        s"reducer $i wrote ${ps.size} files; expected one: ${ps.map(_.getFileName).mkString(", ")}")
-    }
-    val targets = (0 until r).map { i =>
-      val target = out.resolve(s"$job-${i + 1}.out")
-      byIdx.get(i) match {
-        case Some(p) => Files.move(p, target, StandardCopyOption.REPLACE_EXISTING)
-        case None    => Files.write(target, Array.emptyByteArray)
+  /** The distributed finish: the aggregate partitioned into R ranges of
+    * words (or, under the fidelity partitioner, by reducer id), sorted
+    * within each partition, and written by one task per partition to file
+    * partition id + 1 (hw4.cc:352's taskid + 1). */
+  private def writeDistributed(aggregate: DataFrame, files: Seq[Path], fidelity: Boolean): Unit = {
+    val r = files.size
+    val parted =
+      if (fidelity)
+        aggregate.repartitionById(r, udf((w: String) => firstCharReducer(w, r)).apply(col("word")))
+      else aggregate.repartitionByRange(r, col("word"))
+    val qe = parted.sortWithinPartitions("word").queryExecution
+    val names = files.map(_.toString)
+    SQLExecution.withNewExecutionId(qe) {
+      qe.toRdd.foreachPartition { rows =>
+        writeLines(rows.map(row => (row.getUTF8String(0), row.getLong(1))),
+          Paths.get(names(TaskContext.getPartitionId())))
       }
-      target
     }
-    // best-effort cleanup of the staging dir (_SUCCESS, CRCs)
-    val leftovers = Using.resource(Files.walk(staging))(
-      _.iterator().asScala.toSeq)
-    leftovers.reverse.foreach(p =>
-      try Files.deleteIfExists(p) catch { case _: Exception => () })
-    targets
+  }
+
+  /** Writes `word count` lines (hw4.cc:350-357) to `file`, replacing it
+    * whole: the lines go to a fresh sibling first, which is then moved
+    * over `file` in one step, so a failed or duplicate task attempt never
+    * leaves a part-written file. */
+  private def writeLines(lines: Iterator[(UTF8String, Long)], file: Path): Unit = {
+    val tmp = file.resolveSibling(s".${file.getFileName}.${UUID.randomUUID}.tmp")
+    try {
+      Using.resource(new BufferedOutputStream(Files.newOutputStream(tmp), 1 << 16)) { os =>
+        // a space, at most 19 digits and a newline
+        val digits = new Array[Byte](21)
+        digits(20) = '\n'.toByte
+        for ((word, count) <- lines) {
+          word.writeTo(os)
+          var v = count
+          var d = 20
+          while ({ d -= 1; digits(d) = ('0' + v % 10).toByte; v /= 10; v != 0 }) ()
+          d -= 1
+          digits(d) = ' '.toByte
+          os.write(digits, d, digits.length - d)
+        }
+      }
+      Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
 }

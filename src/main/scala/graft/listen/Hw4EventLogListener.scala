@@ -32,7 +32,9 @@ import graft.jobs.WordCountJob
   * The reduce lines therefore follow the job's result stages, not R: on
   * WordCountJob's driver finish they are the final aggregate's tasks (as
   * many as AQE coalesced its shuffle into, 2 in the benchmark's run), on
-  * the distributed sink the range sampler's tasks plus the R writers.
+  * the distributed finish the range sampler's tasks plus at most R writer
+  * tasks (one per partition the range exchange made; under the fidelity
+  * partitioner no sampler and exactly R writers).
   *
   * A stage is classified by `StageInfo.shuffleDepId` (defined exactly when
   * the stage writes shuffle output), which is exact under AQE, where each

@@ -177,8 +177,7 @@ object Similarity {
     * every plane count — s31/s36 gate the autoPlanes-derived default,
     * s32 gates fixed planes = 6. */
   private[graft] def graphBeam(s: SparkSession, dir: String,
-      planes: Int, idxFilter: Column = lit(true),
-      entryFallback: Boolean = false): DataFrame = {
+      planes: Int, idxFilter: Column = lit(true)): DataFrame = {
     val e = emb(s, dir).select(col("vec_id"), col("v")).graftCkpt()
     // ball carries every vector (query buckets must resolve even for a
     // query outside the predicate); b is the INDEX side — s39's
@@ -233,35 +232,10 @@ object Similarity {
     // therefore data-dependent; AnnIvfSpec pins that every gate query
     // survives the s39 predicate at the gate SFs, so a fixture regen
     // that empties a bucket trips a spec, not a silent 20-row gate.
-    // `entryFallback` (VERDICT r16 item 7, OFF in every gated def —
-    // the oracle twin stays the exact inner join): when the exact
-    // bucket is empty inside the filtered index, probe the planes
-    // hamming-1 buckets (the same xor flips the edge build multi-probes)
-    // and enter from the min-id vector there, preferring (hamming
-    // distance, node) — completeness becomes data-independent up to
-    // distance 1 while a resolvable exact bucket yields the IDENTICAL
-    // entry (hd = 0 ranks first), pinned in AnnIvfSpec.
-    val qb = ball.filter(col("vec_id") < 5)
+    val entry = ball.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("bucket").as("qbk"))
-    val exactEntry = qb
       .join(b.select(col("vec_id"), col("bucket")), col("bucket") === col("qbk"))
       .groupBy("query_id").agg(min("vec_id").as("node"))
-    val entry =
-      if (!entryFallback) exactEntry
-      else {
-        val h1 = qb.select(col("query_id"),
-            explode(array((0 until planes).map(p =>
-              col("qbk").bitwiseXOR(lit(1 << p))): _*)).as("pbk"))
-          .join(b.select(col("vec_id"), col("bucket")),
-            col("bucket") === col("pbk"))
-          .groupBy("query_id").agg(min("vec_id").as("node"))
-        val wEntry = Window.partitionBy("query_id")
-          .orderBy(col("hd"), col("node"))
-        exactEntry.withColumn("hd", lit(0))
-          .unionByName(h1.withColumn("hd", lit(1)))
-          .withColumn("rk", row_number().over(wEntry))
-          .filter(col("rk") === 1).select("query_id", "node")
-      }
     val wb = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("node"))
     var beam = q.join(broadcast(entry), "query_id")

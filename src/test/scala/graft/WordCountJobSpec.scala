@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.execution.FilterExec
@@ -11,11 +12,11 @@ import graft.jobs.WordCountJob
 
 /** Golden end-to-end tests for the reference-parity job (SURVEY.md §5 item 1)
   * plus quirk pin-tests (item 4): intended whitespace semantics by default.
-  * Every default-sink case runs on both finishes: at the default conf
-  * (these corpora fit the broadcast threshold, so the driver sorts and
-  * writes the files) under its plain name, and with the threshold at -1
-  * (the distributed range sink) under the same name plus
-  * " (distributed sink)". */
+  * Every case that writes through a partitioner runs on both finishes: at
+  * the default conf (these corpora fit the broadcast threshold, so the
+  * driver sorts and writes the files) under its plain name, and with the
+  * threshold at -1 (one writer task per partition) under the same name
+  * plus " (distributed sink)". */
 class WordCountJobSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -50,17 +51,6 @@ class WordCountJobSpec extends AnyFunSuite {
       jobName = "t", numReducer = r, delay = 0, inputPath = in.toString,
       chunkSize = chunkSize, localityConfigPath = "unused", outputDir = out.toString,
       fidelityPartitioner = fidelity, fidelityTokenizer = fidelityTok))
-  }
-
-  /** Runs `body`, then puts `key` back as the session had it: set to its
-    * old value, or unset. `getAll` holds only the keys set on the session
-    * (`getOption` would report the default for an unset key). */
-  private def restoringConf(key: String)(body: => Unit): Unit = {
-    val prev = spark.conf.getAll.get(key)
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
   }
 
   /** A Zipf-like corpus of ~3000 distinct words, enough to span files. */
@@ -107,7 +97,7 @@ class WordCountJobSpec extends AnyFunSuite {
     assert(parse(files).toMap == Map("a" -> 2L, "b" -> 1L))
   }
 
-  test("fidelity partitioner places every word at int(word[0]) % R (hw4.cc:479)") {
+  bothPaths("fidelity partitioner places every word at int(word[0]) % R (hw4.cc:479)") {
     val files = runJob(corpus, 3, fidelity = true)
     files.zipWithIndex.foreach { case (f, idx) =>
       Files.readAllLines(f).asScala.foreach { l =>
@@ -161,7 +151,7 @@ class WordCountJobSpec extends AnyFunSuite {
     assert(parse(files).toMap == Map("a" -> 1L, "" -> 1L, "b" -> 1L))
   }
 
-  test("both fidelity flags together reproduce the reference byte-for-byte") {
+  bothPaths("both fidelity flags together reproduce the reference byte-for-byte") {
     // chunk0 = "aa bb"+"cc dd" fused = "aa bbcc dd" → tokens "aa","bbcc"
     // ("dd" dropped); chunk1 = "ee" → none. Partitions: int(char) % 3:
     // 'a'=97 → 1 (file 2), 'b'=98 → 2 (file 3); file 1 stays empty.
@@ -172,10 +162,9 @@ class WordCountJobSpec extends AnyFunSuite {
   }
 
   bothPaths("maxRecordsPerFile does not split a reducer's output (no word is lost)") {
-    // a session-level cap would make one reducer write several part files;
-    // the job's writer option overrides it, so every word reaches t-<r>.out
-    restoringConf("spark.sql.files.maxRecordsPerFile") {
-      spark.conf.set("spark.sql.files.maxRecordsPerFile", "2")
+    // a session-level cap on Spark's file writers has no say: each
+    // reducer's lines go to t-<r>.out through the job's own writer
+    GraftSession.withConf(spark, "spark.sql.files.maxRecordsPerFile" -> "2") {
       val files = runJob("a b c d e f g h a b", 2)
       assert(files.map(_.getFileName.toString) == Seq("t-1.out", "t-2.out"))
       assert(parse(files).toMap ==
@@ -191,7 +180,7 @@ class WordCountJobSpec extends AnyFunSuite {
       inputPath = TestSpark.tempDir("wc-missing").resolve("nope.txt").toString,
       chunkSize = 2, localityConfigPath = "unused",
       outputDir = TestSpark.tempDir("wc-out").toString))
-    restoringConf(key) {
+    GraftSession.withConf(spark, key -> "true") {
       spark.conf.unset(key)
       runJob(corpus, 2)
       assert(explicit.isEmpty, "unset must stay unset")
@@ -243,12 +232,14 @@ class WordCountJobSpec extends AnyFunSuite {
     assert(lines == (1 to 4).map(r => n * r / 4 - n * (r - 1) / 4), lines)
   }
 
+  /** Words that tie on their first 8 bytes, and code points whose UTF-16
+    * order differs from their UTF-8 byte order (U+1F600 sorts before
+    * U+E000 as UTF-16, after it as UTF-8). */
+  private val orderText = Seq("prefixlongb", "prefixlonga", "prefixlong", "prefixlo", "prefixlongb",
+    "\uE000x", "\uD83D\uDE00y", "z", "é", "e\u0301", "Zz", "prefixlo").mkString(" ")
+
   test("both sinks write the same bytes, in UTF-8 byte order, also for long and non-ASCII words") {
-    // words that tie on their first 8 bytes, and code points whose UTF-16
-    // order differs from their UTF-8 byte order (U+1F600 sorts before
-    // U+E000 as UTF-16, after it as UTF-8)
-    val text = Seq("prefixlongb", "prefixlonga", "prefixlong", "prefixlo", "prefixlongb",
-      "\uE000x", "\uD83D\uDE00y", "z", "é", "e\u0301", "Zz", "prefixlo").mkString(" ")
+    val text = orderText
     def bytes: Seq[Byte] = runJob(text, 3).flatMap(f => Files.readAllBytes(f).toSeq)
     val driver = bytes
     assert(GraftSession.withConf(spark, Distributed)(bytes) == driver)
@@ -258,12 +249,48 @@ class WordCountJobSpec extends AnyFunSuite {
     words.sliding(2).foreach { case Seq(x, y) => assert(java.util.Arrays.compareUnsigned(x, y) < 0) }
   }
 
+  bothPaths("fidelity files are each in UTF-8 byte order, as the default sink's") {
+    // one reducer puts U+1F600 and U+E000 in the same file
+    val files = runJob(orderText, 1, fidelity = true)
+    val words = Files.readAllLines(files.head).asScala.toSeq
+      .map(_.split(" ")(0).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    assert(words.size == oracle(orderText).size)
+    words.sliding(2).foreach { case Seq(x, y) => assert(java.util.Arrays.compareUnsigned(x, y) < 0) }
+  }
+
+  bothPaths("empty input writes R empty files") {
+    for (fidelity <- Seq(false, true)) {
+      val files = runJob("", 3, fidelity)
+      assert(files.map(_.getFileName.toString) == Seq("t-1.out", "t-2.out", "t-3.out"))
+      assert(files.forall(Files.size(_) == 0))
+      val listed = Using.resource(Files.list(files.head.getParent))(_.count)
+      assert(listed == 3, "the output dir holds the R files and nothing else")
+    }
+  }
+
+  bothPaths("a first char outside the BMP (U+1F600) lands at floorMod(charAt(0), R)") {
+    // charAt(0) is the high surrogate 0xD83D = 55357, and 55357 % 3 = 1;
+    // 'b' = 98 lands in file 3, and file 1 stays empty
+    val w = "\uD83D\uDE00y"
+    val files = runJob(s"$w b $w", 3, fidelity = true)
+    assert(files.map(f => Files.readAllLines(f).asScala.toSeq) == Seq(Seq(), Seq(s"$w 2"), Seq("b 1")))
+  }
+
+  private def jobs(fidelity: Boolean): Int =
+    TestSpark.jobsOf(assert(parse(runJob(corpus, 3, fidelity)).toMap == oracle(corpus)))
+
   test("the default sink runs 2 Spark jobs when the counts fit the driver, 4 when they do not") {
     // at the default conf: the aggregate's map stage, then one collect that
     // skips it; at -1: the map stage, the range sampler, the range
     // exchange and the sorted write
-    def jobs: Int = TestSpark.jobsOf(assert(parse(runJob(corpus, 3)).toMap == oracle(corpus)))
-    assert(jobs == 2)
-    assert(GraftSession.withConf(spark, Distributed)(jobs) == 4)
+    assert(jobs(fidelity = false) == 2)
+    assert(GraftSession.withConf(spark, Distributed)(jobs(fidelity = false)) == 4)
+  }
+
+  test("the fidelity partitioner runs 2 Spark jobs on the driver finish, 3 distributed") {
+    // the same finishes; its exchange partitions by the computed reducer
+    // id, so there is no range sampler
+    assert(jobs(fidelity = true) == 2)
+    assert(GraftSession.withConf(spark, Distributed)(jobs(fidelity = true)) == 3)
   }
 }

@@ -9,9 +9,9 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit, pmod, sum, xxhash64}
 
-/** Benchmark main, and the measurement harness every tool shares: query
-  * selection is [[SparkEntry.select]], the timed-run loop is [[measure]],
-  * and every JSON line, row and artifact goes through [[json]].
+/** Benchmark main. Query selection is [[SparkEntry.select]] (shared with
+  * Verify and PlanDump), the timed-run loop is [[measure]], and every JSON
+  * line and artifact the mains write goes through [[json]].
   *
   * Per query: one untimed warm-up run (JIT + codegen + parquet footer
   * caching), then THREE timed runs with the median reported — a single

@@ -10,8 +10,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * (Exchange counts, join strategies, PushedFilters) are checkable offline
   * without running Spark. Each query also prints one `PLANCHECK` line
   * summarizing the executed plan's join strategies and scan count — the
-  * quick way to confirm "dimensions still broadcast at the 100× ScaleSmoke
-  * volume" without reading whole plans.
+  * quick way to confirm "dimensions still broadcast at this scale factor"
+  * without reading whole plans.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> [q1,q2,...]
   * With no query list, dumps every declared query. Streaming-harness

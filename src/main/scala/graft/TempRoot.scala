@@ -2,9 +2,9 @@ package graft
 
 /** The engine's one temp root: a temp dir per JVM that one shutdown hook
   * deletes recursively. Staged corpora (TextOps' t33–t43 inputs,
-  * x32/x34/x35's streams, StreamScaleSmoke's replicas) live under it — ONE
-  * root per JVM (ADVICE r4's temp-dir discipline: a bench session runs each
-  * query 4×; fresh dirs per call would leak a corpus copy each run).
+  * x32/x34/x35's streams) live under it — ONE root per JVM (ADVICE r4's
+  * temp-dir discipline: a bench session runs each query 4×; fresh dirs per
+  * call would leak a corpus copy each run).
   */
 object TempRoot {
   private lazy val root: java.io.File = {

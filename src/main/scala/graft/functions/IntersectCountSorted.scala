@@ -17,22 +17,27 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * PAIR. Jaccard follows as cnt / (|a| + |b| - cnt), identical to the
   * oracle's |intersect| / |distinct union| on distinct inputs.
   *
-  * Inputs MUST be sorted ascending and duplicate-free (non-null elements);
-  * this is an internal engine primitive, not a general SQL function.
+  * Inputs MUST be sorted ascending and duplicate-free; this is an internal
+  * engine primitive, not a general SQL function. Elements must be
+  * non-null: the walk reads them with `getLong`, which has no null case.
+  * Every caller passes `ShingleHash32.set` output (`containsNull = false`;
+  * d18's parquet-persisted index restores that type with `array_compact`),
+  * and a nullable-element array is rejected at analysis.
   */
 case class IntersectCountSorted(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  private def ok(t: DataType): Boolean = t match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
   override def checkInputDataTypes(): TypeCheckResult =
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<bigint> children, got " +
-        s"${left.dataType.sql}, ${right.dataType.sql}")
+    (left.dataType, right.dataType) match {
+      case (ArrayType(LongType, false), ArrayType(LongType, false)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+        TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires non-null array elements (containsNull = false), " +
+            "e.g. ShingleHash32.set output")
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires two array<bigint> children, got ${l.sql}, ${r.sql}")
+    }
 
   override def dataType: DataType = LongType
   override def prettyName: String = "intersect_count_sorted"

@@ -120,12 +120,12 @@ object WordCountJob {
       else allChunks
     chunks.flatMap { chunk =>
       val out = scala.collection.mutable.ArrayBuffer[String]()
-      var rest = chunk
-      var sp = rest.indexOf(' ')
+      var from = 0
+      var sp = chunk.indexOf(' ')
       while (sp >= 0) {                  // hw4.cc:460-465 — emit up to each space
-        out += rest.substring(0, sp)
-        rest = rest.substring(sp + 1)
-        sp = rest.indexOf(' ')
+        out += chunk.substring(from, sp)
+        from = sp + 1
+        sp = chunk.indexOf(' ', from)
       }
       out                                // trailing token (no space after) dropped
     }.toDF("word")

@@ -526,7 +526,11 @@ object Dedup {
         bandsFrom(sigsFromHv(corpus.select(col("doc_id"), col("hs").as("hv")))),
         bandsT, "band", 8)
     }
-    (s.table(setsT), s.table(bandsT))
+    // a parquet read declares every array element nullable; array_compact
+    // restores ShingleHash32.set's containsNull = false, which
+    // intersect_count_sorted requires (the sets hold no nulls, so no row
+    // changes)
+    (s.table(setsT).withColumn("hs", array_compact(col("hs"))), s.table(bandsT))
   }
 
   /** Verified near-dup edges (LSH candidates with exact Jaccard >= 0.5) —

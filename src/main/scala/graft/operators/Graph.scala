@@ -527,8 +527,9 @@ object Graph {
       // aggregation buffer is bounded by the order, NEVER corpus-scale, so
       // this is not the d3 viral-bucket shape) and in-row pair expansion:
       // one shuffle on the order key replaces distinct + self-join's three
-      // (no change at sf0.1 where fixed overhead dominates; 32 s → 25 s at
-      // the 100× ScaleSmoke, where the saved shuffles carry real volume)
+      // (no change at sf0.1 where fixed overhead dominates; 32 s → 25 s on
+      // a 100× volume-pure replica, where the saved shuffles carry real
+      // volume)
       val e = coOrderEdges(t(s, dir, "lineitem"))
       val deg = degrees(e)
       val oe = oriented(e)

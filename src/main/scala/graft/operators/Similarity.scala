@@ -78,8 +78,8 @@ object Similarity {
     * bucket at 256 deterministically-ranked members ((md5(id), id) —
     * d30's band-cap idiom, mirrored in the oracle) bounds build volume
     * at N·(planes+1)·256 pairs, linear in N — measured: the 100×
-    * ScaleSmoke (200k vectors, cap active) runs 78 s vs 15 s at 10× vs
-    * 3.3 s at 1×, i.e. ~5× wall per 10× rows (SCALE_FULL.json
+    * volume-pure replica (200k vectors, cap active) ran 78 s vs 15 s at
+    * 10× vs 3.3 s at 1×, i.e. ~5× wall per 10× rows (SCALE_FULL.json
     * s31_ann_graph_beam@100x; PLANS.md round 13). INACTIVE at every gate
     * SF (max bucket 169 at sf0.1), so gate results are unchanged. The
     * cap trades recall for boundedness once buckets overflow it — the
@@ -362,7 +362,7 @@ object Similarity {
     *
     * Norms are HOISTED out of the expansion: per-pair work must be ONE
     * dot product — the in-join spelling recomputes both self-dots per
-    * pair, a measured 3× on the ScaleSmoke 100× corpus. Same operand
+    * pair, a measured 3× on the 100× volume-pure replica. Same operand
     * order (dot / (na·nb)), so every double is bit-identical; centroids
     * are davg-exact per dimension (s15's decimal discipline) and a/b come
     * from order-independent conditional MINs, so the rollup hash-gates. */
@@ -1355,8 +1355,9 @@ object Similarity {
     // returns. The evaluator is corpus-invariant like s4 — both inputs
     // are k·|queries| rows however big the corpus — and the division by
     // the literal 5.0 on exact integer hits produces identical doubles
-    // in both engines (the s4 discipline). The STANDING measurement
-    // RecallSweep snapshots per plane count, now hash-gated per round.
+    // in both engines (the s4 discipline). The per-plane-count recall
+    // rows in SCALE_FULL.json measured the same quantity once; this row
+    // hash-gates it every round.
     // Grades the DEFAULT operator, i.e. the auto-planes walk (VERDICT
     // r14 item 1) — an evaluator that graded a spelling users don't run
     // would certify the wrong recall; at gate SFs the derived count is 4
@@ -1481,8 +1482,8 @@ object Similarity {
     // (the s4/s7/s10/s12/s33 family member for s37): per query, the share
     // of s1's exact float top-5 the int8 store returns. Both inputs are
     // k·|queries| rows however big the corpus; the denominator is the
-    // PER-QUERY exact-neighbor count (RecallSweep's ADVICE-r13 fix,
-    // mirrored in the oracle — ADVICE r14), not a literal 5, so a query
+    // PER-QUERY exact-neighbor count (ADVICE r13's recall fix, mirrored
+    // in the oracle — ADVICE r14), not a literal 5, so a query
     // with fewer than 5 true neighbors on a tiny corpus can't understate
     // its recall; integer-hits / integer-count divides to identical
     // doubles in both engines. Reads 1.0 at every gate SF — the "4×

@@ -96,8 +96,7 @@ object StreamFunnel {
   }
 
   /** The DataFrame→DataFrame spelling of the whole pipeline (watermark +
-    * typed fold), factored so replay harnesses (StreamScaleSmoke) can run
-    * it with their own source options and slice discipline. */
+    * typed fold); [[runToCompletion]] runs it over a parquet dir. */
   def transform(raw: DataFrame): DataFrame = {
     import raw.sparkSession.implicits._
     funnel(

@@ -4,9 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The measurement harness every tool shares: query selection
-  * ([[SparkEntry.select]]), the timed-run loop ([[Bench.measure]]) and the
-  * one JSON writer ([[Bench.json]]). */
+/** The measurement harness the mains share: query selection
+  * ([[SparkEntry.select]]), Bench's timed-run loop ([[Bench.measure]]) and
+  * the one JSON writer ([[Bench.json]]). */
 class HarnessSpec extends AnyFunSuite {
   private val known = Seq("q2", "q1", "x3")
 
@@ -63,14 +63,10 @@ class HarnessSpec extends AnyFunSuite {
     assert(w(0.0, 2) == "0.00")
   }
 
-  test("merging nothing re-writes each committed artifact byte for byte") {
-    Seq("BENCH_FULL.json", "SCALE_FULL.json", "STREAMSCALE_FULL.json")
-      .foreach { name =>
-        val orig = Files.readAllBytes(Paths.get(name))
-        val copy = TestSpark.tempDir("harness-art").resolve(name)
-        Files.write(copy, orig)
-        SmokeArtifact.merge(copy.toString, Nil)
-        assert(java.util.Arrays.equals(Files.readAllBytes(copy), orig), name)
-      }
+  test("BENCH_FULL.json read and re-written through Bench.json keeps every byte") {
+    val orig = Files.readAllBytes(Paths.get("BENCH_FULL.json"))
+    val back = Bench.json.writeValueAsString(
+      Bench.json.readTree(new String(orig, "UTF-8"))) + "\n"
+    assert(java.util.Arrays.equals(back.getBytes("UTF-8"), orig))
   }
 }

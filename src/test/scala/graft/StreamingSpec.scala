@@ -243,9 +243,9 @@ class StreamingSpec extends AnyFunSuite {
     // successor (cut emits successor < wm; kept holds have successor >= wm
     // and a timer armed at it), so across emitting batches the successor
     // ranges must be disjoint and increasing — the buffer drains with the
-    // watermark instead of accumulating the corpus. StreamScaleSmoke's
-    // 100× replay records the matching memory bound (max state ~5 MB for
-    // a 1M-row replay).
+    // watermark instead of accumulating the corpus. STREAMSCALE_FULL.json
+    // holds the matching memory bound from a 100× replay (max state ~5 MB
+    // for a 1M-row replay).
     val mb = timeSlicedDir(6)
     val rows = StreamingSessionize.runToCompletion(spark, mb,
         graft.streaming.StreamTwa.transform, "append", "x25-drain",

@@ -27,7 +27,7 @@ for a in "$@"; do
   esac
 done
 
-if pgrep -f 'graft\.(Verify|Bench|ScaleSmoke|StreamScaleSmoke|PlanDump|RecallSweep)' >/dev/null; then
+if pgrep -f 'graft\.(Verify|Bench|PlanDump)' >/dev/null; then
   echo "close.sh: another graft JVM is running — refusing to overlap" >&2
   exit 3
 fi

@@ -27,6 +27,13 @@ object Exprs {
   def davgSql(e: String, scale: Int = 6): String =
     s"(CAST(sum(CAST(($e) AS DECIMAL(18,$scale))) AS DOUBLE) / count(*))"
 
+  /** The first 8 hex digits of the md5 string column `col` as a BIGINT in
+    * [0, 2³²), folded digit by digit with instr/substr — the oracle-side
+    * twin of `HexPrefixToLong.hex8`. */
+  def hex8Sql(col: String): String = (0 until 8).map { i =>
+    s"(instr('0123456789abcdef', substr($col, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
+  }.mkString(" + ")
+
   /** Integer sums: Spark sum(int)=BIGINT but DuckDB sum(int)=HUGEINT, so the
     * oracle side must cast; Spark side is already long. */
   def lsum(c: Column): Column = sum(c).cast(LongType)

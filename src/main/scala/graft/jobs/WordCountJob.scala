@@ -74,7 +74,12 @@ object WordCountJob {
       localityConfigPath: String,
       outputDir: String,
       fidelityPartitioner: Boolean = false,
-      fidelityTokenizer: Boolean = false)
+      fidelityTokenizer: Boolean = false) {
+    // R = 0 would write no file and lose every count silently; a zero
+    // chunk size divides by zero in the fidelity tokenizer's tasks
+    require(numReducer > 0, s"numReducer (NUM_REDUCER) must be positive, got $numReducer")
+    require(chunkSize > 0, s"chunkSize (CHUNK_SIZE) must be positive, got $chunkSize")
+  }
 
   /** Word counts as a DataFrame (word: string, count: bigint) — the logical
     * core of [[run]]. */

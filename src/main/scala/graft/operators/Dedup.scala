@@ -410,9 +410,6 @@ object Dedup {
   /** Shared SQL for the oracle-side signature table (DuckDB dialect),
     * mirroring the affine family and b×r band packing bit-for-bit. */
   private[graft] val sigSqlCte: String = {
-    val hexToInt = (0 until 8).map { i =>
-      s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-    }.mkString(" + ")
     val sigExprs = (0 until numHashes).map(j =>
       s"list_min(list_transform(hv, h -> (${hashA(j)} * h + ${hashB(j)}) % $P)) AS s$j")
       .mkString(",\n    ")
@@ -423,7 +420,7 @@ object Dedup {
        |  SELECT doc_id,
        |    $sigExprs
        |  FROM (SELECT doc_id,
-       |          list_transform(list_transform(sh, x -> md5(x)), m -> $hexToInt) AS hv
+       |          list_transform(list_transform(sh, x -> md5(x)), m -> ${graft.Exprs.hex8Sql("m")}) AS hv
        |        FROM (SELECT doc_id,
        |                list_transform(generate_series(1, len(w)-2),
        |                               i -> array_to_string(w[i:i+2], ' ')) AS sh
@@ -476,18 +473,14 @@ object Dedup {
       |  FROM ch GROUP BY doc_id, chunk_id)""".stripMargin
 
   /** Oracle-side sorted distinct hash-set CTE (verify-side of d4/d9). */
-  private[graft] val hashSetSqlCte: String = {
-    val hexToInt = (0 until 8).map { i =>
-      s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-    }.mkString(" + ")
+  private[graft] val hashSetSqlCte: String =
     s"""sh AS (SELECT doc_id,
        |         list_distinct(list_transform(
        |           list_transform(list_transform(generate_series(1, len(w)-2),
        |                          i -> array_to_string(w[i:i+2], ' ')),
        |                          x -> md5(x)),
-       |           m -> $hexToInt)) AS hs
+       |           m -> ${graft.Exprs.hex8Sql("m")})) AS hs
        |       FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents) t)""".stripMargin
-  }
 
   /** d18's corpus-side index as a PERSISTED bucketed table pair — the
     * materialized form an incremental pipeline maintains across increments
@@ -2053,9 +2046,6 @@ object Dedup {
     // i.e. n_agree >= 1 — the tiny oracle states that as a WHERE over the
     // pairwise join (exactness preserved; only the plan differs).
     "d16_source_overlap" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
       val sketchExprs = (0 until numHashes).map(j =>
         s"min((${hashA(j)} * hv + ${hashB(j)}) % $P) AS s$j").mkString(",\n    ")
       val agree = (0 until numHashes).map(j =>
@@ -2065,7 +2055,7 @@ object Dedup {
          |          unnest(list_transform(generate_series(1, len(w)-2),
          |                                i -> array_to_string(w[i:i+2], ' '))) AS x
          |        FROM t),
-         |h AS (SELECT source, $hexToInt AS hv
+         |h AS (SELECT source, ${graft.Exprs.hex8Sql("m")} AS hv
          |      FROM (SELECT source, md5(x) AS m FROM shl) z),
          |sk AS (SELECT source,
          |    $sketchExprs
@@ -2127,9 +2117,6 @@ object Dedup {
     // one sigs pass + d9's truth; per config the same digest band key and
     // capped buckets, spelled relationally
     "d19_banding_sweep" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
       def cfg(r: Int): String = {
         val nb = numHashes / r
         val elems = (0 until nb).map { k =>
@@ -2141,7 +2128,7 @@ object Dedup {
            |    SELECT doc_id, unnest([$elems]) AS e
            |    FROM sigs WHERE s0 IS NOT NULL) t),
            |bd$r AS (SELECT doc_id,
-           |           CAST(k AS BIGINT) * 4294967296 + ($hexToInt) AS band
+           |           CAST(k AS BIGINT) * 4294967296 + (${graft.Exprs.hex8Sql("m")}) AS band
            |         FROM bx$r),
            |ok$r AS (SELECT band FROM bd$r GROUP BY band
            |         HAVING count(*) BETWEEN 2 AND $maxBucket),
@@ -2229,16 +2216,13 @@ object Dedup {
          |SELECT source_a, source_b, count(*) AS n_pairs
          |FROM es GROUP BY 1, 2""".stripMargin,
 
-    "d23_winnowing" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
+    "d23_winnowing" ->
       s"""WITH hv AS (
          |  SELECT doc_id,
          |    list_transform(list_transform(list_transform(generate_series(1, len(w)-2),
          |                   i -> array_to_string(w[i:i+2], ' ')),
          |                   x -> md5(x)),
-         |                   m -> $hexToInt) AS hv
+         |                   m -> ${graft.Exprs.hex8Sql("m")}) AS hv
          |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents) t),
          |ks AS (
          |  SELECT doc_id,
@@ -2263,8 +2247,7 @@ object Dedup {
          |SELECT d1, d2, n_shared, a.nf AS n1, b.nf AS n2,
          |  CAST(n_shared AS DOUBLE) / least(a.nf, b.nf) AS overlap
          |FROM pairs JOIN nf a ON pairs.d1 = a.doc_id
-         |           JOIN nf b ON pairs.d2 = b.doc_id""".stripMargin
-    },
+         |           JOIN nf b ON pairs.d2 = b.doc_id""".stripMargin,
 
     // same first-32 band, same 256 band cap, same substr-equality verify,
     // same strict length order

@@ -63,6 +63,15 @@ object Graph {
       .filter(col("c") >= 2)
       .graftCkpt()
 
+  /** Both orientations of an (a, b) edge list as (x, y), with the `carry`
+    * columns kept on each row. */
+  private[graft] def symmetric(e: DataFrame, x: String, y: String,
+      carry: String*): DataFrame = {
+    val kept = carry.map(col)
+    e.select(col("a").as(x) +: col("b").as(y) +: kept: _*)
+      .unionAll(e.select(col("b").as(x) +: col("a").as(y) +: kept: _*))
+  }
+
   /** Degree table of an (a, b) edge list. */
   private[graft] def degrees(e: DataFrame): DataFrame =
     e.select(col("a").as("v"))
@@ -273,8 +282,7 @@ object Graph {
     "g21_assortativity" -> { (s, dir) =>
       val dec = DecimalType(38, 0)
       val e = coOrderEdges(t(s, dir, "lineitem"))
-      val sym = e.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
+      val sym = symmetric(e, "src", "dst")
       val dg = degrees(e)
       val agg = sym
         .join(dg.select(col("v").as("src"), col("d").as("x0")), Seq("src"))
@@ -310,8 +318,7 @@ object Graph {
     // complement is g5's components question.
     "g15_bfs_layers" -> { (s, dir) =>
       val e = coOrderEdges(t(s, dir, "lineitem"))
-      val sym = e.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
+      val sym = symmetric(e, "src", "dst")
         .graftCkpt() // 3 rounds probe it
       val seeds = degrees(e).orderBy(col("d").desc, col("v")).limit(8)
         .select(col("v"), lit(0L).as("dist")).graftCkpt()
@@ -346,8 +353,7 @@ object Graph {
     // regardless of how many hubs the caller asks about.
     "g16_hub_closeness" -> { (s, dir) =>
       val e = coOrderEdges(t(s, dir, "lineitem"))
-      val sym = e.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
+      val sym = symmetric(e, "src", "dst")
         .graftCkpt() // 3 rounds probe it
       val seeds = degrees(e).orderBy(col("d").desc, col("v")).limit(8)
         .select(col("v").as("seed")).graftCkpt()
@@ -382,8 +388,7 @@ object Graph {
       // previously each iteration re-derived the union and re-aggregated
       // n, so the rank vector is now the only per-round shuffle (§2, §5).
       val n = deg.agg(count(lit(1)).as("n")).graftCkpt()
-      val de = e.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
+      val de = symmetric(e, "src", "dst")
         .graftCkpt()
       var r = deg.join(broadcast(n))
         .select(col("v"), expr(s"CAST($S div n AS BIGINT)").as("pr"))
@@ -416,8 +421,7 @@ object Graph {
       // g2's r18 discipline: symmetrized edges + n checkpointed ONCE,
       // re-read by every round and every delta join
       val n = deg.agg(count(lit(1)).as("n")).graftCkpt()
-      val de = e.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
+      val de = symmetric(e, "src", "dst")
         .graftCkpt()
       var r = deg.join(broadcast(n))
         .select(col("v"), expr(s"CAST($S div n AS BIGINT)").as("pr"))
@@ -461,8 +465,7 @@ object Graph {
       // g2's r18 discipline: the symmetrized weighted edges checkpoint
       // once and feed wdeg plus all three iterations (one |E|
       // materialization total); n likewise
-      val de = e.select(col("a").as("src"), col("b").as("dst"), col("c"))
-        .unionAll(e.select(col("b").as("src"), col("a").as("dst"), col("c")))
+      val de = symmetric(e, "src", "dst", "c")
         .graftCkpt()
       val wdeg = de.groupBy(col("src").as("v"))
         .agg(sum("c").cast("long").as("wd"))
@@ -499,8 +502,7 @@ object Graph {
     // full (cn, a, b) tiebreak, never a global sort.
     "g3_link_prediction" -> { (s, dir) =>
       val e = coOrderEdges(t(s, dir, "lineitem"))
-      val und = e.select(col("a").as("u"), col("b").as("v"))
-        .unionAll(e.select(col("b").as("u"), col("a").as("v")))
+      val und = symmetric(e, "u", "v")
       val degc = degrees(e).select(col("v").as("u"), col("d"))
       val ctr = und.join(degc, "u").filter(col("d") <= 64).select("u", "v")
       val cn = ctr.as("x").join(ctr.as("y"),
@@ -660,8 +662,7 @@ object Graph {
     // products are exact, and DuckDB's HUGEINT mirrors them).
     "g9_assortativity" -> { (s, dir) =>
       val e = coOrderEdges(t(s, dir, "lineitem"))
-      val und = e.select(col("a").as("u"), col("b").as("v"))
-        .unionAll(e.select(col("b").as("u"), col("a").as("v")))
+      val und = symmetric(e, "u", "v")
       val deg = degrees(e)
       val xy = und
         .join(deg.select(col("v").as("u"), col("d").as("dx")), "u")
@@ -692,8 +693,7 @@ object Graph {
     // (jac desc, a, b) so the result hash-gates.
     "g7_neighborhood_jaccard" -> { (s, dir) =>
       val e = coOrderEdges(t(s, dir, "lineitem"))
-      val und = e.select(col("a").as("u"), col("b").as("v"))
-        .unionAll(e.select(col("b").as("u"), col("a").as("v")))
+      val und = symmetric(e, "u", "v")
       val degc = degrees(e).select(col("v").as("u"), col("d"))
       val ctr = und.join(degc, "u").filter(col("d") <= 64).select("u", "v")
       val cn = ctr.as("x").join(ctr.as("y"),
@@ -744,8 +744,7 @@ object Graph {
     // the weight join is vertex-sized; top-20 totally ordered.
     "g10_resource_allocation" -> { (s, dir) =>
       val e = coOrderEdges(t(s, dir, "lineitem"))
-      val und = e.select(col("a").as("u"), col("b").as("v"))
-        .unionAll(e.select(col("b").as("u"), col("a").as("v")))
+      val und = symmetric(e, "u", "v")
       val degc = degrees(e).select(col("v").as("u"), col("d"))
       val ctr = und.join(degc, "u").filter(col("d") <= 64)
         .select(col("u"), col("v"), expr("1000000 div d").as("w"))
@@ -774,8 +773,7 @@ object Graph {
     // which is why it's the scalable community baseline.
     "g13_label_prop" -> { (s, dir) =>
       val e = coOrderEdges(t(s, dir, "lineitem"))
-      val und = e.select(col("a").as("u"), col("b").as("v"))
-        .unionAll(e.select(col("b").as("u"), col("a").as("v")))
+      val und = symmetric(e, "u", "v")
       val lbl = t(s, dir, "part")
         .select(col("p_partkey").as("v"), col("p_brand").as("lbl"))
       // per-vertex vote argmax as min(struct(-c, lbl)) — the lpaLabels
@@ -969,8 +967,7 @@ object Graph {
     "g24_personalized_pagerank" -> { (s, dir) =>
       val e = coOrderEdges(t(s, dir, "lineitem"))
       val deg = degrees(e).graftCkpt() // 3 iterations re-join it
-      val de = e.select(col("a").as("src"), col("b").as("dst"))
-        .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
+      val de = symmetric(e, "src", "dst")
         .graftCkpt() // one |E| materialization; 3 rounds re-read it
       val tele = deg.orderBy("v").limit(3)
         .select(col("v"), lit(333333333333L).as("t"))
@@ -1008,8 +1005,7 @@ object Graph {
     // broadcast m — LPA costs one pass, its audit costs two.
     "g26_modularity" -> { (s, dir) =>
       val e = coOrderEdges(t(s, dir, "lineitem"))
-      val und = e.select(col("a").as("u"), col("b").as("v"))
-        .unionAll(e.select(col("b").as("u"), col("a").as("v")))
+      val und = symmetric(e, "u", "v")
       val lbl = t(s, dir, "part")
         .select(col("p_partkey").as("v"), col("p_brand").as("lbl"))
       // vote argmax via min(struct(-c, lbl)) — g13's r17 rewrite
@@ -1077,8 +1073,7 @@ object Graph {
     * (count DESC, label ASC) total tie-break; rounds checkpointed flat
     * (the g2/g6 lineage discipline). Returns (v, lbl). */
   private[graft] def lpaLabels(e: DataFrame): DataFrame = {
-    val sym = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
+    val sym = symmetric(e, "src", "dst")
       .graftCkpt()
     var labels = sym.select(col("src").as("v")).distinct()
       .withColumn("lbl", col("v")).graftCkpt()
@@ -1151,8 +1146,7 @@ object Graph {
   private[graft] def louvainRound(e: DataFrame, labels0: DataFrame,
       deg: Option[DataFrame] = None,
       mDf: Option[DataFrame] = None): DataFrame = {
-    val sym = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
+    val sym = symmetric(e, "src", "dst")
       .withColumn("w", lit(1L))
       .graftCkpt() // both phases probe it
     louvainPhases(sym, deg.getOrElse(degrees(e).graftCkpt()),
@@ -1226,8 +1220,7 @@ object Graph {
     * repeatedly dropping vertices of degree < k. Package-private so
     * GraphSpec can pin the fixpoint claim (round N == round N+1). */
   private[graft] def kcorePeel(e: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var und = e.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(e.select(col("b").as("u"), col("a").as("v")))
+    var und = symmetric(e, "u", "v")
       .graftCkpt()
     for (_ <- 1 to rounds) {
       val keep = und.groupBy("u").agg(count(lit(1)).as("d"))
@@ -1411,6 +1404,11 @@ object Graph {
        |  SELECT a, b FROM (SELECT a, b, count(*) AS s FROM m$i GROUP BY 1, 2)
        |  WHERE s >= 2)""".stripMargin
 
+  /** Oracle-side twin of [[symmetric]]: CTE `cte` holding both
+    * orientations of `edges` as (x, y). */
+  private def symSql(cte: String, x: String, y: String): String =
+    s"$cte AS (SELECT a AS $x, b AS $y FROM edges UNION ALL SELECT b AS $x, a AS $y FROM edges)"
+
   val oracles: Map[String, String] = Map(
     // same graph, same (d DESC, v) seed order, three unrolled frontier
     // rounds with NOT-IN visited guards (all vertex ids non-null, so
@@ -1419,8 +1417,7 @@ object Graph {
     // degrees, one final IEEE division
     "g21_assortativity" ->
       s"""WITH $graphSql,
-        |sym AS (SELECT a AS src, b AS dst FROM edges
-        |        UNION ALL SELECT b AS src, a AS dst FROM edges),
+        |${symSql("sym", "src", "dst")},
         |xy AS (SELECT CAST(dx.d AS DECIMAL(38,0)) AS x,
         |         CAST(dy.d AS DECIMAL(38,0)) AS y
         |       FROM sym JOIN deg dx ON sym.src = dx.v
@@ -1441,8 +1438,7 @@ object Graph {
     // seeds from, one spelling)
     "g20_label_propagation" ->
       s"""WITH $graphSql,
-        |sym AS (SELECT a AS src, b AS dst FROM edges
-        |        UNION ALL SELECT b AS src, a AS dst FROM edges),
+        |${symSql("sym", "src", "dst")},
         |$lpaSql
         |SELECT v, lbl FROM l3""".stripMargin,
 
@@ -1454,8 +1450,7 @@ object Graph {
     // div on positive floors
     "g27_louvain_round" ->
       s"""WITH $graphSql,
-        |sym AS (SELECT a AS src, b AS dst FROM edges
-        |        UNION ALL SELECT b AS src, a AS dst FROM edges),
+        |${symSql("sym", "src", "dst")},
         |$lpaSql,
         |m AS (SELECT count(*) AS m FROM edges),
         |${louvainMoveSql("l3", "p0", 0)},
@@ -1475,8 +1470,7 @@ object Graph {
     // applied to all three labelings
     "g28_louvain_multilevel" ->
       s"""WITH $graphSql,
-        |sym AS (SELECT a AS src, b AS dst FROM edges
-        |        UNION ALL SELECT b AS src, a AS dst FROM edges),
+        |${symSql("sym", "src", "dst")},
         |$lpaSql,
         |m AS (SELECT count(*) AS m FROM edges),
         |${louvainMoveSql("l3", "p0", 0)},
@@ -1507,8 +1501,7 @@ object Graph {
 
     "g15_bfs_layers" ->
       s"""WITH $graphSql,
-        |sym AS (SELECT a AS src, b AS dst FROM edges
-        |        UNION ALL SELECT b AS src, a AS dst FROM edges),
+        |${symSql("sym", "src", "dst")},
         |seeds AS (SELECT v, CAST(0 AS BIGINT) AS dist FROM deg
         |          ORDER BY d DESC, v LIMIT 8),
         |f1 AS (SELECT DISTINCT sym.dst AS v
@@ -1531,8 +1524,7 @@ object Graph {
     // visited guards; the same ×6 integer harmonic readout
     "g16_hub_closeness" ->
       s"""WITH $graphSql,
-        |sym AS (SELECT a AS src, b AS dst FROM edges
-        |        UNION ALL SELECT b AS src, a AS dst FROM edges),
+        |${symSql("sym", "src", "dst")},
         |seeds AS (SELECT v AS seed FROM deg ORDER BY d DESC, v LIMIT 8),
         |v0 AS (SELECT seed, seed AS v FROM seeds),
         |f1 AS (SELECT DISTINCT v0.seed, sym.dst AS v
@@ -1562,8 +1554,7 @@ object Graph {
     // is pinned in GraphSpec, not assumed)
     "g6_kcore" ->
       s"""WITH $graphSql,
-        |u0 AS (SELECT a AS u, b AS v FROM edges
-        |       UNION ALL SELECT b AS u, a AS v FROM edges),
+        |${symSql("u0", "u", "v")},
         |${(1 to 12).map(peelStepSql).mkString(",\n")}
         |SELECT u AS v, count(*) AS residual_deg FROM u12 GROUP BY u""".stripMargin,
 
@@ -1615,8 +1606,7 @@ object Graph {
     "g2_pagerank" ->
       s"""WITH $graphSql,
         |n AS (SELECT count(*) AS n FROM deg),
-        |de AS (SELECT a AS src, b AS dst FROM edges
-        |       UNION ALL SELECT b AS src, a AS dst FROM edges),
+        |${symSql("de", "src", "dst")},
         |r0 AS (SELECT v, CAST(1000000000000 // n.n AS BIGINT) AS pr FROM deg, n),
         |${prStepSql(1)},
         |${prStepSql(2)},
@@ -1627,8 +1617,7 @@ object Graph {
     "g14_rank_convergence" ->
       s"""WITH $graphSql,
         |n AS (SELECT count(*) AS n FROM deg),
-        |de AS (SELECT a AS src, b AS dst FROM edges
-        |       UNION ALL SELECT b AS src, a AS dst FROM edges),
+        |${symSql("de", "src", "dst")},
         |r0 AS (SELECT v, CAST(1000000000000 // n.n AS BIGINT) AS pr FROM deg, n),
         |${prStepSql(1)},
         |${prStepSql(2)},
@@ -1645,8 +1634,7 @@ object Graph {
     // semantics (mirrored), the top-20 tiebreak is total
     "g3_link_prediction" ->
       s"""WITH $graphSql,
-        |und AS (SELECT a AS u, b AS v FROM edges
-        |        UNION ALL SELECT b AS u, a AS v FROM edges),
+        |${symSql("und", "u", "v")},
         |ctr AS (SELECT und.u, und.v FROM und JOIN deg ON und.u = deg.v
         |        WHERE deg.d <= 64),
         |cn AS (SELECT x.v AS a, y.v AS b, count(*) AS cn
@@ -1730,8 +1718,7 @@ object Graph {
     // HUGEINT floor-divided ppb terms (Spark's DECIMAL(38,0) twin)
     "g26_modularity" ->
       s"""WITH $graphSql,
-        |und AS (SELECT a AS u, b AS v FROM edges
-        |        UNION ALL SELECT b AS u, a AS v FROM edges),
+        |${symSql("und", "u", "v")},
         |votes AS (SELECT und.u, p.p_brand AS lbl, count(*) AS c
         |          FROM und JOIN part p ON und.v = p.p_partkey
         |          GROUP BY und.u, p.p_brand),
@@ -1834,8 +1821,7 @@ object Graph {
     // mirror the Spark side's DECIMAL(38,0) exactly
     "g9_assortativity" ->
       s"""WITH $graphSql,
-        |und AS (SELECT a AS u, b AS v FROM edges
-        |        UNION ALL SELECT b AS u, a AS v FROM edges),
+        |${symSql("und", "u", "v")},
         |xy AS (SELECT dx.d AS dx, dy.d AS dy
         |       FROM und JOIN deg dx ON und.u = dx.v JOIN deg dy ON und.v = dy.v),
         |sums AS (SELECT count(*) AS m2,
@@ -1862,8 +1848,7 @@ object Graph {
     // leg; `//` and `div` both floor positive operands identically
     "g10_resource_allocation" ->
       s"""WITH $graphSql,
-        |und AS (SELECT a AS u, b AS v FROM edges
-        |        UNION ALL SELECT b AS u, a AS v FROM edges),
+        |${symSql("und", "u", "v")},
         |ctr AS (SELECT und.u, und.v, 1000000 // deg.d AS w
         |        FROM und JOIN deg ON und.u = deg.v
         |        WHERE deg.d <= 64),
@@ -1881,8 +1866,7 @@ object Graph {
     // degree joins and the union normalization
     "g7_neighborhood_jaccard" ->
       s"""WITH $graphSql,
-        |und AS (SELECT a AS u, b AS v FROM edges
-        |        UNION ALL SELECT b AS u, a AS v FROM edges),
+        |${symSql("und", "u", "v")},
         |ctr AS (SELECT und.u, und.v FROM und JOIN deg ON und.u = deg.v
         |        WHERE deg.d <= 64),
         |cn AS (SELECT x.v AS a, y.v AS b, count(*) AS cn
@@ -1899,8 +1883,7 @@ object Graph {
     // same graph, same vote count, same (count DESC, label) argmax
     "g13_label_prop" ->
       s"""WITH $graphSql,
-        |und AS (SELECT a AS u, b AS v FROM edges
-        |        UNION ALL SELECT b AS u, a AS v FROM edges),
+        |${symSql("und", "u", "v")},
         |votes AS (SELECT und.u, p.p_brand AS lbl, count(*) AS c
         |          FROM und JOIN part p ON und.v = p.p_partkey
         |          GROUP BY und.u, p.p_brand),

@@ -579,10 +579,7 @@ object Multimodal {
 
     // t16's weight/residue spellings on the bytes axis; the modality CASE
     // and every double op mirror the Spark operand order
-    "m7_media_mixture" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(h, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
+    "m7_media_mixture" ->
       s"""WITH m AS (
          |  SELECT doc_id,
          |    CAST(octet_length(text::BLOB) AS BIGINT) AS n_bytes,
@@ -594,7 +591,7 @@ object Multimodal {
          |tot AS (SELECT CAST(sum(bytes) AS BIGINT) AS t, count(*) AS k FROM g),
          |w AS (SELECT media_type, CAST(t AS DOUBLE) / (k * bytes) AS weight
          |      FROM g, tot),
-         |u AS (SELECT doc_id, media_type, ($hexToInt) AS uv
+         |u AS (SELECT doc_id, media_type, (${graft.Exprs.hex8Sql("h")}) AS uv
          |      FROM (SELECT doc_id, media_type,
          |              md5(CAST(doc_id AS VARCHAR)) AS h FROM m) t0)
          |SELECT doc_id, u.media_type, weight,
@@ -604,8 +601,7 @@ object Multimodal {
          |FROM u JOIN w ON u.media_type = w.media_type
          |WHERE CAST(floor(weight) AS BIGINT) +
          |    (CASE WHEN CAST(uv AS DOUBLE) / 4294967296.0 < weight - floor(weight)
-         |          THEN 1 ELSE 0 END) > 0""".stripMargin
-    },
+         |          THEN 1 ELSE 0 END) > 0""".stripMargin,
 
     // same modality residue, same md5 shuffle order, same floors
     "m11_shard_manifest" ->

@@ -2201,24 +2201,12 @@ object Relational {
       .drop("fact_salt", "dim_salt")
   }
 
-  /** The funnel stage-chaining CTEs (first view → first click within 24 h
-    * strictly after it → first purchase within 24 h strictly after that),
-    * shared between q42's oracle and the streaming x11 oracle
-    * (StreamingSessionize) so the attribution rule is spelled once. */
   /** q79/x36's shared oracle prefix — hash → rank-512 (hv, value)
     * retention → sorted-sample decile cutpoints (CTEs h/r/smp/ns/sv/
     * cuts) — one spelling so the batch sketch and its streaming twin
     * can never drift. */
-  /** DuckDB spelling of HexPrefixToLong.hex8 over a hex string column
-    * `m` — shared by the q79/x36 prefix and q80's lattice so the hash
-    * axis is spelled once. */
-  private[graft] val md5HexFoldSql: String = (0 until 8).map { i =>
-    s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-  }.mkString(" + ")
-
-  private[graft] val quantileCutsSql: String = {
-    val hexToInt = md5HexFoldSql
-    s"""h AS (SELECT event_type, value, $hexToInt AS hv
+  private[graft] val quantileCutsSql: String =
+    s"""h AS (SELECT event_type, value, ${hex8Sql("m")} AS hv
        |  FROM (SELECT event_type, value,
        |          md5(CAST(event_id AS VARCHAR)) AS m FROM events
        |        WHERE value IS NOT NULL) t),
@@ -2237,8 +2225,11 @@ object Relational {
        |         FROM sv JOIN ns ON sv.event_type = ns.event_type
        |         JOIN (SELECT unnest(generate_series(1, 9)) AS i) d
        |           ON sv.vr = greatest(1, (d.i * ns.ns + 9) // 10))""".stripMargin
-  }
 
+  /** The funnel stage-chaining CTEs (first view → first click within 24 h
+    * strictly after it → first purchase within 24 h strictly after that),
+    * shared between q42's oracle and the streaming x11 oracle
+    * (StreamingSessionize) so the attribution rule is spelled once. */
   private[graft] val funnelChainSql: String =
     """e AS (SELECT user_id, event_type, epoch_ms(ts) AS ms FROM events),
       |w1 AS (SELECT user_id, event_type, ms,
@@ -2604,12 +2595,9 @@ object Relational {
     // q36: the deterministic sketch replays exactly in any engine — same
     // md5, same hex fold (Dedup's instr chain), same rank-k selection,
     // same two exact double operands with one rounded division.
-    "q36_kmv_sketch" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
+    "q36_kmv_sketch" ->
       s"""WITH d AS (SELECT DISTINCT event_type, user_id FROM events),
-         |h AS (SELECT event_type, $hexToInt AS hv
+         |h AS (SELECT event_type, ${hex8Sql("m")} AS hv
          |      FROM (SELECT event_type, md5(CAST(user_id AS VARCHAR)) AS m FROM d) t),
          |r AS (SELECT event_type, hv,
          |        row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn
@@ -2617,8 +2605,7 @@ object Relational {
          |SELECT event_type, count(*) AS n_exact,
          |  coalesce(63.0 * 4294967296.0 / CAST(max(CASE WHEN rn = 64 THEN hv END) AS DOUBLE),
          |           CAST(count(*) AS DOUBLE)) AS est_users
-         |FROM r GROUP BY event_type""".stripMargin
-    },
+         |FROM r GROUP BY event_type""".stripMargin,
 
     // The bloom probe is pure pruning: the residual join makes the result
     // exactly the plain join's, which is what the oracle spells.
@@ -2744,7 +2731,7 @@ object Relational {
     // ceil(i·ns/10) cut index read by 1-based list indexing
     "q80_sketch_rollup" ->
       s"""WITH base AS (SELECT event_type, date_trunc('day', ts) AS day,
-         |    value, $md5HexFoldSql AS hv
+         |    value, ${hex8Sql("m")} AS hv
          |  FROM (SELECT event_type, ts, value,
          |          md5(CAST(event_id AS VARCHAR)) AS m FROM events
          |        WHERE value IS NOT NULL) t),
@@ -3035,15 +3022,12 @@ object Relational {
         |FROM j""".stripMargin,
 
     // same md5 uniforms, same literal thresholds, same decimal means
-    "q57_poisson_bootstrap" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
+    "q57_poisson_bootstrap" ->
       s"""WITH r AS (
          |  SELECT event_type, value, event_id, b.b
          |  FROM events, (SELECT unnest(generate_series(0, 15)) AS b) b),
          |u AS (SELECT event_type, value, b,
-         |        CAST($hexToInt AS DOUBLE) / 4294967296.0 AS u
+         |        CAST(${hex8Sql("m")} AS DOUBLE) / 4294967296.0 AS u
          |      FROM (SELECT event_type, value, b,
          |              md5(CAST(event_id AS VARCHAR) || '_' || CAST(b AS VARCHAR)) AS m
          |            FROM r) t),
@@ -3059,17 +3043,13 @@ object Relational {
          |SELECT event_type, b, CAST(sum(w) AS BIGINT) AS n_eff,
          |  ${dsumSql("w * value")} / CAST(CAST(sum(w) AS BIGINT) AS DOUBLE)
          |    AS mean_b
-         |FROM w GROUP BY 1, 2""".stripMargin
-    },
+         |FROM w GROUP BY 1, 2""".stripMargin,
 
     // same keys, same 32-bit md5 prefixes, order-free sums
     "q58_key_checksums" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
       def ck(name: String, keyExpr: String) =
         s"""SELECT '$name' AS table_name, count(*) AS n_rows,
-           |  CAST(sum($hexToInt) AS BIGINT) AS checksum
+           |  CAST(sum(${hex8Sql("m")}) AS BIGINT) AS checksum
            |FROM (SELECT md5($keyExpr) AS m FROM $name) t""".stripMargin
       Seq(
         ck("lineitem",
@@ -3084,11 +3064,8 @@ object Relational {
     // against each type's bottom-64 rows; every double op mirrors the
     // Spark operand order
     "q51_sketch_setops" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
       s"""WITH d AS (SELECT DISTINCT event_type, user_id FROM events),
-         |h AS (SELECT DISTINCT event_type, $hexToInt AS hv
+         |h AS (SELECT DISTINCT event_type, ${hex8Sql("m")} AS hv
          |      FROM (SELECT event_type, md5(CAST(user_id AS VARCHAR)) AS m FROM d) t),
          |rk AS (SELECT event_type, hv,
          |         row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn
@@ -3274,12 +3251,9 @@ object Relational {
 
     // q49: q36's rank-k spelling per day, deduplicated union across the
     // 7-day cover, rank-k again — deterministic, so the sketch itself gates
-    "q49_rolling_kmv" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
+    "q49_rolling_kmv" ->
       s"""WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
-         |h AS (SELECT d, $hexToInt AS hv
+         |h AS (SELECT d, ${hex8Sql("m")} AS hv
          |      FROM (SELECT d, md5(CAST(user_id AS VARCHAR)) AS m FROM ud) t),
          |daily AS (SELECT d, hv FROM (
          |    SELECT d, hv, row_number() OVER (PARTITION BY d ORDER BY hv) AS rn
@@ -3295,8 +3269,7 @@ object Relational {
          |  CASE WHEN count(*) = 64
          |       THEN 63.0 * 4294967296.0 / CAST(max(hv) AS DOUBLE)
          |       ELSE CAST(count(*) AS DOUBLE) END AS est_users_7d
-         |FROM m GROUP BY 1""".stripMargin
-    },
+         |FROM m GROUP BY 1""".stripMargin,
 
     // q67: salting is a physical rewrite — the oracle is the PLAIN join
     "q67_salted_join" ->

@@ -53,10 +53,8 @@ object Similarity {
 
   /** Cosine in the DuckDB dialect, mirroring the fold order exactly. */
   private def cosSql(a: String, b: String): String = {
-    def d(x: String, y: String) =
-      s"list_sum(list_transform(list_zip($x, $y), p -> p[1]*p[2]))"
     def n(x: String) = s"sqrt(list_sum(list_transform($x, p -> p*p)))"
-    s"${d(a, b)} / (${n(a)} * ${n(b)})"
+    s"${dSql(a, b)} / (${n(a)} * ${n(b)})"
   }
 
   private val numPlanes = 4
@@ -1875,10 +1873,7 @@ object Similarity {
     // set, each p<r> is the totally-ordered argmin of the per-vector max
     "s20_kcenter_seed" -> {
       val base =
-        """e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-          |n AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS u
-          |      FROM (SELECT vec_id, v,
-          |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t),
+        s"""$embNormSqlCtes,
           |c1 AS (SELECT vec_id, u FROM n ORDER BY vec_id LIMIT 1),
           |ch1 AS (SELECT vec_id, u FROM c1)""".stripMargin
       val rounds = (2 to 4).map { r =>
@@ -1901,16 +1896,8 @@ object Similarity {
     // s7's normalize/seed/assign CTEs; the update is s15's per-(cluster,
     // dim) decimal mean over the normalized coordinates
     "s17_kmeans_step" ->
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |n AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS u
-         |      FROM (SELECT vec_id, v,
-         |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t),
-         |cent AS (SELECT vec_id - 100 AS cid, u AS cu FROM n WHERE vec_id BETWEEN 100 AND 107),
-         |asg AS (SELECT vec_id, u, cid FROM (
-         |    SELECT n.vec_id, n.u, cent.cid,
-         |      row_number() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${dSql("n.u", "cent.cu")} DESC, cent.cid) AS crk
-         |    FROM n CROSS JOIN cent) t WHERE crk = 1),
+      s"""WITH $embNormSqlCtes,
+         |$seedAssignSqlCtes,
          |x AS (SELECT asg.cid, CAST(g.i AS BIGINT) AS dim, asg.u[g.i] AS x
          |      FROM asg, LATERAL unnest(generate_series(1, len(asg.u))) AS g(i))
          |SELECT cid AS cluster_id, dim, count(*) AS n,
@@ -1921,14 +1908,12 @@ object Similarity {
     // rounds; every operand (decimal means, list rebuild order, fold-order
     // dots, sqrt) restated exactly
     "s18_kmeans_train" -> {
-      def d(a: String, b: String) =
-        s"list_sum(list_transform(list_zip($a, $b), p -> p[1]*p[2]))"
       def round(i: Int): String = {
         val prev = if (i == 1) "c0" else s"c${i - 1}"
         s"""a$i AS (SELECT vec_id, u, cid FROM (
            |    SELECT n.vec_id, n.u, $prev.cid,
            |      row_number() OVER (PARTITION BY n.vec_id
-           |        ORDER BY ${d("n.u", s"$prev.cu")} DESC, $prev.cid) AS crk
+           |        ORDER BY ${dSql("n.u", s"$prev.cu")} DESC, $prev.cid) AS crk
            |    FROM n CROSS JOIN $prev) t WHERE crk = 1),
            |m$i AS (SELECT cid, CAST(g.i AS BIGINT) AS dim,
            |          ${graft.Exprs.davgSql("u[g.i]", 6)} AS c
@@ -1936,13 +1921,10 @@ object Similarity {
            |        GROUP BY cid, dim),
            |r$i AS (SELECT cid, list(c ORDER BY dim) AS cl FROM m$i GROUP BY cid),
            |c$i AS (SELECT cid,
-           |          list_transform(cl, x -> x / sqrt(${d("cl", "cl")})) AS cu
+           |          list_transform(cl, x -> x / sqrt(${dSql("cl", "cl")})) AS cu
            |        FROM r$i)""".stripMargin
       }
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |n AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS u
-         |      FROM (SELECT vec_id, v,
-         |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t),
+      s"""WITH $embNormSqlCtes,
          |c0 AS (SELECT vec_id - 100 AS cid, u AS cu FROM n WHERE vec_id BETWEEN 100 AND 107),
          |${round(1)},
          |${round(2)},
@@ -1980,12 +1962,7 @@ object Similarity {
     // dequantized-store top-5 (same dq CTEs as s37's oracle)
     "s38_sq8_recall" ->
       s"""WITH $sq8DeqSql,
-         |q1 AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-         |p1 AS (SELECT query_id, vec_id AS neighbor_id, ${cosSql("qv", "v")} AS sim
-         |       FROM e CROSS JOIN q1 WHERE vec_id <> query_id),
-         |e5 AS (SELECT query_id, neighbor_id FROM (
-         |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-         |         FROM p1) r WHERE rnk <= 5),
+         |$exactTop5SqlCtes,
          |q2 AS (SELECT vec_id AS query_id, dv AS qv2 FROM dq WHERE vec_id < 5),
          |p2 AS (SELECT query_id, dq.vec_id AS neighbor_id, ${cosSql("qv2", "dv")} AS sim
          |       FROM dq CROSS JOIN q2 WHERE dq.vec_id <> q2.query_id),
@@ -2175,9 +2152,7 @@ object Similarity {
     // the same augmentation (u = v/√M ⊕ √(1−|v|²/M²), qu = q/|q| ⊕ 0),
     // the same centroid seeds/assign/probe CTEs as s5, the same raw-dot
     // payload — operand for operand
-    "s30_mips_ivf" -> {
-      def d(a: String, b: String) =
-        s"list_sum(list_transform(list_zip($a, $b), p -> p[1]*p[2]))"
+    "s30_mips_ivf" ->
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
          |             list_sum(list_transform(embedding::DOUBLE[],
          |               p -> p*p)) AS ns
@@ -2192,7 +2167,7 @@ object Similarity {
          |asg AS (SELECT vec_id, u, v, cid FROM (
          |    SELECT n.vec_id, n.u, n.v, cent.cid,
          |      row_number() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${d("n.u", "cent.cu")} DESC, cent.cid) AS crk
+         |        ORDER BY ${dSql("n.u", "cent.cu")} DESC, cent.cid) AS crk
          |    FROM n CROSS JOIN cent) t WHERE crk = 1),
          |q AS (SELECT vec_id AS query_id, v AS qv,
          |        list_transform(v, x -> x / sqrt(ns)) || [0.0] AS qu
@@ -2200,22 +2175,21 @@ object Similarity {
          |probes AS (SELECT query_id, qu, qv, cid FROM (
          |    SELECT q.query_id, q.qu, q.qv, cent.cid,
          |      row_number() OVER (PARTITION BY q.query_id
-         |        ORDER BY ${d("q.qu", "cent.cu")} DESC, cent.cid) AS crk
+         |        ORDER BY ${dSql("q.qu", "cent.cu")} DESC, cent.cid) AS crk
          |    FROM q CROSS JOIN cent) t WHERE crk <= 2),
          |p AS (SELECT query_id, asg.vec_id AS neighbor_id,
-         |        ${d("qu", "asg.u")} AS sim, ${d("qv", "asg.v")} AS ip
+         |        ${dSql("qu", "asg.u")} AS sim, ${dSql("qv", "asg.v")} AS ip
          |      FROM asg JOIN probes ON asg.cid = probes.cid
          |      WHERE asg.vec_id <> probes.query_id)
          |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, ip FROM (
          |  SELECT *, row_number() OVER (PARTITION BY query_id
          |    ORDER BY sim DESC, neighbor_id) AS rnk FROM p) r
-         |WHERE rnk <= 5""".stripMargin
-    },
+         |WHERE rnk <= 5""".stripMargin,
 
     // the same augmented-cosine ranking fold (ip / (sqrt(qn)·sqrt(mm)))
     // and the same raw-dot payload, operand for operand
     "s29_mips_topk" -> {
-      val ipSql = "list_sum(list_transform(list_zip(qv, v), p -> p[1]*p[2]))"
+      val ipSql = dSql("qv", "v")
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
          |             list_sum(list_transform(embedding::DOUBLE[],
          |               p -> p*p)) AS ns
@@ -2322,12 +2296,7 @@ object Similarity {
       val probeList = ("qb" +: (0 until numPlanes).map(p => s"xor(qb, ${1 << p})"))
         .mkString("[", ", ", "]")
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |q1 AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-         |p1 AS (SELECT query_id, vec_id AS neighbor_id, ${cosSql("qv", "v")} AS sim
-         |       FROM e CROSS JOIN q1 WHERE vec_id <> query_id),
-         |e5 AS (SELECT query_id, neighbor_id FROM (
-         |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-         |         FROM p1) r WHERE rnk <= 5),
+         |$exactTop5SqlCtes,
          |b AS (SELECT vec_id, v, $bucketSql AS bucket FROM e),
          |q2 AS (SELECT query_id, qv, unnest($probeList) AS probe FROM (
          |         SELECT vec_id AS query_id, v AS qv, bucket AS qb FROM b
@@ -2343,61 +2312,33 @@ object Similarity {
          |GROUP BY e5.query_id""".stripMargin
     },
 
-    "s5_ann_ivf" -> {
-      def d(a: String, b: String) =
-        s"list_sum(list_transform(list_zip($a, $b), p -> p[1]*p[2]))"
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |n AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS u
-         |      FROM (SELECT vec_id, v,
-         |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t),
-         |cent AS (SELECT vec_id - 100 AS cid, u AS cu FROM n WHERE vec_id BETWEEN 100 AND 107),
-         |asg AS (SELECT vec_id, u, cid FROM (
-         |    SELECT n.vec_id, n.u, cent.cid,
-         |      row_number() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${d("n.u", "cent.cu")} DESC, cent.cid) AS crk
-         |    FROM n CROSS JOIN cent) t WHERE crk = 1),
-         |probes AS (SELECT query_id, qu, cid FROM (
-         |    SELECT n.vec_id AS query_id, n.u AS qu, cent.cid,
-         |      row_number() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${d("n.u", "cent.cu")} DESC, cent.cid) AS crk
-         |    FROM n CROSS JOIN cent WHERE n.vec_id < 5) t WHERE crk <= 2),
-         |p AS (SELECT query_id, asg.vec_id AS neighbor_id, ${d("qu", "asg.u")} AS sim
+    "s5_ann_ivf" ->
+      s"""WITH $embNormSqlCtes,
+         |$seedAssignSqlCtes,
+         |$probesSqlCte,
+         |p AS (SELECT query_id, asg.vec_id AS neighbor_id, ${dSql("qu", "asg.u")} AS sim
          |      FROM asg JOIN probes ON asg.cid = probes.cid
          |      WHERE asg.vec_id <> probes.query_id)
          |SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk, sim FROM (
          |  SELECT *, row_number() OVER (PARTITION BY query_id
          |    ORDER BY sim DESC, neighbor_id) AS rnk FROM p) r
-         |WHERE rnk <= 5""".stripMargin
-    },
+         |WHERE rnk <= 5""".stripMargin,
 
     // s5's normalize/seed/assign CTEs; the davg spelling is Exprs'
-    "s22_quantization_error" -> {
-      def d(a: String, b: String) =
-        s"list_sum(list_transform(list_zip($a, $b), p -> p[1]*p[2]))"
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |n AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS u
-         |      FROM (SELECT vec_id, v,
-         |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t),
-         |cent AS (SELECT vec_id - 100 AS cid, u AS cu FROM n WHERE vec_id BETWEEN 100 AND 107),
-         |asg AS (SELECT vec_id, u, cid FROM (
-         |    SELECT n.vec_id, n.u, cent.cid,
-         |      row_number() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${d("n.u", "cent.cu")} DESC, cent.cid) AS crk
-         |    FROM n CROSS JOIN cent) t WHERE crk = 1),
-         |er AS (SELECT asg.cid, 1.0 - ${d("asg.u", "cent.cu")} AS err
+    "s22_quantization_error" ->
+      s"""WITH $embNormSqlCtes,
+         |$seedAssignSqlCtes,
+         |er AS (SELECT asg.cid, 1.0 - ${dSql("asg.u", "cent.cu")} AS err
          |       FROM asg JOIN cent ON asg.cid = cent.cid)
          |SELECT cid, count(*) AS n_members,
          |  ${graft.Exprs.davgSql("err", 6)} AS mean_err,
          |  max(err) AS max_err
-         |FROM er GROUP BY cid""".stripMargin
-    },
+         |FROM er GROUP BY cid""".stripMargin,
 
     // same one-pass three-width scoring, same rank cuts, same eval join
     "s25_dim_truncation_recall" -> {
-      def d(a: String, b: String) =
-        s"list_sum(list_transform(list_zip($a, $b), p -> p[1]*p[2]))"
       def cos(a: String, b: String) =
-        s"${d(a, b)} / (sqrt(${d(a, a)}) * sqrt(${d(b, b)}))"
+        s"${dSql(a, b)} / (sqrt(${dSql(a, a)}) * sqrt(${dSql(b, b)}))"
       def block(wd: Int) =
         s"""SELECT CAST($wd AS BIGINT) AS width, t.query_id,
            |  CAST(sum(CASE WHEN ex.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
@@ -2425,9 +2366,7 @@ object Similarity {
 
     // s6's cluster CTEs + davg-exact centroids in dim order; a/b are the
     // same conditional MINs, sil the same guarded division
-    "s23_silhouette" -> {
-      def d(a: String, b: String) =
-        s"list_sum(list_transform(list_zip($a, $b), p -> p[1]*p[2]))"
+    "s23_silhouette" ->
       s"""WITH RECURSIVE $embClusterSqlCtes,
          |mem AS (SELECT cl.cluster_id, e.vec_id, e.v
          |        FROM cl JOIN e ON cl.vec_id = e.vec_id),
@@ -2437,12 +2376,12 @@ object Similarity {
          |       FROM cx GROUP BY cluster_id, pos),
          |cent AS (SELECT cluster_id, list(c ORDER BY pos) AS cv
          |         FROM cd GROUP BY cluster_id),
-         |mn AS (SELECT vec_id, cluster_id, v, sqrt(${d("v", "v")}) AS vnrm
+         |mn AS (SELECT vec_id, cluster_id, v, sqrt(${dSql("v", "v")}) AS vnrm
          |       FROM mem),
-         |cn AS (SELECT cluster_id, cv, sqrt(${d("cv", "cv")}) AS cnrm
+         |cn AS (SELECT cluster_id, cv, sqrt(${dSql("cv", "cv")}) AS cnrm
          |       FROM cent),
          |sc AS (SELECT m.vec_id, m.cluster_id, ct.cluster_id AS cid,
-         |         1.0 - (${d("m.v", "ct.cv")} / (m.vnrm * ct.cnrm)) AS dist
+         |         1.0 - (${dSql("m.v", "ct.cv")} / (m.vnrm * ct.cnrm)) AS dist
          |       FROM mn m CROSS JOIN cn ct),
          |ab AS (SELECT vec_id, cluster_id,
          |         min(CASE WHEN cid = cluster_id THEN dist END) AS a,
@@ -2455,13 +2394,10 @@ object Similarity {
          |SELECT cluster_id, count(*) AS n_members,
          |  ${graft.Exprs.davgSql("sil", 6)} AS mean_sil,
          |  min(sil) AS min_sil
-         |FROM sil GROUP BY cluster_id""".stripMargin
-    },
+         |FROM sil GROUP BY cluster_id""".stripMargin,
 
     // s23's centroid CTEs + sizes; same hoisted-norm cosine, same bar
-    "s26_merge_candidates" -> {
-      def d(a: String, b: String) =
-        s"list_sum(list_transform(list_zip($a, $b), p -> p[1]*p[2]))"
+    "s26_merge_candidates" ->
       s"""WITH RECURSIVE $embClusterSqlCtes,
          |mem AS (SELECT cl.cluster_id, e.vec_id, e.v
          |        FROM cl JOIN e ON cl.vec_id = e.vec_id),
@@ -2472,14 +2408,13 @@ object Similarity {
          |       FROM cx GROUP BY cluster_id, pos),
          |cent AS (SELECT cd.cluster_id, list(c ORDER BY pos) AS cv
          |         FROM cd GROUP BY cd.cluster_id),
-         |cn AS (SELECT cent.cluster_id, cv, sz.n, sqrt(${d("cv", "cv")}) AS nrm
+         |cn AS (SELECT cent.cluster_id, cv, sz.n, sqrt(${dSql("cv", "cv")}) AS nrm
          |       FROM cent JOIN sz ON cent.cluster_id = sz.cluster_id)
          |SELECT a.cluster_id AS cid_a, b.cluster_id AS cid_b,
          |  a.n AS n_a, b.n AS n_b,
-         |  ${d("a.cv", "b.cv")} / (a.nrm * b.nrm) AS sim
+         |  ${dSql("a.cv", "b.cv")} / (a.nrm * b.nrm) AS sim
          |FROM cn a JOIN cn b ON a.cluster_id < b.cluster_id
-         |WHERE ${d("a.cv", "b.cv")} / (a.nrm * b.nrm) > 0.25""".stripMargin
-    },
+         |WHERE ${dSql("a.cv", "b.cv")} / (a.nrm * b.nrm) > 0.25""".stripMargin,
 
     // pqBase's codes verbatim; two stacked counts, integer-ppm skew
     "s24_code_utilization" ->
@@ -2492,40 +2427,22 @@ object Similarity {
 
     // s5's normalize/seed/assign/probe CTEs with the rank window replaced
     // by the radius filter + per-query rollup
-    "s21_range_search" -> {
-      def d(a: String, b: String) =
-        s"list_sum(list_transform(list_zip($a, $b), p -> p[1]*p[2]))"
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |n AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS u
-         |      FROM (SELECT vec_id, v,
-         |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t),
-         |cent AS (SELECT vec_id - 100 AS cid, u AS cu FROM n WHERE vec_id BETWEEN 100 AND 107),
-         |asg AS (SELECT vec_id, u, cid FROM (
-         |    SELECT n.vec_id, n.u, cent.cid,
-         |      row_number() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${d("n.u", "cent.cu")} DESC, cent.cid) AS crk
-         |    FROM n CROSS JOIN cent) t WHERE crk = 1),
-         |probes AS (SELECT query_id, qu, cid FROM (
-         |    SELECT n.vec_id AS query_id, n.u AS qu, cent.cid,
-         |      row_number() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${d("n.u", "cent.cu")} DESC, cent.cid) AS crk
-         |    FROM n CROSS JOIN cent WHERE n.vec_id < 5) t WHERE crk <= 2),
-         |p AS (SELECT query_id, asg.vec_id AS neighbor_id, ${d("qu", "asg.u")} AS sim
+    "s21_range_search" ->
+      s"""WITH $embNormSqlCtes,
+         |$seedAssignSqlCtes,
+         |$probesSqlCte,
+         |p AS (SELECT query_id, asg.vec_id AS neighbor_id, ${dSql("qu", "asg.u")} AS sim
          |      FROM asg JOIN probes ON asg.cid = probes.cid
          |      WHERE asg.vec_id <> probes.query_id),
          |agg AS (SELECT query_id, count(*) AS n_matches, max(sim) AS max_sim
          |        FROM p WHERE sim >= 0.3 GROUP BY query_id)
          |SELECT q.query_id, CAST(coalesce(n_matches, 0) AS BIGINT) AS n_matches, max_sim
          |FROM (SELECT DISTINCT query_id FROM probes) q LEFT JOIN agg USING (query_id)"""
-        .stripMargin
-    },
+        .stripMargin,
 
     "s3_embed_neardup" -> {
-      val dotU = "list_sum(list_transform(list_zip(a.u, b.u), p -> p[1]*p[2]))"
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-         |n AS (SELECT vec_id, label, list_transform(v, x -> x / nrm) AS u
-         |      FROM (SELECT vec_id, label, v,
-         |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t)
+      val dotU = dSql("a.u", "b.u")
+      s"""WITH $labelledNormSqlCtes
          |SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.label AS label,
          |  $dotU AS sim
          |FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
@@ -2563,32 +2480,18 @@ object Similarity {
 
     // s7's CTEs at the widest probe budget, candidates fanned to the
     // configs admitting their probe rank, rank-5 + recall per config
-    "s19_nprobe_sweep" -> {
-      def d(a: String, b: String) =
-        s"list_sum(list_transform(list_zip($a, $b), p -> p[1]*p[2]))"
+    "s19_nprobe_sweep" ->
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |q1 AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-         |p1 AS (SELECT query_id, vec_id AS neighbor_id, ${cosSql("qv", "v")} AS sim
-         |       FROM e CROSS JOIN q1 WHERE vec_id <> query_id),
-         |e5 AS (SELECT query_id, neighbor_id FROM (
-         |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-         |         FROM p1) r WHERE rnk <= 5),
-         |n AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS u
-         |      FROM (SELECT vec_id, v,
-         |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t),
-         |cent AS (SELECT vec_id - 100 AS cid, u AS cu FROM n WHERE vec_id BETWEEN 100 AND 107),
-         |asg AS (SELECT vec_id, u, cid FROM (
-         |    SELECT n.vec_id, n.u, cent.cid,
-         |      row_number() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${d("n.u", "cent.cu")} DESC, cent.cid) AS crk
-         |    FROM n CROSS JOIN cent) t WHERE crk = 1),
+         |$exactTop5SqlCtes,
+         |$normSqlCte,
+         |$seedAssignSqlCtes,
          |probes AS (SELECT query_id, qu, cid, crk FROM (
          |    SELECT n.vec_id AS query_id, n.u AS qu, cent.cid,
          |      row_number() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${d("n.u", "cent.cu")} DESC, cent.cid) AS crk
+         |        ORDER BY ${dSql("n.u", "cent.cu")} DESC, cent.cid) AS crk
          |    FROM n CROSS JOIN cent WHERE n.vec_id < 5) t WHERE crk <= 4),
          |cand AS (SELECT probes.query_id, asg.vec_id AS neighbor_id,
-         |           ${d("qu", "asg.u")} AS sim, u2.np AS nprobe
+         |           ${dSql("qu", "asg.u")} AS sim, u2.np AS nprobe
          |         FROM asg JOIN probes ON asg.cid = probes.cid,
          |              LATERAL unnest([1, 2, 4]) AS u2(np)
          |         WHERE asg.vec_id <> probes.query_id AND u2.np >= probes.crk),
@@ -2604,34 +2507,15 @@ object Similarity {
          |  ON e5c.nprobe = t.nprobe AND e5c.query_id = t.query_id
          | AND e5c.neighbor_id = t.neighbor_id
          |JOIN nc ON nc.nprobe = e5c.nprobe
-         |GROUP BY e5c.nprobe, nc.n_candidates""".stripMargin
-    },
+         |GROUP BY e5c.nprobe, nc.n_candidates""".stripMargin,
 
-    "s7_ivf_recall" -> {
-      def d(a: String, b: String) =
-        s"list_sum(list_transform(list_zip($a, $b), p -> p[1]*p[2]))"
+    "s7_ivf_recall" ->
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |q1 AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-         |p1 AS (SELECT query_id, vec_id AS neighbor_id, ${cosSql("qv", "v")} AS sim
-         |       FROM e CROSS JOIN q1 WHERE vec_id <> query_id),
-         |e5 AS (SELECT query_id, neighbor_id FROM (
-         |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-         |         FROM p1) r WHERE rnk <= 5),
-         |n AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS u
-         |      FROM (SELECT vec_id, v,
-         |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t),
-         |cent AS (SELECT vec_id - 100 AS cid, u AS cu FROM n WHERE vec_id BETWEEN 100 AND 107),
-         |asg AS (SELECT vec_id, u, cid FROM (
-         |    SELECT n.vec_id, n.u, cent.cid,
-         |      row_number() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${d("n.u", "cent.cu")} DESC, cent.cid) AS crk
-         |    FROM n CROSS JOIN cent) t WHERE crk = 1),
-         |probes AS (SELECT query_id, qu, cid FROM (
-         |    SELECT n.vec_id AS query_id, n.u AS qu, cent.cid,
-         |      row_number() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${d("n.u", "cent.cu")} DESC, cent.cid) AS crk
-         |    FROM n CROSS JOIN cent WHERE n.vec_id < 5) t WHERE crk <= 2),
-         |p2 AS (SELECT query_id, asg.vec_id AS neighbor_id, ${d("qu", "asg.u")} AS sim
+         |$exactTop5SqlCtes,
+         |$normSqlCte,
+         |$seedAssignSqlCtes,
+         |$probesSqlCte,
+         |p2 AS (SELECT query_id, asg.vec_id AS neighbor_id, ${dSql("qu", "asg.u")} AS sim
          |       FROM asg JOIN probes ON asg.cid = probes.cid
          |       WHERE asg.vec_id <> probes.query_id),
          |a5 AS (SELECT query_id, neighbor_id, 1 AS hit FROM (
@@ -2640,15 +2524,11 @@ object Similarity {
          |SELECT e5.query_id, sum(coalesce(a5.hit, 0)) / 5.0 AS recall_at_5
          |FROM e5 LEFT JOIN a5
          |  ON e5.query_id = a5.query_id AND e5.neighbor_id = a5.neighbor_id
-         |GROUP BY e5.query_id""".stripMargin
-    },
+         |GROUP BY e5.query_id""".stripMargin,
 
     "s8_threshold_sweep" -> {
-      val dotU = "list_sum(list_transform(list_zip(a.u, b.u), p -> p[1]*p[2]))"
-      s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-         |n AS (SELECT vec_id, label, list_transform(v, x -> x / nrm) AS u
-         |      FROM (SELECT vec_id, label, v,
-         |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t),
+      val dotU = dSql("a.u", "b.u")
+      s"""WITH $labelledNormSqlCtes,
          |p AS (SELECT $dotU AS sim
          |      FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
          |      WHERE $dotU > 0.3),
@@ -2670,12 +2550,7 @@ object Similarity {
 
     "s10_pq_recall" ->
       s"""WITH $pqCtes,
-         |q1 AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-         |p1 AS (SELECT query_id, vec_id AS neighbor_id, ${cosSql("qv", "v")} AS sim
-         |       FROM e CROSS JOIN q1 WHERE vec_id <> query_id),
-         |e5 AS (SELECT query_id, neighbor_id FROM (
-         |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-         |         FROM p1) r WHERE rnk <= 5),
+         |$exactTop5SqlCtes,
          |a5 AS (SELECT query_id, neighbor_id, 1 AS hit FROM (
          |         SELECT *, row_number() OVER (PARTITION BY query_id
          |           ORDER BY approx_sim DESC, neighbor_id) AS rnk FROM p) r WHERE rnk <= 5)
@@ -2726,12 +2601,7 @@ object Similarity {
 
     "s12_ivfpq_recall" ->
       s"""WITH $ivfPqCtes,
-         |q1 AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-         |p1 AS (SELECT query_id, vec_id AS neighbor_id, ${cosSql("qv", "v")} AS sim
-         |       FROM e CROSS JOIN q1 WHERE vec_id <> query_id),
-         |e5 AS (SELECT query_id, neighbor_id FROM (
-         |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-         |         FROM p1) r WHERE rnk <= 5),
+         |$exactTop5SqlCtes,
          |a5 AS (SELECT query_id, neighbor_id, 1 AS hit FROM (
          |         SELECT *, row_number() OVER (PARTITION BY query_id
          |           ORDER BY approx_sim DESC, neighbor_id) AS rnk FROM p) r WHERE rnk <= 5)
@@ -2745,8 +2615,6 @@ object Similarity {
     "s27_rrf_fusion" -> {
       val probeList = ("qb" +: (0 until numPlanes).map(p => s"xor(qb, ${1 << p})"))
         .mkString("[", ", ", "]")
-      def d(a: String, b: String) =
-        s"list_sum(list_transform(list_zip($a, $b), p -> p[1]*p[2]))"
       s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          |b AS (SELECT vec_id, v, $bucketSql AS bucket FROM e),
          |q AS (SELECT query_id, qv, unnest($probeList) AS probe FROM (
@@ -2758,21 +2626,10 @@ object Similarity {
          |          SELECT *, row_number() OVER (PARTITION BY query_id
          |            ORDER BY sim DESC, neighbor_id) AS rnk FROM pl) r
          |        WHERE rnk <= 5),
-         |n AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS u
-         |      FROM (SELECT vec_id, v,
-         |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t),
-         |cent AS (SELECT vec_id - 100 AS cid, u AS cu FROM n WHERE vec_id BETWEEN 100 AND 107),
-         |asg AS (SELECT vec_id, u, cid FROM (
-         |    SELECT n.vec_id, n.u, cent.cid,
-         |      row_number() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${d("n.u", "cent.cu")} DESC, cent.cid) AS crk
-         |    FROM n CROSS JOIN cent) t WHERE crk = 1),
-         |probes AS (SELECT query_id, qu, cid FROM (
-         |    SELECT n.vec_id AS query_id, n.u AS qu, cent.cid,
-         |      row_number() OVER (PARTITION BY n.vec_id
-         |        ORDER BY ${d("n.u", "cent.cu")} DESC, cent.cid) AS crk
-         |    FROM n CROSS JOIN cent WHERE n.vec_id < 5) t WHERE crk <= 2),
-         |pi AS (SELECT query_id, asg.vec_id AS neighbor_id, ${d("qu", "asg.u")} AS sim
+         |$normSqlCte,
+         |$seedAssignSqlCtes,
+         |$probesSqlCte,
+         |pi AS (SELECT query_id, asg.vec_id AS neighbor_id, ${dSql("qu", "asg.u")} AS sim
          |       FROM asg JOIN probes ON asg.cid = probes.cid
          |       WHERE asg.vec_id <> probes.query_id),
          |ivf AS (SELECT query_id, neighbor_id, CAST(rnk AS BIGINT) AS r_ivf FROM (
@@ -2797,16 +2654,11 @@ object Similarity {
 
     // same linearity trick (no expanded vector), same davg decimal mean
     // over the 5 feedback dots, same one-IEEE-add final score
-    "s28_rocchio_expand" -> {
-      def d(a: String, b: String) =
-        s"list_sum(list_transform(list_zip($a, $b), p -> p[1]*p[2]))"
-      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |n AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS u
-         |      FROM (SELECT vec_id, v,
-         |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t),
+    "s28_rocchio_expand" ->
+      s"""WITH $embNormSqlCtes,
          |q AS (SELECT vec_id AS query_id, u AS qu FROM n WHERE vec_id < 5),
          |scored AS (SELECT query_id, n.vec_id AS neighbor_id, n.u,
-         |             ${d("qu", "n.u")} AS sim0
+         |             ${dSql("qu", "n.u")} AS sim0
          |           FROM n CROSS JOIN q WHERE n.vec_id <> q.query_id),
          |top5 AS (SELECT query_id, neighbor_id AS rel_id FROM (
          |           SELECT *, row_number() OVER (PARTITION BY query_id
@@ -2815,7 +2667,7 @@ object Similarity {
          |relv AS (SELECT t.query_id, n.u AS ru
          |         FROM top5 t JOIN n ON t.rel_id = n.vec_id),
          |boost AS (SELECT s.query_id, s.neighbor_id,
-         |            ${graft.Exprs.davgSql(s"${d("r.ru", "s.u")}", 6)} AS boost
+         |            ${graft.Exprs.davgSql(s"${dSql("r.ru", "s.u")}", 6)} AS boost
          |          FROM scored s JOIN relv r ON s.query_id = r.query_id
          |          GROUP BY s.query_id, s.neighbor_id),
          |re AS (SELECT s.query_id, s.neighbor_id,
@@ -2829,11 +2681,59 @@ object Similarity {
          |FROM rr LEFT JOIN top5 t
          |  ON rr.query_id = t.query_id AND rr.neighbor_id = t.rel_id
          |WHERE rr.rnk <= 5""".stripMargin
-    }
   )
 
   private def dSql(a: String, b: String) =
     s"list_sum(list_transform(list_zip($a, $b), p -> p[1]*p[2]))"
+
+  /** Oracle-side normalize CTE: `n.u = e.v / |e.v|`, the norm in the same
+    * sequential fold as every dot. Requires `e` in scope. */
+  private lazy val normSqlCte: String =
+    """n AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS u
+      |      FROM (SELECT vec_id, v,
+      |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t)""".stripMargin
+
+  /** The raw embeddings `e` and their normalized `n`. */
+  private lazy val embNormSqlCtes: String =
+    s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+       |$normSqlCte""".stripMargin
+
+  /** [[embNormSqlCtes]] with each vector's label carried through. */
+  private lazy val labelledNormSqlCtes: String =
+    """e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+      |n AS (SELECT vec_id, label, list_transform(v, x -> x / nrm) AS u
+      |      FROM (SELECT vec_id, label, v,
+      |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t)""".stripMargin
+
+  /** IVF coarse quantizer: vectors 100..107 seed the 8 centroids `cent`,
+    * and `asg` assigns each normalized vector to its max-dot centroid,
+    * tie-broken by id. Requires `n` in scope. */
+  private lazy val seedAssignSqlCtes: String =
+    s"""cent AS (SELECT vec_id - 100 AS cid, u AS cu FROM n WHERE vec_id BETWEEN 100 AND 107),
+       |asg AS (SELECT vec_id, u, cid FROM (
+       |    SELECT n.vec_id, n.u, cent.cid,
+       |      row_number() OVER (PARTITION BY n.vec_id
+       |        ORDER BY ${dSql("n.u", "cent.cu")} DESC, cent.cid) AS crk
+       |    FROM n CROSS JOIN cent) t WHERE crk = 1)""".stripMargin
+
+  /** The 2 nearest centroids of each query (vec_id < 5). Requires `n` and
+    * `cent` in scope. */
+  private lazy val probesSqlCte: String =
+    s"""probes AS (SELECT query_id, qu, cid FROM (
+       |    SELECT n.vec_id AS query_id, n.u AS qu, cent.cid,
+       |      row_number() OVER (PARTITION BY n.vec_id
+       |        ORDER BY ${dSql("n.u", "cent.cu")} DESC, cent.cid) AS crk
+       |    FROM n CROSS JOIN cent WHERE n.vec_id < 5) t WHERE crk <= 2)""".stripMargin
+
+  /** Each query's exact cosine top-5 `e5` (ties by id), the truth the
+    * recall oracles score against. Requires `e` in scope. */
+  private lazy val exactTop5SqlCtes: String =
+    s"""q1 AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
+       |p1 AS (SELECT query_id, vec_id AS neighbor_id, ${cosSql("qv", "v")} AS sim
+       |       FROM e CROSS JOIN q1 WHERE vec_id <> query_id),
+       |e5 AS (SELECT query_id, neighbor_id FROM (
+       |         SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
+       |         FROM p1) r WHERE rnk <= 5)""".stripMargin
 
   /** Oracle-side shortlist + exact-re-rank CTEs (s14/s16): ADC top-20 →
     * exact dot over the shared normalized vectors. Requires the ivfPq
@@ -2851,23 +2751,18 @@ object Similarity {
   /** Shared oracle-side embedding cluster CTEs (s6/s13/s15): normalize →
     * label-blocked cosine edges → undirected closure → recursive
     * reachability → min-id cluster label. Requires WITH RECURSIVE. */
-  private lazy val embClusterSqlCtes: String = {
-    val dotU = "list_sum(list_transform(list_zip(a.u, b.u), p -> p[1]*p[2]))"
-    s"""e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-       |n AS (SELECT vec_id, label, list_transform(v, x -> x / nrm) AS u
-       |      FROM (SELECT vec_id, label, v,
-       |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t),
+  private lazy val embClusterSqlCtes: String =
+    s"""$labelledNormSqlCtes,
        |edges AS (
        |  SELECT a.vec_id AS d1, b.vec_id AS d2
        |  FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
-       |  WHERE $dotU > 0.3),
+       |  WHERE ${dSql("a.u", "b.u")} > 0.3),
        |und AS (SELECT d1 AS a, d2 AS b FROM edges UNION SELECT d2, d1 FROM edges),
        |reach(v, r) AS (
        |  SELECT a, a FROM und
        |  UNION
        |  SELECT u2.a, r.r FROM und u2 JOIN reach r ON u2.b = r.v),
        |cl AS (SELECT v AS vec_id, min(r) AS cluster_id FROM reach GROUP BY v)""".stripMargin
-  }
 
   private lazy val pCols = (0 until 4).map(m =>
     s"max(CASE WHEN codes.m = $m THEN pdot END) AS p$m").mkString(",\n        ")
@@ -2875,10 +2770,7 @@ object Similarity {
   /** Shared oracle-side PQ base (s9/s10/s11/s12): subspace split → codebook
     * → L2-argmin codes → query LUT. */
   private lazy val pqBase: String =
-    s"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |n AS (SELECT vec_id, list_transform(v, x -> x / nrm) AS u
-       |      FROM (SELECT vec_id, v,
-       |              sqrt(list_sum(list_transform(v, p -> p*p))) AS nrm FROM e) t),
+    s"""$embNormSqlCtes,
        |sub AS (SELECT vec_id, m, list_slice(u, m*16+1, m*16+16) AS su
        |        FROM n CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS m) ms),
        |cent AS (SELECT vec_id - 100 AS cid, m, su AS cu

@@ -2052,15 +2052,12 @@ object TextOps {
     * streaming twin x37, so the selection law can never drift between
     * them. The cutoff prefilter is lossless (OperatorSpec pin), so the
     * ranked rows ≤ 50 equal the full rank both consumers gate on. */
-  private[graft] val weightedSampleSqlCtes: String = {
-    val hexToInt = (0 until 8).map { i =>
-      s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-    }.mkString(" + ")
+  private[graft] val weightedSampleSqlCtes: String =
     s"""base AS (SELECT doc_id, lang,
        |    least(64, 1 + (n_chars // 256)) AS w FROM documents),
        |rep AS (SELECT doc_id, lang, w,
        |          unnest(generate_series(0, w - 1)) AS j FROM base),
-       |keyed AS (SELECT doc_id, lang, w, min($hexToInt) AS hmin
+       |keyed AS (SELECT doc_id, lang, w, min(${graft.Exprs.hex8Sql("m")}) AS hmin
        |          FROM (SELECT doc_id, lang, w,
        |                  md5(CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR)) AS m
        |                FROM rep) t
@@ -2076,7 +2073,6 @@ object TextOps {
        |      ORDER BY hmin, doc_id) AS rk
        |  FROM keyed JOIN c2 ON keyed.lang = c2.lang
        |  WHERE hmin < cutoff)""".stripMargin
-  }
 
   val oracles: Map[String, String] = Map(
     "w1_wordcount" ->
@@ -2167,18 +2163,14 @@ object TextOps {
         |  FROM tf JOIN dft USING (term) CROSS JOIN n) t
         |WHERE rk <= 5""".stripMargin,
 
-    "t10_stratified_sample" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
+    "t10_stratified_sample" ->
       s"""SELECT doc_id, lang, source, bucket FROM (
          |  SELECT doc_id, lang, source,
-         |    ($hexToInt) % 100 AS bucket
+         |    (${graft.Exprs.hex8Sql("m")}) % 100 AS bucket
          |  FROM (SELECT doc_id, lang, source,
          |          md5(CAST(doc_id AS VARCHAR)) AS m FROM documents) t) u
          |WHERE bucket < CASE WHEN lang = 'en' THEN 75
-         |                    WHEN lang = 'zh' THEN 25 ELSE 50 END""".stripMargin
-    },
+         |                    WHEN lang = 'zh' THEN 25 ELSE 50 END""".stripMargin,
 
     "w3_bigram_lm" ->
       """WITH b AS (
@@ -2473,10 +2465,7 @@ object TextOps {
 
     // t16's weight CTEs × d25's fp window; every double op in the Spark
     // operand order
-    "t21_dedup_weighted_sample" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
+    "t21_dedup_weighted_sample" ->
       s"""WITH g AS (
          |  SELECT lang,
          |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS tokens
@@ -2488,7 +2477,7 @@ object TextOps {
          |          md5(lower(trim(regexp_replace(text, '[ \t\n\r\f]+', ' ', 'g'))))
          |        ) AS nc
          |      FROM documents),
-         |u AS (SELECT doc_id, ($hexToInt) AS uv
+         |u AS (SELECT doc_id, (${graft.Exprs.hex8Sql("m")}) AS uv
          |      FROM (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS m
          |            FROM documents) h)
          |SELECT f.doc_id, f.lang, CAST(nc AS BIGINT) AS n_copies_dup,
@@ -2501,8 +2490,7 @@ object TextOps {
          |WHERE CAST(floor(weight / nc) AS BIGINT) +
          |    (CASE WHEN CAST(uv AS DOUBLE) / 4294967296.0
          |               < weight / nc - floor(weight / nc)
-         |          THEN 1 ELSE 0 END) > 0""".stripMargin
-    },
+         |          THEN 1 ELSE 0 END) > 0""".stripMargin,
 
     // pair expansion over the vocabulary CTE, never the corpus
     "t19_bpe_pairs" ->
@@ -2694,17 +2682,14 @@ object TextOps {
 
     // t14's weight CTEs verbatim; the residue is t10's hex-to-long spelling
     // over the same md5(doc_id); every double op mirrors the Spark order
-    "t16_mixture_sample" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
+    "t16_mixture_sample" ->
       s"""WITH g AS (
          |  SELECT lang,
          |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS tokens
          |  FROM documents GROUP BY lang),
          |tot AS (SELECT CAST(sum(tokens) AS BIGINT) AS t, count(*) AS k FROM g),
          |w AS (SELECT lang, CAST(t AS DOUBLE) / (k * tokens) AS weight FROM g, tot),
-         |u AS (SELECT doc_id, lang, ($hexToInt) AS uv
+         |u AS (SELECT doc_id, lang, (${graft.Exprs.hex8Sql("m")}) AS uv
          |      FROM (SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS m
          |            FROM documents) h)
          |SELECT doc_id, u.lang, weight,
@@ -2714,8 +2699,7 @@ object TextOps {
          |FROM u JOIN w ON u.lang = w.lang
          |WHERE CAST(floor(weight) AS BIGINT) +
          |    (CASE WHEN CAST(uv AS DOUBLE) / 4294967296.0 < weight - floor(weight)
-         |          THEN 1 ELSE 0 END) > 0""".stripMargin
-    },
+         |          THEN 1 ELSE 0 END) > 0""".stripMargin,
 
     // head = top-16 by (cnt DESC, word) — the same total tiebreak; the
     // per-source rates are exact longs + one integer ppm floor
@@ -2815,11 +2799,8 @@ object TextOps {
 
     // the same 32-bit md5 hash (8-hex-digit chain), the same broadcast
     // cutoff arithmetic, the same (h, doc_id) rank
-    "t32_stratified_exact_sample" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
-      s"""WITH b AS (SELECT doc_id, lang, $hexToInt AS h
+    "t32_stratified_exact_sample" ->
+      s"""WITH b AS (SELECT doc_id, lang, ${graft.Exprs.hex8Sql("m")} AS h
          |           FROM (SELECT doc_id, lang,
          |                   md5(CAST(doc_id AS VARCHAR)) AS m
          |                 FROM documents) t),
@@ -2830,8 +2811,7 @@ object TextOps {
          |  SELECT b.lang, doc_id,
          |    row_number() OVER (PARTITION BY b.lang ORDER BY h, doc_id) AS rk
          |  FROM b JOIN cut ON b.lang = cut.lang WHERE h < cutoff) r
-         |WHERE rk <= 50""".stripMargin
-    },
+         |WHERE rk <= 50""".stripMargin,
 
     // the same salted md5-32 minimum per doc (8-hex-digit chain over
     // doc_id:j, j unnested from the same 0..w-1 series), the same

@@ -302,9 +302,9 @@ object StreamingSessionize {
     * overwrite; append mode delivers only the new rows → append), which
     * keeps the harness O(1) in driver memory even for x3's unbounded
     * append-mode join output — the scale path a production
-    * `writeStream.format("parquet")` job would take. The temp dir lives for
-    * the session (the returned frame lazily reads it) and is
-    * delete-on-exit.
+    * `writeStream.format("parquet")` job would take. The sink dir is
+    * `TempRoot.sinkDir(sinkName)`, one per name for the JVM (the returned
+    * frame lazily reads it), deleted at exit.
     *
     * The stream runs without Spark's per-session artifact isolation, so its
     * tasks load classes from the executor's default classloader and do not
@@ -342,7 +342,7 @@ object StreamingSessionize {
     // cache hits from the second run on. withConf restores the session conf
     // however the run ends: a failure in stream construction, analysis, or
     // start() must not leave the shared session pinned.
-    val out = Sink.dirFor(sinkName, clear = clearSink)
+    val out = graft.TempRoot.sinkDir(sinkName, clear = clearSink)
     GraftSession.withConf(spark, LocalFs.sessionBinding ++ Seq(
         "spark.sql.shuffle.partitions" -> "4",
         "spark.sql.artifact.isolation.enabled" -> "false"): _*) {
@@ -395,34 +395,6 @@ object StreamingSessionize {
       if (wrote) spark.read.schema(schema).parquet(out.getAbsolutePath)
       else spark.createDataFrame(new java.util.ArrayList[Row](), schema)
     }
-  }
-
-  /** ONE sink dir per query name, reused across invocations and cleared at
-    * the start of each run (ADVICE r4: fresh temp dirs accumulated over a
-    * long-lived session — a bench run is 1 warmup + N timed runs per
-    * streaming query). A previously returned frame for the same name is
-    * invalidated by the reuse; callers (Verify/Bench/tests) fully consume
-    * each result before re-running. Dirs are deleted RECURSIVELY by one
-    * shutdown hook — `File.deleteOnExit` only removes empty directories,
-    * which would leak every part file. */
-  private object Sink {
-    private val dirs = scala.collection.mutable.HashMap[String, java.io.File]()
-    private def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    sys.addShutdownHook {
-      dirs.synchronized(dirs.values.foreach(rm))
-    }
-    def dirFor(name: String, clear: Boolean = true): java.io.File =
-      dirs.synchronized {
-        val d = dirs.getOrElseUpdate(name,
-          Files.createTempDirectory(s"graft-stream-sink-$name-").toFile)
-        // clear=false is the resume path: a restarted query must append to
-        // the rows its pre-kill run already committed
-        if (clear) Option(d.listFiles()).foreach(_.foreach(rm))
-        d
-      }
   }
 
   type Q = (SparkSession, String) => DataFrame
@@ -1690,11 +1662,8 @@ object StreamingSessionize {
          |FROM ranked WHERE rk <= 50""".stripMargin,
 
     // q36's rank arithmetic over the replayed distinct-hash set
-    "x24_stream_kmv_users" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
-      s"""WITH h AS (SELECT DISTINCT event_type, $hexToInt AS hv
+    "x24_stream_kmv_users" ->
+      s"""WITH h AS (SELECT DISTINCT event_type, ${hex8Sql("m")} AS hv
          |           FROM (SELECT event_type,
          |                   md5(CAST(user_id AS VARCHAR)) AS m FROM events) t),
          |rk AS (SELECT event_type, hv,
@@ -1705,8 +1674,7 @@ object StreamingSessionize {
          |  CASE WHEN max(n_exact) >= 64
          |       THEN 63.0 * 4294967296.0 / CAST(max(CASE WHEN rn = 64 THEN hv END) AS DOUBLE)
          |       ELSE CAST(max(n_exact) AS DOUBLE) END AS est_users
-         |FROM rk GROUP BY event_type""".stripMargin
-    },
+         |FROM rk GROUP BY event_type""".stripMargin,
 
     // batch q65's lead() spelling restricted to holds whose successor the
     // final watermark (max event ms − 1 h) STRICTLY passed — the x25
@@ -1828,11 +1796,8 @@ object StreamingSessionize {
 
     // x24's rank arithmetic per (closed hour, type): distinct hashes
     // within the hour, emission cutoff as in x7/x19a
-    "x24a_kmv_append" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
-      s"""WITH hh AS (SELECT DISTINCT h, event_type, $hexToInt AS hv
+    "x24a_kmv_append" ->
+      s"""WITH hh AS (SELECT DISTINCT h, event_type, ${hex8Sql("m")} AS hv
          |            FROM (SELECT date_trunc('hour', ts) AS h, event_type,
          |                    md5(CAST(user_id AS VARCHAR)) AS m FROM events) t),
          |wm AS (SELECT max(epoch_ms(ts)) - 3600000 AS w FROM events),
@@ -1845,8 +1810,7 @@ object StreamingSessionize {
          |  CASE WHEN max(n_exact) >= 64
          |       THEN 63.0 * 4294967296.0 / CAST(max(CASE WHEN rn = 64 THEN hv END) AS DOUBLE)
          |       ELSE CAST(max(n_exact) AS DOUBLE) END AS est_users
-         |FROM rk GROUP BY 1, 2""".stripMargin
-    },
+         |FROM rk GROUP BY 1, 2""".stripMargin,
 
     // live = the full corpus on a finite replay; baseline and bins as in
     // q60's period-a side; bt joins LEFT with the full-live-share
@@ -1913,13 +1877,9 @@ object StreamingSessionize {
          |SELECT doc_id, chunk_id, tok_start, chunk_len, chunk_fp FROM ch""".stripMargin,
 
     // commutative sum: the replayed checksum equals the batch checksum
-    "x21_stream_checksum" -> {
-      val hexToInt = (0 until 8).map { i =>
-        s"(instr('0123456789abcdef', substr(m, ${i + 1}, 1)) - 1) * CAST(${1L << (4 * (7 - i))} AS BIGINT)"
-      }.mkString(" + ")
-      s"""SELECT count(*) AS n_rows, CAST(sum($hexToInt) AS BIGINT) AS checksum
-         |FROM (SELECT md5(CAST(event_id AS VARCHAR)) AS m FROM events) t""".stripMargin
-    },
+    "x21_stream_checksum" ->
+      s"""SELECT count(*) AS n_rows, CAST(sum(${hex8Sql("m")}) AS BIGINT) AS checksum
+         |FROM (SELECT md5(CAST(event_id AS VARCHAR)) AS m FROM events) t""".stripMargin,
 
     // 10-min slots nest exactly in hours (6 per hour); emission cutoff
     // as in x7 — an hour emits once the final watermark passes its end

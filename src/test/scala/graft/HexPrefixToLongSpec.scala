@@ -8,14 +8,10 @@ import graft.functions.HexPrefixToLong
 
 /** The native hex-prefix expression must agree exactly with (a) the JDK
   * parser on well-formed hex and (b) the instr/substr SQL chain it replaced
-  * (which the DuckDB oracle still uses) on ALL inputs, including the odd
-  * ones: non-hex bytes, uppercase, short strings. */
+  * — `Exprs.hex8Sql`, the very text every oracle sends DuckDB — on ALL
+  * inputs, including the odd ones: non-hex bytes, uppercase, short strings. */
 class HexPrefixToLongSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  private val chainSql = (0 until 8).map { i =>
-    s"CAST(instr('0123456789abcdef', substr(s, ${i + 1}, 1)) - 1 AS BIGINT) * ${1L << (4 * (7 - i))}"
-  }.mkString(" + ")
 
   test("agrees with Long.parseLong on md5 prefixes") {
     val rnd = new scala.util.Random(7)
@@ -33,7 +29,7 @@ class HexPrefixToLongSpec extends AnyFunSuite {
     val inputs = Seq("00000000", "ffffffff", "deadbeef", "DEADBEEF",
       "zz12xx34", "abc", "", "1234567890abcdef", "a-b_c d!")
     val df = inputs.toDF("s")
-      .select(col("s"), expr(chainSql).as("chain"),
+      .select(col("s"), expr(Exprs.hex8Sql("s")).as("chain"),
         HexPrefixToLong.hex8(col("s")).as("native"))
     df.collect().foreach { r =>
       assert(r.getLong(1) == r.getLong(2), s"diverges on '${r.getString(0)}'")

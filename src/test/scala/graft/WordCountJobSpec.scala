@@ -195,6 +195,17 @@ class WordCountJobSpec extends AnyFunSuite {
     }
   }
 
+  test("Config rejects a non-positive numReducer or chunkSize, naming the field and value") {
+    def cfg(r: Int, chunk: Int) = WordCountJob.Config(jobName = "t", numReducer = r,
+      delay = 0, inputPath = "in.txt", chunkSize = chunk, localityConfigPath = "none",
+      outputDir = "out")
+    for ((r, chunk, field, value) <- Seq((0, 2, "numReducer", 0), (-1, 2, "numReducer", -1),
+        (2, 0, "chunkSize", 0))) {
+      val msg = intercept[IllegalArgumentException](cfg(r, chunk)).getMessage
+      assert(msg.contains(field) && msg.endsWith(s"got $value"), msg)
+    }
+  }
+
   test("counts plans the native tokenizer: no regex split, no empty-string filter") {
     val physical = WordCountJob.counts(spark, writeInput(corpus).toString)
       .queryExecution.sparkPlan

@@ -110,19 +110,15 @@ object WordCountJob {
     * RDD path: chunk assembly is genuinely order-dependent imperative logic. */
   def fidelityCounts(spark: SparkSession, inputPath: String, chunkSize: Int): DataFrame = {
     import spark.implicits._
-    val allChunks = spark.sparkContext.textFile(inputPath)
+    val chunks = spark.sparkContext.textFile(inputPath)
       .zipWithIndex()
+      // quirk 2: at chunk_size 1 every chunk is one line, and the whole
+      // input collapses to the first (global line 0 IS the reference's
+      // surviving chunk vector)
+      .filter { case (_, i) => chunkSize > 1 || i == 0L }
       .map { case (line, i) => (i / chunkSize, (i, line)) }
       .groupByKey()
       .map { case (_, ls) => ls.toSeq.sortBy(_._1).map(_._2).mkString("") }
-    val chunks =
-      if (chunkSize == 1)
-        // quirk 2: the whole input collapses to the first line (each
-        // "chunk" above is one line, so keeping global line 0 IS the
-        // reference's surviving chunk vector)
-        spark.sparkContext.textFile(inputPath).zipWithIndex()
-          .filter(_._2 == 0L).map(_._1)
-      else allChunks
     chunks.flatMap { chunk =>
       val out = scala.collection.mutable.ArrayBuffer[String]()
       var from = 0

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{GraftCkpt, TempRoot}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -47,6 +47,13 @@ object TextOps {
       col("source"),
       size(split(col("text"), " ")).cast(LongType).as("n_tokens"),
       col("n_chars"))
+
+  /** t42/x34's encoding fixture: `text` with a decomposed " cafe"+U+0301
+    * suffix on every doc_id%13==5 (the corpus is ASCII, so already NFC) —
+    * the rule t42's oracle restates, shared by x34's stream. */
+  private[graft] def nfcInjectedText: Column =
+    when(col("doc_id") % 13 === 5, concat(col("text"), lit(" cafe\u0301")))
+      .otherwise(col("text"))
 
   /** The explicit ingestion contract for raw-crawl JSONL — schema-on-read
     * with a DECLARED schema, never inference (inference is a full extra
@@ -1624,9 +1631,7 @@ object TextOps {
     // already-NFC fast path returns the input zero-copy.
     "t42_unicode_audit" -> { (s, dir) =>
       val aug = docs(s, dir).select(col("doc_id"), col("source"),
-        when(col("doc_id") % 13 === 5,
-          concat(col("text"), lit(" cafe\u0301")))
-          .otherwise(col("text")).as("text"))
+        nfcInjectedText.as("text"))
       // one byte-compare per row, not one per aggregate term (the x34
       // re-measurement's discipline, shared with the streaming twin)
       aug.select(col("source"), col("doc_id"), col("text"),

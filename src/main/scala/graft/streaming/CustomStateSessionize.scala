@@ -81,18 +81,18 @@ object CustomStateSessionize {
       }
   }
 
-  /** Run over `dir`/events.parquet to completion; returns emitted sessions
-    * (an open session whose timeout the final watermark never passed stays
-    * in state, exactly as a live job would hold it). */
-  def runToCompletion(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame = {
-    import spark.implicits._
-    StreamingSessionize.runToCompletion(spark, dir, raw =>
-      sessions(
-        raw.withWatermark("ts", "1 hour")
-          .select(col("user_id"), col("ts"),
-            unix_millis(col("ts")).as("ms"), col("value"))
-          .as[Ev]).toDF(),
-      outputMode = "append", sinkName = "custom-state")
+  /** The watermarked raw-events → [[Ev]] projection both session APIs
+    * consume. */
+  private[streaming] def events(raw: DataFrame): Dataset[Ev] = {
+    import raw.sparkSession.implicits._
+    raw.withWatermark("ts", "1 hour")
+      .select(col("user_id"), col("ts"),
+        unix_millis(col("ts")).as("ms"), col("value"))
+      .as[Ev]
   }
+
+  /** The raw-events → emitted-sessions transform. An open session whose
+    * timeout the final watermark never passed stays in state, exactly as a
+    * live job would hold it. */
+  def transform(raw: DataFrame): DataFrame = sessions(events(raw)).toDF()
 }

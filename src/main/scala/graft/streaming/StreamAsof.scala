@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -103,7 +103,9 @@ object StreamAsof {
     * executed ones — the ledger's clock advances on the event types it
     * processes, and the oracle restates its cut over the same filtered
     * max. Dropped types could never anchor or satisfy a match, so
-    * buffering them would be pure state. */
+    * buffering them would be pure state. Purchases whose forward window
+    * the final watermark has not strictly passed stay pending, exactly as
+    * a live job would keep them — the oracle restates that cut. */
   def transform(raw: DataFrame): DataFrame = {
     import raw.sparkSession.implicits._
     matches(
@@ -113,19 +115,4 @@ object StreamAsof {
           unix_millis(col("ts")).as("ms"), col("event_id"), col("event_type"))
         .as[Obs]).toDF()
   }
-
-  /** Run over `dir`/events.parquet to completion; returns the emitted
-    * match ledger (purchases whose forward window the final watermark has
-    * not strictly passed stay pending, exactly as a live job would — the
-    * oracle restates that cut). */
-  def runToCompletion(spark: SparkSession, dir: String,
-      sinkName: String = "stream-asof",
-      sourceOptions: Map[String, String] = Map.empty,
-      sourceGlob: String = "events.parquet",
-      checkpointLoc: Option[String] = None,
-      clearSink: Boolean = true): DataFrame =
-    StreamingSessionize.runToCompletion(spark, dir, transform,
-      outputMode = "append", sinkName = sinkName,
-      sourceOptions = sourceOptions, sourceGlob = sourceGlob,
-      checkpointLoc = checkpointLoc, clearSink = clearSink)
 }

@@ -96,7 +96,8 @@ object StreamFunnel {
   }
 
   /** The DataFrame→DataFrame spelling of the whole pipeline (watermark +
-    * typed fold); [[runToCompletion]] runs it over a parquet dir. */
+    * typed fold). It emits the funnel row of every user the final
+    * watermark quiesced. */
   def transform(raw: DataFrame): DataFrame = {
     import raw.sparkSession.implicits._
     funnel(
@@ -105,11 +106,4 @@ object StreamFunnel {
           unix_millis(col("ts")).as("ms"), col("event_type"))
         .as[FEv]).toDF()
   }
-
-  /** Run over `dir`/events.parquet to completion; returns the funnel rows
-    * of every user the final watermark quiesced. */
-  def runToCompletion(spark: org.apache.spark.sql.SparkSession,
-      dir: String): DataFrame =
-    StreamingSessionize.runToCompletion(spark, dir, transform,
-      outputMode = "append", sinkName = "funnel")
 }

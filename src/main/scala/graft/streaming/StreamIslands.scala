@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -102,7 +102,9 @@ object StreamIslands {
       }
   }
 
-  /** The raw-events → island-ledger transform (watermark + typed state). */
+  /** The raw-events → island-ledger transform (watermark + typed state).
+    * The trailing island per type stays buffered at the final watermark,
+    * exactly as a live job would hold it. */
   def transform(raw: DataFrame): DataFrame = {
     import raw.sparkSession.implicits._
     islands(
@@ -113,11 +115,4 @@ object StreamIslands {
             .as("dur_us"))
         .as[Iv]).toDF()
   }
-
-  /** Run over `dir`/events.parquet to completion; returns the closed-island
-    * ledger (the trailing island per type stays buffered exactly as a live
-    * job would hold it). */
-  def runToCompletion(spark: SparkSession, dir: String): DataFrame =
-    StreamingSessionize.runToCompletion(spark, dir, transform,
-      outputMode = "append", sinkName = "stream-islands")
 }

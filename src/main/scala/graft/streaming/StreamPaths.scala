@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -104,7 +104,9 @@ object StreamPaths {
       }
   }
 
-  /** The raw-events → transition-ledger transform (watermark + state). */
+  /** The raw-events → transition-ledger transform (watermark + state).
+    * Pairs whose successor sits inside the final watermark delay stay
+    * buffered, exactly as a live job would hold them. */
   def transform(raw: DataFrame): DataFrame = {
     import raw.sparkSession.implicits._
     transitions(
@@ -113,11 +115,4 @@ object StreamPaths {
           unix_millis(col("ts")).as("ms"), col("event_id"), col("event_type"))
         .as[Obs]).toDF()
   }
-
-  /** Run over `dir`/events.parquet to completion; returns the emitted
-    * transition ledger (pairs whose successor sits inside the final
-    * watermark delay stay buffered, exactly as a live job would). */
-  def runToCompletion(spark: SparkSession, dir: String): DataFrame =
-    StreamingSessionize.runToCompletion(spark, dir, transform,
-      outputMode = "append", sinkName = "stream-paths")
 }

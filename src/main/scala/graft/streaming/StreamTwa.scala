@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -134,7 +134,9 @@ object StreamTwa {
       }
   }
 
-  /** The raw-events → hold-ledger transform (watermark + typed buffer). */
+  /** The raw-events → hold-ledger transform (watermark + typed buffer).
+    * Holds whose successor sits inside the final watermark delay stay
+    * buffered, exactly as a live job would hold them. */
   def transform(raw: DataFrame): DataFrame = {
     import raw.sparkSession.implicits._
     holds(
@@ -145,11 +147,4 @@ object StreamTwa {
             .as("value_micro"))
         .as[Obs]).toDF()
   }
-
-  /** Run over `dir`/events.parquet to completion; returns the emitted hold
-    * ledger (holds whose successor sits inside the final watermark delay
-    * stay buffered, exactly as a live job would hold them). */
-  def runToCompletion(spark: SparkSession, dir: String): DataFrame =
-    StreamingSessionize.runToCompletion(spark, dir, transform,
-      outputMode = "append", sinkName = "stream-twa")
 }

@@ -54,55 +54,27 @@ object StreamingSessionize {
     * same user in the preceding 30 minutes. Both sides are watermarked so
     * the join state (buffered views awaiting future clicks) is bounded —
     * the canonical two-stream join with a range condition. On a full replay
-    * the result equals the batch interval join, which is the oracle. */
-  def clickViewJoin(events: DataFrame): DataFrame = {
-    val views = events.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-        col("ts").as("v_ts"))
-      .withWatermark("v_ts", "1 hour")
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    clicks.join(views,
-        expr("c_user = v_user AND c_ts >= v_ts AND c_ts <= v_ts + INTERVAL 30 MINUTES"))
-      .select(col("click_id"), col("c_user").as("user_id"), col("view_id"),
-        (unix_millis(col("c_ts")) - unix_millis(col("v_ts"))).as("ms_gap"))
-  }
-
-  /** Stream-stream LEFT OUTER interval join — x3's join with the unmatched
-    * clicks kept. Outer results cannot stream eagerly: a click is only
-    * provably match-less once no future view can land in its 30-minute
-    * lookback, i.e. once the GLOBAL watermark (the min over both sides'
-    * watermark nodes — views and clicks track separate max event times)
-    * passes the click's timestamp; Spark then evicts the click's state and
-    * emits the null-extended row in a no-data microbatch. Clicks above the
-    * final watermark stay buffered forever on a finite replay — the oracle
-    * restates exactly that emission rule. */
-  def clickViewLeftJoin(events: DataFrame): DataFrame = {
-    val views = events.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-        col("ts").as("v_ts"))
-      .withWatermark("v_ts", "1 hour")
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    clicks.join(views,
-        expr("c_user = v_user AND c_ts >= v_ts AND c_ts <= v_ts + INTERVAL 30 MINUTES"),
-        "left_outer")
-      .select(col("click_id"), col("c_user").as("user_id"), col("view_id"),
-        (unix_millis(col("c_ts")) - unix_millis(col("v_ts"))).as("ms_gap"))
-  }
-
-  /** Stream-stream FULL OUTER interval join — x8 with the unmatched VIEWS
-    * also kept. Each side's null-extension has its own eviction clock: an
-    * unmatched click emits once the global watermark passes its timestamp
-    * (no future view can precede it — x8's rule); an unmatched view emits
-    * once the watermark passes `v_ts + 30 minutes` (no future click can
-    * land inside its forward match window). Both rules fall out of the
-    * join condition's bounds, and the oracle restates them verbatim. */
-  def clickViewFullJoin(events: DataFrame): DataFrame = {
+    * the inner join (x3) equals the batch interval join, which is the oracle.
+    *
+    * `how = "left_outer"` (x8) keeps the unmatched clicks. Outer results
+    * cannot stream eagerly: a click is only provably match-less once no
+    * future view can land in its 30-minute lookback, i.e. once the GLOBAL
+    * watermark (the min over both sides' watermark nodes — views and clicks
+    * track separate max event times) passes the click's timestamp; Spark
+    * then evicts the click's state and emits the null-extended row in a
+    * no-data microbatch. Clicks above the final watermark stay buffered
+    * forever on a finite replay — the oracle restates exactly that
+    * emission rule.
+    *
+    * `how = "full_outer"` (x13) also keeps the unmatched VIEWS. Each side's
+    * null-extension has its own eviction clock: an unmatched click emits
+    * once the global watermark passes its timestamp (x8's rule); an
+    * unmatched view emits once the watermark passes `v_ts + 30 minutes` (no
+    * future click can land inside its forward match window). Both rules
+    * fall out of the join condition's bounds, and the oracle restates them
+    * verbatim. `user_id` is the click's user, or the view's on a
+    * view-only row (inner and left-outer rows always carry a click). */
+  def clickViewJoin(how: String)(events: DataFrame): DataFrame = {
     val views = events.filter(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
         col("ts").as("v_ts"))
@@ -113,7 +85,7 @@ object StreamingSessionize {
       .withWatermark("c_ts", "1 hour")
     clicks.join(views,
         expr("c_user = v_user AND c_ts >= v_ts AND c_ts <= v_ts + INTERVAL 30 MINUTES"),
-        "full_outer")
+        how)
       .select(col("click_id"),
         coalesce(col("c_user"), col("v_user")).as("user_id"), col("view_id"),
         (unix_millis(col("c_ts")) - unix_millis(col("v_ts"))).as("ms_gap"))
@@ -306,6 +278,14 @@ object StreamingSessionize {
     * `TempRoot.sinkDir(sinkName)`, one per name for the JVM (the returned
     * frame lazily reads it), deleted at exit.
     *
+    * `checkpointLoc` is the KILL-AND-RESUME knob (StreamingRestartSpec): an
+    * explicit checkpoint makes a second invocation resume offsets, state and
+    * batch ids from the first instead of replaying. The sink follows the
+    * checkpoint: it keeps its rows exactly when the checkpoint's offset log
+    * already holds a batch (the fact Spark's restart reads), so a resumed
+    * run adds to the pre-kill rows and any other run starts from an empty
+    * sink rather than duplicating a stale one.
+    *
     * The stream runs without Spark's per-session artifact isolation, so its
     * tasks load classes from the executor's default classloader and do not
     * see jars or classes a caller added with `addArtifact` (graft adds
@@ -319,13 +299,7 @@ object StreamingSessionize {
       sourceSchema: StructType = rawSchema,
       sinkTransform: DataFrame => DataFrame = identity,
       tagBatchId: Boolean = false,
-      // checkpointLoc + clearSink=false are the KILL-AND-RESUME knobs
-      // (StreamingRestartSpec): an explicit checkpoint makes a second
-      // invocation resume offsets/state/batch-ids from the first instead
-      // of replaying, and the sink must then keep the first run's rows
-      checkpointLoc: Option[String] = None,
-      clearSink: Boolean = true): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      checkpointLoc: Option[String] = None): DataFrame = {
     // A streaming query fixes its state-store layout at start: with the
     // session's batch-oriented shuffle.partitions (one per core, see
     // GraftSession.builder) every microbatch pays that many state-store
@@ -342,8 +316,12 @@ object StreamingSessionize {
     // cache hits from the second run on. withConf restores the session conf
     // however the run ends: a failure in stream construction, analysis, or
     // start() must not leave the shared session pinned.
-    val out = graft.TempRoot.sinkDir(sinkName, clear = clearSink)
+    val resumes = checkpointLoc.exists(loc =>
+      Option(new java.io.File(loc, "offsets").list())
+        .exists(_.exists(_.forall(_.isDigit))))
+    val out = graft.TempRoot.sinkDir(sinkName, clear = !resumes)
     GraftSession.withConf(spark, LocalFs.sessionBinding ++ Seq(
+        "spark.sql.legacy.parquet.nanosAsLong" -> "true",
         "spark.sql.shuffle.partitions" -> "4",
         "spark.sql.artifact.isolation.enabled" -> "false"): _*) {
       // sourceOptions lets tests drive MULTI-microbatch replays
@@ -397,6 +375,17 @@ object StreamingSessionize {
     }
   }
 
+  /** An UPDATE-mode keyed sink's table: the latest upsert per `key`, by the
+    * `batch_id` a `tagBatchId` run stamps on every row (x14a, x31). Batch
+    * ids continue across a checkpoint resume, so a pre-kill upsert never
+    * outranks a later one. */
+  def latestUpserts(upserts: DataFrame, key: String): DataFrame = {
+    val latest = org.apache.spark.sql.expressions.Window
+      .partitionBy(key).orderBy(col("batch_id").desc)
+    upserts.withColumn("rn", row_number().over(latest))
+      .filter(col("rn") === 1).drop("rn")
+  }
+
   type Q = (SparkSession, String) => DataFrame
 
   val defs: Map[String, Q] = Map(
@@ -407,7 +396,8 @@ object StreamingSessionize {
       runToCompletion(s, dir, hourlyRollup, sinkName = "x2")
     },
     "x3_stream_interval_join" -> { (s, dir) =>
-      runToCompletion(s, dir, clickViewJoin, outputMode = "append", sinkName = "x3")
+      runToCompletion(s, dir, clickViewJoin("inner"), outputMode = "append",
+        sinkName = "x3")
     },
     "x4_stream_dedup" -> { (s, dir) =>
       runToCompletion(s, dir, streamDedup, outputMode = "append", sinkName = "x4")
@@ -423,17 +413,17 @@ object StreamingSessionize {
 
     // Left-outer stream-stream join: inner matches stream immediately;
     // null-extended rows emit on state eviction as the watermark passes
-    // each unmatched click (see clickViewLeftJoin).
+    // each unmatched click (see clickViewJoin).
     "x8_stream_left_join" -> { (s, dir) =>
-      runToCompletion(s, dir, clickViewLeftJoin, outputMode = "append",
+      runToCompletion(s, dir, clickViewJoin("left_outer"), outputMode = "append",
         sinkName = "x8")
     },
 
     // Full-outer stream-stream join: BOTH sides' unmatched rows surface,
     // each on its own watermark-driven eviction schedule (see
-    // clickViewFullJoin) — the remaining outer-join mode x3/x8 leave out.
+    // clickViewJoin) — the remaining outer-join mode x3/x8 leave out.
     "x13_stream_full_outer" -> { (s, dir) =>
-      runToCompletion(s, dir, clickViewFullJoin, outputMode = "append",
+      runToCompletion(s, dir, clickViewJoin("full_outer"), outputMode = "append",
         sinkName = "x13")
     },
 
@@ -463,7 +453,8 @@ object StreamingSessionize {
     // parity-tested (StreamingSpec, 1e-4) but excluded from the bit-exact
     // hash compare.
     "x6_stream_custom_state" -> { (s, dir) =>
-      CustomStateSessionize.runToCompletion(s, dir).drop("sum_value")
+      runToCompletion(s, dir, CustomStateSessionize.transform,
+        outputMode = "append", sinkName = "custom-state").drop("sum_value")
     },
 
     // The SAME sessionization on Spark 4's transformWithState API (typed
@@ -591,7 +582,8 @@ object StreamingSessionize {
     // custom state): the in-order fold reproduces the batch min-chaining,
     // rows emitted on 6 h-inactivity timeout — see streaming/StreamFunnel.
     "x11_stream_funnel" -> { (s, dir) =>
-      StreamFunnel.runToCompletion(s, dir)
+      runToCompletion(s, dir, StreamFunnel.transform, outputMode = "append",
+        sinkName = "funnel")
     },
 
     // Streaming incremental dedup — d18's admission check as the online job
@@ -653,14 +645,10 @@ object StreamingSessionize {
     // (StreamingSpec pins per-batch emissions == each slice's exact
     // vocabulary).
     "x14a_wordcount_update" -> { (s, dir) =>
-      val upserts = runToCompletion(s, dir, streamWordcount,
+      latestUpserts(runToCompletion(s, dir, streamWordcount,
         outputMode = "update", sinkName = "x14a",
         sourceGlob = "documents.parquet", sourceSchema = docSchema,
-        tagBatchId = true)
-      val latest = org.apache.spark.sql.expressions.Window
-        .partitionBy("word").orderBy(col("batch_id").desc)
-      upserts.withColumn("rn", row_number().over(latest))
-        .filter(col("rn") === 1)
+        tagBatchId = true), "word")
         .select("word", "cnt")
     },
 
@@ -810,7 +798,9 @@ object StreamingSessionize {
     // don't cover: reconstructing a total EVENT-TIME order (batch lead())
     // from unordered arrival via buffered custom state + event-time
     // timers. See StreamTwa.scala for the cut/timer mechanics.
-    "x25_stream_twa" -> { (s, dir) => StreamTwa.runToCompletion(s, dir) },
+    "x25_stream_twa" -> { (s, dir) =>
+      runToCompletion(s, dir, StreamTwa.transform, outputMode = "append",
+        sinkName = "stream-twa") },
 
     // x25's ledger with the per-type serial-state ceiling removed: the
     // corpus-scale stage keyed by (type, epoch-hour) — q65's batch
@@ -827,14 +817,16 @@ object StreamingSessionize {
     // x25's buffered-state + event-time-timer discipline on INTERVAL
     // state instead of a hold series. See StreamIslands.scala.
     "x27_stream_islands" -> { (s, dir) =>
-      StreamIslands.runToCompletion(s, dir) },
+      runToCompletion(s, dir, StreamIslands.transform, outputMode = "append",
+        sinkName = "stream-islands") },
 
     // SESSION-PATH ledger live — q70's within-session transitions as an
     // append stream (the matrix is a downstream rollup). StreamTwa's cut
     // mechanics keyed by user; a pair beyond the 30-min gap retires
     // silently (the session break). See StreamPaths.scala.
     "x28_stream_paths" -> { (s, dir) =>
-      StreamPaths.runToCompletion(s, dir) },
+      runToCompletion(s, dir, StreamPaths.transform, outputMode = "append",
+        sinkName = "stream-paths") },
 
     // NEAREST-AS-OF ledger live — q75's bidirectional ±30 min match as an
     // append stream: a purchase is decided only when the watermark
@@ -842,7 +834,8 @@ object StreamingSessionize {
     // x26 is stateless; 'nearest' genuinely waits on clicks still to
     // come). NULL-preserving like the batch twin. See StreamAsof.scala.
     "x30_stream_asof_nearest" -> { (s, dir) =>
-      StreamAsof.runToCompletion(s, dir) },
+      runToCompletion(s, dir, StreamAsof.transform, outputMode = "append",
+        sinkName = "stream-asof") },
 
     // CDC APPLY live — q77's last-writer-wins compaction as a maintained
     // UPDATE-mode table (x14a's pattern: per-trigger the stream emits
@@ -947,12 +940,9 @@ object StreamingSessionize {
     },
 
     "x31_stream_cdc_apply" -> { (s, dir) =>
-      val upserts = runToCompletion(s, dir, streamCdcApply,
-        outputMode = "update", sinkName = "x31", tagBatchId = true)
-      val latest = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("batch_id").desc)
-      upserts.withColumn("rn", row_number().over(latest))
-        .filter(col("rn") === 1 && col("last_type") =!= "error")
+      latestUpserts(runToCompletion(s, dir, streamCdcApply,
+        outputMode = "update", sinkName = "x31", tagBatchId = true), "user_id")
+        .filter(col("last_type") =!= "error")
         .select("user_id", "last_value", "last_ms", "n_changes")
     },
 
@@ -1169,17 +1159,14 @@ object StreamingSessionize {
     stage
   }
 
-  /** x34's staged corpus: the t42 injection (decomposed suffix on
-    * doc_id%13==5) materialized as a (doc_id, source, text) stream source
-    * — the same rule the shared oracle restates, keyed beside x32's stage
-    * so the two hostile-input streams never collide. */
+  /** x34's staged corpus: t42's injection (`TextOps.nfcInjectedText`)
+    * materialized as a (doc_id, source, text) stream source, keyed beside
+    * x32's stage so the two hostile-input streams never collide. */
   private def unicodeStage(s: SparkSession, dir: String): String = {
     val stage = graft.TempRoot.stageDir(dir, "x34")
     graft.sources.Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"),
-        when(col("doc_id") % 13 === 5,
-          concat(col("text"), lit(" cafe\u0301")))
-          .otherwise(col("text")).as("text"))
+        graft.operators.TextOps.nfcInjectedText.as("text"))
       .write.mode("overwrite").parquet(stage)
     stage
   }

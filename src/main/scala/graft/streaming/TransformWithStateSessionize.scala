@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor,
   TTLConfig, TimeMode, TimerValues, ValueState}
 
@@ -77,17 +76,11 @@ object TransformWithStateSessionize {
     * requires the RocksDB state store; pin it for this query and restore
     * the session's provider after (same discipline as the harness's
     * shuffle-partition pin). */
-  def runToCompletion(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  def runToCompletion(spark: SparkSession, dir: String): DataFrame =
     GraftSession.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      StreamingSessionize.runToCompletion(spark, dir, raw =>
-        sessions(
-          raw.withWatermark("ts", "1 hour")
-            .select(col("user_id"), col("ts"),
-              unix_millis(col("ts")).as("ms"), col("value"))
-            .as[Ev]).toDF(),
+      StreamingSessionize.runToCompletion(spark, dir,
+        raw => sessions(CustomStateSessionize.events(raw)).toDF(),
         outputMode = "append", sinkName = "tws")
     }
-  }
 }

@@ -21,7 +21,8 @@ import graft.streaming.{StreamAsof, StreamingSessionize}
   * Harness: 4 time-ordered slice files; phase 1 streams slices 0-1 with an
   * explicit checkpoint, then the query STOPS (the kill). Phase 2 drops
   * slices 2-3 into the watched dir and starts a NEW query on the same
-  * checkpoint and the same (uncleared) sink. The combined sink must equal
+  * checkpoint and the same sink, which the harness keeps because the
+  * checkpoint's offset log holds phase 1's batches. The combined sink must equal
   * the uninterrupted 4-slice run — and contain NO duplicates, which is the
   * resume-not-replay proof: a from-scratch restart would re-emit every
   * phase-1 row into the kept sink. */
@@ -70,20 +71,18 @@ class StreamingRestartSpec extends AnyFunSuite {
         if (r.isNullAt(2)) None else Some(r.getLong(2)),
         if (r.isNullAt(3)) None else Some(r.getLong(3))))
 
+    def run(sink: String, ckptLoc: Option[String]) =
+      decode(StreamingSessionize.runToCompletion(spark,
+        watched.getAbsolutePath, StreamAsof.transform, "append", sink, opts,
+        "events*.parquet", checkpointLoc = ckptLoc).collect())
+
     stage(watched, slices.take(2), 0)
-    val phase1 = decode(StreamAsof.runToCompletion(spark,
-      watched.getAbsolutePath, sinkName = "x30-restart", sourceOptions = opts,
-      sourceGlob = "events*.parquet", checkpointLoc = Some(ckpt)).collect())
+    val phase1 = run("x30-restart", Some(ckpt))
 
     stage(watched, slices.drop(2), 2)
-    val resumed = decode(StreamAsof.runToCompletion(spark,
-      watched.getAbsolutePath, sinkName = "x30-restart", sourceOptions = opts,
-      sourceGlob = "events*.parquet", checkpointLoc = Some(ckpt),
-      clearSink = false).collect())
+    val resumed = run("x30-restart", Some(ckpt))
 
-    val oneShot = decode(StreamAsof.runToCompletion(spark,
-      watched.getAbsolutePath, sinkName = "x30-oneshot-r", sourceOptions = opts,
-      sourceGlob = "events*.parquet").collect())
+    val oneShot = run("x30-oneshot-r", None)
 
     assert(phase1.nonEmpty && resumed.length > phase1.length,
       "test premise: decisions on both sides of the kill")
@@ -108,16 +107,16 @@ class StreamingRestartSpec extends AnyFunSuite {
     val watched = TestSpark.tempDir("graft-restart-x33").toFile
     val ckpt = TestSpark.tempDir("graft-ckpt-x33").toString
     val opts = Map("maxFilesPerTrigger" -> "1")
-    def run(clear: Boolean) =
+    def run() =
       StreamingSessionize.runToCompletion(spark, watched.getAbsolutePath,
         StreamingSessionize.streamDedupBounded(_), "append", "x33-restart",
-        opts, "events*.parquet", checkpointLoc = Some(ckpt), clearSink = clear)
+        opts, "events*.parquet", checkpointLoc = Some(ckpt))
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
 
     stage(watched, slices.take(2), 0)
-    val phase1 = run(clear = true)
+    val phase1 = run()
     stage(watched, slices.drop(2), 2)
-    val resumed = run(clear = false)
+    val resumed = run()
 
     val oneShot = StreamingSessionize.runToCompletion(spark,
       watched.getAbsolutePath, StreamingSessionize.streamDedupBounded(_),
@@ -148,17 +147,17 @@ class StreamingRestartSpec extends AnyFunSuite {
       (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getLong(2)),
         if (r.isNullAt(3)) None else Some(r.getLong(3))))
-    def run(sink: String, ckptLoc: Option[String], clear: Boolean) =
+    def run(sink: String, ckptLoc: Option[String]) =
       decode(StreamingSessionize.runToCompletion(spark,
-        watched.getAbsolutePath, StreamingSessionize.clickViewLeftJoin(_),
-        "append", sink, opts, "events*.parquet", checkpointLoc = ckptLoc,
-        clearSink = clear).collect())
+        watched.getAbsolutePath, StreamingSessionize.clickViewJoin("left_outer"),
+        "append", sink, opts, "events*.parquet", checkpointLoc = ckptLoc)
+        .collect())
 
     stage(watched, slices.take(2), 0)
-    val phase1 = run("x8-restart", Some(ckpt), clear = true)
+    val phase1 = run("x8-restart", Some(ckpt))
     stage(watched, slices.drop(2), 2)
-    val resumed = run("x8-restart", Some(ckpt), clear = false)
-    val oneShot = run("x8-oneshot-r", None, clear = true)
+    val resumed = run("x8-restart", Some(ckpt))
+    val oneShot = run("x8-oneshot-r", None)
 
     assert(phase1.nonEmpty && resumed.length > phase1.length,
       "test premise: join output on both sides of the kill")
@@ -186,17 +185,17 @@ class StreamingRestartSpec extends AnyFunSuite {
       (if (r.isNullAt(0)) None else Some(r.getLong(0)), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getLong(2)),
         if (r.isNullAt(3)) None else Some(r.getLong(3))))
-    def run(sink: String, ckptLoc: Option[String], clear: Boolean) =
+    def run(sink: String, ckptLoc: Option[String]) =
       decode(StreamingSessionize.runToCompletion(spark,
-        watched.getAbsolutePath, StreamingSessionize.clickViewFullJoin(_),
-        "append", sink, opts, "events*.parquet", checkpointLoc = ckptLoc,
-        clearSink = clear).collect())
+        watched.getAbsolutePath, StreamingSessionize.clickViewJoin("full_outer"),
+        "append", sink, opts, "events*.parquet", checkpointLoc = ckptLoc)
+        .collect())
 
     stage(watched, slices.take(2), 0)
-    val phase1 = run("x13-restart", Some(ckpt), clear = true)
+    val phase1 = run("x13-restart", Some(ckpt))
     stage(watched, slices.drop(2), 2)
-    val resumed = run("x13-restart", Some(ckpt), clear = false)
-    val oneShot = run("x13-oneshot-r", None, clear = true)
+    val resumed = run("x13-restart", Some(ckpt))
+    val oneShot = run("x13-oneshot-r", None)
 
     assert(phase1.nonEmpty && resumed.length > phase1.length,
       "test premise: join output on both sides of the kill")
@@ -216,29 +215,26 @@ class StreamingRestartSpec extends AnyFunSuite {
     val watched = TestSpark.tempDir("graft-restart-x31").toFile
     val ckpt = TestSpark.tempDir("graft-ckpt-x31").toString
     val opts = Map("maxFilesPerTrigger" -> "1")
-    def resolve(upserts: org.apache.spark.sql.DataFrame) = {
-      val latest = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("batch_id").desc)
-      upserts.withColumn("rn", row_number().over(latest))
-        .filter(col("rn") === 1 && col("last_type") =!= "error")
+    def resolve(upserts: org.apache.spark.sql.DataFrame) =
+      StreamingSessionize.latestUpserts(upserts, "user_id")
+        .filter(col("last_type") =!= "error")
         .collect()
         .map(r => (r.getLong(0), r.getDouble(2), r.getLong(3), r.getLong(4)))
-    }
-    def run(sink: String, ckptLoc: Option[String], clear: Boolean) =
+    def run(sink: String, ckptLoc: Option[String]) =
       StreamingSessionize.runToCompletion(spark, watched.getAbsolutePath,
         StreamingSessionize.streamCdcApply, "update", sink, opts,
-        "events*.parquet", tagBatchId = true, checkpointLoc = ckptLoc,
-        clearSink = clear)
+        "events*.parquet", tagBatchId = true, checkpointLoc = ckptLoc)
 
     stage(watched, slices.take(2), 0)
-    val phase1 = run("x31-restart", Some(ckpt), clear = true)
+    val phase1 = run("x31-restart", Some(ckpt))
     val phase1MaxBatch = phase1.agg(expr("max(batch_id)")).collect().head.getLong(0)
+    val phase1Rows = phase1.count()
 
     stage(watched, slices.drop(2), 2)
-    val resumedDf = run("x31-restart", Some(ckpt), clear = false)
+    val resumedDf = run("x31-restart", Some(ckpt))
     val resumed = resolve(resumedDf)
 
-    val oneShot = resolve(run("x31-oneshot-r", None, clear = true))
+    val oneShot = resolve(run("x31-oneshot-r", None))
 
     assert(resumed.nonEmpty, "test premise: some key survives compaction")
     // batch ids must CONTINUE across the restart — if they reset to 0 the
@@ -246,10 +242,36 @@ class StreamingRestartSpec extends AnyFunSuite {
     val resumedMaxBatch = resumedDf.agg(expr("max(batch_id)")).collect().head.getLong(0)
     assert(resumedMaxBatch > phase1MaxBatch,
       s"batch ids must continue from the checkpoint ($phase1MaxBatch -> $resumedMaxBatch)")
+    // the pre-kill upserts are still in the sink: at this scale every key
+    // that survives compaction is touched again after the kill, so the
+    // resolved table alone cannot tell a kept sink from a cleared one
+    assert(resumedDf.filter(col("batch_id") <= phase1MaxBatch).count() == phase1Rows,
+      "resume must preserve the pre-kill sink rows")
     // the resolved table equals the uninterrupted run's: per-key running
     // max and change COUNT both restored (a count that restarted from zero
     // would disagree on n_changes)
     assert(resumed.toSet == oneShot.toSet,
       "resumed CDC state diverges from the uninterrupted run")
+  }
+
+  test("a run on a new, empty checkpoint clears the stale sink of an earlier run") {
+    // The harness keeps a sink only when its checkpoint's offset log
+    // already holds a batch; the resumed runs above pin the keep side.
+    // This pins the clear side: the second run has nothing to resume, so
+    // its append-mode sink must not keep the first run's rows.
+    def run(ckptLoc: Option[String]) =
+      StreamingSessionize.runToCompletion(spark, dir,
+        StreamingSessionize.streamDedup(_), "append", "x4-fresh-ckpt",
+        checkpointLoc = ckptLoc)
+        .collect().map(r => (r.getLong(0), r.getString(1)))
+
+    val oneShot = run(None)
+    val fresh = run(Some(TestSpark.tempDir("graft-ckpt-fresh").toString))
+
+    assert(oneShot.nonEmpty, "test premise: the stream emits keys")
+    assert(fresh.length == fresh.distinct.length,
+      "a run with nothing to resume must not append to a stale sink")
+    assert(fresh.sorted.toSeq == oneShot.sorted.toSeq,
+      "a fresh-checkpoint run diverges from the one-shot run")
   }
 }

@@ -333,15 +333,13 @@ class StreamingSpec extends AnyFunSuite {
 
   test("x31 CDC state over 3 slices == one-shot replay (tombstones override across batches)") {
     val mb = timeSlicedDir(3)
-    import org.apache.spark.sql.functions.{col, row_number}
+    import org.apache.spark.sql.functions.col
     def run(d: String, sink: String, opts: Map[String, String], glob: String) = {
       val upserts = StreamingSessionize.runToCompletion(spark, d,
         StreamingSessionize.streamCdcApply, "update", sink, opts, glob,
         tagBatchId = true)
-      val latest = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy(col("batch_id").desc)
-      upserts.withColumn("rn", row_number().over(latest))
-        .filter(col("rn") === 1 && col("last_type") =!= "error")
+      StreamingSessionize.latestUpserts(upserts, "user_id")
+        .filter(col("last_type") =!= "error")
         .collect()
         .map(r => (r.getLong(0), r.getDouble(2), r.getLong(3), r.getLong(4)))
     }
@@ -856,7 +854,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("x11 emits one final row per quiesced user, matching q42's chaining") {
     import org.apache.spark.sql.functions._
-    val got = graft.streaming.StreamFunnel.runToCompletion(spark, dir).collect()
+    val got = StreamingSessionize.runToCompletion(spark, dir,
+        graft.streaming.StreamFunnel.transform, "append", "funnel").collect()
       .map(r => (r.getLong(0),
         Option(r.get(1)).map(_.asInstanceOf[Long]),
         Option(r.get(2)).map(_.asInstanceOf[Long]),
@@ -875,7 +874,8 @@ class StreamingSpec extends AnyFunSuite {
   test("flatMapGroupsWithState sessions agree with batch (closed sessions)") {
     val gapMs = CustomStateSessionize.defaultGapMs
     // emitted: (user, n, start, end) + raw double sum
-    val emitted = CustomStateSessionize.runToCompletion(spark, dir).collect()
+    val emitted = StreamingSessionize.runToCompletion(spark, dir,
+        CustomStateSessionize.transform, "append", "custom-state").collect()
       .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)),
         r.getDouble(4))).toMap
     // batch q16: user_id, session_id, n_events, start_ms, end_ms, sum_value
@@ -901,8 +901,8 @@ class StreamingSpec extends AnyFunSuite {
     // both APIs run the shared CustomStateSessionize.fold — emissions must
     // be identical row-for-row (timers replace setTimeoutTimestamp; RocksDB
     // replaces the HDFS-backed store; neither may change semantics)
-    val x6 = graft.streaming.CustomStateSessionize
-      .runToCompletion(spark, dir).collect()
+    val x6 = StreamingSessionize.runToCompletion(spark, dir,
+        CustomStateSessionize.transform, "append", "custom-state").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sorted.toSeq
     val x10 = graft.streaming.TransformWithStateSessionize
@@ -937,8 +937,8 @@ class StreamingSpec extends AnyFunSuite {
       StructField("value", DoubleType), StructField("props", StringType)))
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
       .write.mode("overwrite").parquet(s"$d/events.parquet")
-    val x6 = graft.streaming.CustomStateSessionize
-      .runToCompletion(spark, d).collect()
+    val x6 = StreamingSessionize.runToCompletion(spark, d,
+        CustomStateSessionize.transform, "append", "custom-state").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted.toSeq
     val x10 = graft.streaming.TransformWithStateSessionize
       .runToCompletion(spark, d).collect()
@@ -967,6 +967,23 @@ class StreamingSpec extends AnyFunSuite {
       assert(first.nonEmpty)
       assert(second == first)
       assert(spark.conf.get(key) == "true")
+    }
+  }
+
+  test("a stream run leaves the caller's conf as it found it") {
+    // the harness pins its stream conf through withConf, so a key the
+    // caller set reads back unchanged after the run, and the run's rows
+    // do not depend on it
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    def x1() = StreamingSessionize.defs("x1_stream_sessionize")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getDouble(4))).toSet
+    val outside = x1()
+    GraftSession.withConf(spark, key -> "false") {
+      val inside = x1()
+      assert(spark.conf.get(key) == "false", s"the stream run left $key changed")
+      assert(inside.nonEmpty)
+      assert(inside == outside)
     }
   }
 }
